@@ -25,8 +25,11 @@ from pyspark.sql.types import BooleanType, DoubleType, LongType
 from ..sketches import Sketch
 
 # worker-side cache: deserializing a blob per Arrow batch would dominate for
-# large filters; bytes hash is cached by CPython so the key is cheap.
-_SKETCH_CACHE: dict[tuple[int, int], Sketch] = {}
+# large filters. Keyed by the blob bytes themselves: a hash-only key would
+# hand a colliding same-length blob the wrong sketch; equal hashes fall back
+# to a byte compare. An entry holds the key blob AND the decoded sketch (a
+# copy of the payload), so it counts 2 × len(blob) against the byte cap.
+_SKETCH_CACHE: dict[bytes, Sketch] = {}
 _SKETCH_CACHE_BYTES = 0
 # per python worker; a 91 MB filter blob × 16 count-capped entries was a
 # potential 1.5 GB per worker × 32 workers — cap the BYTES, not the count
@@ -35,8 +38,7 @@ _SKETCH_CACHE_MAX_BYTES = 256 * 1024 * 1024
 
 def _cached_sketch(blob: bytes) -> Sketch:
     global _SKETCH_CACHE_BYTES
-    key = (len(blob), hash(blob))
-    sk = _SKETCH_CACHE.get(key)
+    sk = _SKETCH_CACHE.get(blob)
     if sk is None:
         # evict OLDEST-FIRST only until this blob fits (dict preserves
         # insertion order) — clearing everything would thrash when two
@@ -44,14 +46,14 @@ def _cached_sketch(blob: bytes) -> Sketch:
         # other live filter and every batch would re-pay its full decode
         while _SKETCH_CACHE and (
             len(_SKETCH_CACHE) >= 16
-            or _SKETCH_CACHE_BYTES + len(blob) > _SKETCH_CACHE_MAX_BYTES
+            or _SKETCH_CACHE_BYTES + 2 * len(blob) > _SKETCH_CACHE_MAX_BYTES
         ):
-            old_key = next(iter(_SKETCH_CACHE))
-            _SKETCH_CACHE.pop(old_key)
-            _SKETCH_CACHE_BYTES -= old_key[0]
+            old = next(iter(_SKETCH_CACHE))
+            _SKETCH_CACHE.pop(old)
+            _SKETCH_CACHE_BYTES -= 2 * len(old)
         sk = Sketch.from_bytes(blob)
-        _SKETCH_CACHE[key] = sk
-        _SKETCH_CACHE_BYTES += len(blob)
+        _SKETCH_CACHE[blob] = sk
+        _SKETCH_CACHE_BYTES += 2 * len(blob)
     return sk
 
 

@@ -27,8 +27,8 @@ from .checkpoint import (  # noqa: F401
     build_with_checkpoint,
     checkpoint_metrics,
     job_lineage,
-    list_input_files,
 )
+from .filetasks import list_input_files, plan_file_tasks  # noqa: F401
 from .grouped_hll import grouped_hll, grouped_hll_files  # noqa: F401
 from .window import running_distinct  # noqa: F401
 from .drift import ks_drift_report, share_drift_report  # noqa: F401

@@ -30,6 +30,7 @@ import pyarrow as pa
 from pyspark.sql import DataFrame, functions as F
 
 from ..sketches import Sketch, SketchSpec
+from .filetasks import list_input_files, plan_file_tasks
 
 PARTIAL_SCHEMA = "sketch binary, n bigint, overflow bigint, part_id bigint, secs double"
 _PARTIAL_ARROW = pa.schema(
@@ -469,11 +470,12 @@ def collect_sketches_multi(
 
 # ---------------------------------------------------------------------------
 # Python-native scan path: workers read parquet directly with pyarrow.
-# The JVM schedules FILE NAMES; column pages are decoded straight into the
-# numpy kernels with zero JVM→Python Arrow IPC — the measured bottleneck for
-# wide text columns (the JVM-scan path serializes every row across the
-# socket).  pyarrow.fs handles s3://... and hdfs://... in production; tasks
-# stay ordinary Spark tasks (locality/retry/speculation all apply).
+# The JVM schedules FILE GROUPS (operators.filetasks); column pages are
+# decoded straight into the numpy kernels with zero JVM→Python Arrow IPC —
+# the measured bottleneck for wide text columns (the JVM-scan path
+# serializes every row across the socket).  pyarrow.fs handles s3://... and
+# hdfs://... in production; tasks stay ordinary Spark tasks
+# (locality/retry/speculation all apply).
 # ---------------------------------------------------------------------------
 
 def build_partials_files_multi(
@@ -491,7 +493,7 @@ def build_partials_files_multi(
         ovs = dict.fromkeys(sks, 0)
         first = True
         for batch in batches:
-            for file_path in batch.column(0).to_pylist():
+            for file_path in batch.column(0).flatten().to_pylist():
                 # use_threads=False: 32 parallel workers must not each spin
                 # up an internal arrow thread pool (oversubscription)
                 table = pq.read_table(
@@ -531,17 +533,7 @@ def build_partials_files_multi(
             schema=_MULTI_ARROW,
         )
 
-    # explicit numSlices assignment: repartition(n) hash-collides n rows
-    # into ~0.63n partitions (stragglers get 2-3 files); parallelize slices
-    # round-robin exactly.  ~2 slices per core keeps every core busy while
-    # emitting ONE partial set per task (not per file) — fewer blobs to
-    # serialize/merge than one-task-per-file.
-    slices = min(len(files), max(64, spark.sparkContext.defaultParallelism * 2))
-    files_df = spark.createDataFrame(
-        spark.sparkContext.parallelize([(f,) for f in files], slices),
-        "file string",
-    )
-    return files_df.mapInArrow(fn, MULTI_SCHEMA)
+    return plan_file_tasks(spark, files).mapInArrow(fn, MULTI_SCHEMA)
 
 
 def collect_sketches_files(
@@ -550,10 +542,10 @@ def collect_sketches_files(
     targets: list[tuple[str, str, SketchSpec]],
     fanin: int = 64,
 ) -> dict[str, tuple[Sketch, int, int]]:
-    """File-granular multi-sketch build: list files → per-file partials read
-    with pyarrow in the workers → tree merge."""
-    from .checkpoint import list_input_files
-
+    """File-granular multi-sketch build: list files → one partial set per
+    planned task (files round-robin over one wave, see operators.filetasks)
+    read with pyarrow in the workers → driver fold, or a tree merge when
+    there are more tasks than ``fanin``."""
     files = list_input_files(spark, input_path)
     return _collect_multi(build_partials_files_multi(spark, files, targets), fanin, targets)
 

@@ -5,9 +5,10 @@ lineage + metrics".  Design (SURVEY.md §4.4):
 
 - the unit of work/recovery is the INPUT FILE (the natural unit at 100 TB —
   ~1 GB parquet files → ~100k independent tasks);
-- each task reads one file's needed column with pyarrow inside the Python
-  worker (column pruning intact: pyarrow reads only that column's pages),
-  builds a partial sketch, and emits a checkpoint row:
+- each task reads its planned group of files (operators.filetasks) with
+  pyarrow inside the Python worker (column pruning intact: pyarrow reads
+  only that column's pages), builds one partial sketch per file, and emits
+  one checkpoint row per file:
       (file, lineage, sketch, n, overflow, secs, bytes)
   where lineage = sha256(sketch spec + column + format version) — a restart
   with a different spec never reuses stale partials;
@@ -24,8 +25,6 @@ from __future__ import annotations
 
 import hashlib
 import json
-import math
-import os
 import time
 from collections.abc import Iterator
 from dataclasses import dataclass
@@ -36,6 +35,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..sketches import Sketch, SketchSpec
 from .build import _bind_funnel, _ingest_overflow, fold_sketch_rows
+from .filetasks import list_input_files, plan_file_tasks
 
 CHECKPOINT_SCHEMA = (
     "file string, lineage string, sketch binary, n bigint, overflow bigint, "
@@ -52,29 +52,12 @@ def job_lineage(spec: SketchSpec, col: str) -> str:
     return hashlib.sha256(payload.encode()).hexdigest()[:32]
 
 
-def list_input_files(spark: SparkSession, input_path: str) -> list[str]:
-    """Parquet part files of a table path (local fs or anything Hadoop can
-    list — uses the JVM FileSystem so it works on HDFS/S3 in production)."""
-    jvm = spark.sparkContext._jvm
-    conf = spark.sparkContext._jsc.hadoopConfiguration()
-    path = jvm.org.apache.hadoop.fs.Path(input_path)
-    fs = path.getFileSystem(conf)
-    out = []
-    for status in fs.listStatus(path):
-        p = status.getPath().toString()
-        if p.endswith(".parquet"):
-            out.append(p)
-    if not out and input_path.endswith(".parquet"):
-        out = [input_path]
-    return sorted(out)
-
-
 def _build_file_fn(col: str, spec: SketchSpec, lineage: str):
     def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         import pyarrow.parquet as pq
 
         for batch in batches:
-            for file_path in batch.column(0).to_pylist():
+            for file_path in batch.column(0).flatten().to_pylist():
                 t0 = time.monotonic()
                 local = file_path.removeprefix("file:")
                 table = pq.read_table(local, columns=[col], use_threads=False)
@@ -206,12 +189,8 @@ def build_with_checkpoint(
         }
         todo = [f for f in files if f in todo_set]  # keep input order
     for i in range(0, len(todo), wave_size):
-        wave = todo[i : i + wave_size]
-        wave_df = spark.createDataFrame(
-            spark.sparkContext.parallelize([(f,) for f in wave], len(wave)),
-            "file string",
-        )
-        partials = wave_df.mapInArrow(_build_file_fn(col, spec, lineage), CHECKPOINT_SCHEMA)
+        wave = plan_file_tasks(spark, todo[i : i + wave_size])
+        partials = wave.mapInArrow(_build_file_fn(col, spec, lineage), CHECKPOINT_SCHEMA)
         partials.write.mode("append").parquet(checkpoint_dir)
 
     # Distributed resume merge: the driver never touches per-file blobs.
@@ -245,14 +224,11 @@ def build_with_checkpoint(
         bad = sorted(r.file for r in reduced.filter(~F.col("ok")).collect())
         partials = reduced.filter(F.col("ok")).select("sketch", "n", "overflow")
         if bad:
-            wave_df = spark.createDataFrame(
-                spark.sparkContext.parallelize([(f,) for f in bad], len(bad)),
-                "file string",
-            )
-            wave_df.mapInArrow(
+            tasks = plan_file_tasks(spark, bad)
+            tasks.mapInArrow(
                 _build_file_fn(col, spec, lineage), CHECKPOINT_SCHEMA
             ).write.mode("append").parquet(checkpoint_dir)
-            healed = _reduced(wave_df).persist()
+            healed = _reduced(tasks.select(F.explode("files").alias("file"))).persist()
             still_bad = [r.file for r in healed.filter(~F.col("ok")).collect()]
             if still_bad:
                 raise ValueError(f"checkpoint heal failed for {still_bad[:3]}")

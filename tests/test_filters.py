@@ -324,3 +324,31 @@ def test_sort_dedup_key_hash_empty_input():
         np.zeros(0, dtype=np.int64), np.zeros(0, dtype=np.uint64)
     )
     assert len(idx) == len(sc) == len(sh) == len(cnt) == 0
+
+
+def test_sketch_cache_keys_by_blob_bytes_not_hash():
+    """Two distinct same-length blobs whose hashes collide must decode to
+    their own filters, not share one cache entry."""
+    import pyarrow as pa
+
+    from guava_probably_spark import functions as gf
+
+    class Colliding(bytes):
+        def __hash__(self):
+            return 7
+
+    blobs = []
+    for member in ("alpha", "omega"):
+        sk = BloomSketch(1000, 0.01)
+        sk.update(pa.array([member]))
+        blobs.append(Colliding(sk.to_bytes()))
+    assert len(blobs[0]) == len(blobs[1]) and blobs[0] != blobs[1]
+    gf._SKETCH_CACHE.clear()
+    gf._SKETCH_CACHE_BYTES = 0
+    try:
+        for blob, member in zip(blobs, ("alpha", "omega")):
+            assert gf._cached_sketch(blob).might_contain(member)
+        assert gf._SKETCH_CACHE_BYTES == 2 * sum(map(len, blobs))
+    finally:
+        gf._SKETCH_CACHE.clear()
+        gf._SKETCH_CACHE_BYTES = 0
