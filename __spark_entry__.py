@@ -620,7 +620,7 @@ def _q_grouped_hll_highcard(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Vectorized high-cardinality grouped HLL (operators.grouped_hll): one
     sketch per l_partkey (~20k groups at sf0.01), all estimates within
     bound vs exact distinct l_orderkey per part — through BOTH hash paths:
-    'murmur' (Python murmur3 pre-shuffle) and 'prehash' (JVM-side xxhash64,
+    'murmur' (Python murmur3 after the key exchange) and 'prehash' (JVM-side xxhash64,
     the wide-value fast path; FUNNEL_PREHASHED register domain, same
     1.04/√m bound)."""
     from guava_probably_spark.operators import grouped_hll

@@ -39,6 +39,27 @@ def funnel_for_arrow_type(t: pa.DataType) -> int:
     return FUNNEL_LONG if pa.types.is_integer(t) else FUNNEL_UTF8
 
 
+def repartition_by_key(df, partitions: int | None):
+    """The one reduce-partition rule of the grouped builds: co-locate each
+    key ``k`` in ``partitions`` partitions when the caller asks for a
+    count, else in ``spark.sql.shuffle.partitions`` (which AQE may
+    coalesce when enabled). A fixed ``defaultParallelism * 2`` used to
+    run two waves of Python tasks on every grouped build."""
+    return df.repartition(partitions, "k") if partitions else df.repartition("k")
+
+
+def chain(*stages):
+    """Compose per-partition Arrow stages into one ``mapInArrow`` function,
+    so e.g. hashing and the grouped build run in the same Python task."""
+
+    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for stage in stages:
+            batches = stage(batches)
+        return batches
+
+    return fn
+
+
 def encode_keys(keys: pa.Array) -> tuple[pa.Array, np.ndarray]:
     """Dictionary-encode group keys with NULL as its own group (SQL GROUP BY
     semantics). Without this, a null key's null dictionary index round-trips

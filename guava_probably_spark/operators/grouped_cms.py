@@ -1,21 +1,27 @@
 """High-cardinality grouped Count-Min: one frequency sketch per key,
 vectorized across ALL keys in a partition (the frequency sibling of
-operators/grouped_hll.py — same narrow shuffle, one scatter pass).
+operators/grouped_hll.py — same one-stage plan, one scatter pass).
 
 Why: `build_grouped` with a CMS spec pays ~1 ms of applyInPandas Python per
 group — wrong at 10^6+ keys. CMS counts are additive, so every group in a
 partition can be updated simultaneously:
 
-  1. mapInArrow: murmur3-hash the value column → (key, h1, h2[, c]) — the
-     shuffle carries 16 bytes + key instead of the raw value. With
-     ``pre_reduce`` (default) duplicate (key, value) rows collapse map-side
-     into a count, so a hot key ships its DISTINCT values per partition,
-     not its row set.
-  2. repartition(key): the one unavoidable shuffle, at minimum width.
-  3. mapInArrow: dictionary-encode keys → codes; bucket index per depth is
+  1. project (key, value) in the JVM; by default one sampled skew probe
+     (grouped_kll._skew_probe, threshold 4096 rows per input partition, as
+     grouped_mode) decides whether any key is hot;
+  2. repartition(key): the one unavoidable shuffle, into
+     ``spark.sql.shuffle.partitions`` partitions unless ``partitions`` is
+     given (_arrow_common.repartition_by_key);
+  3. ONE mapInArrow per partition: murmur3-hash the values → (h1, h2),
+     dictionary-encode keys → codes; bucket index per depth is
      ((h1 + i·h2) & SIGN) mod w (identical arithmetic to
-     sketches/cms.py:_buckets); ONE np.bincount over the flattened
-     (code, depth, bucket) index updates every group's d×w matrix at once.
+     sketches/cms.py:_buckets); ONE np.bincount per depth over the
+     flattened (code, bucket) index updates every group's d×w matrix.
+
+With a hot key (or ``pre_reduce=True``) a map-side stage hashes first and
+collapses duplicate (key, value) rows into a count, so a hot key ships its
+DISTINCT values per input partition, not its row set. Without one, the
+exchange carries every (key, value) row once — no Python runs before it.
 
 Blobs are byte-identical to a local ``CmsSketch.to_bytes()`` of the same
 group (counts are order-independent), including the zlib rule above
@@ -37,10 +43,11 @@ from collections.abc import Iterator
 import numpy as np
 import pyarrow as pa
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, functions as F
 
 from ..sketches.base import KIND_CMS, MAGIC, VERSION, Sketch
 from ..sketches.cms import _SIGN_MASK, cms_geometry
+from ._arrow_common import chain, funnel_for_spark_type, repartition_by_key
 
 _HASH2_SCHEMA_SUFFIX = "h1 bigint, h2 bigint, c bigint"
 
@@ -217,7 +224,7 @@ def grouped_cms(
     epsilon: float = 0.005,
     delta: float = 0.01,
     partitions: int | None = None,
-    pre_reduce: bool | None = None,
+    pre_reduce: bool | str | None = "auto",
     max_matrix_bytes: int = 1 << 31,
     assume_colocated: bool = False,
     prehash: bool = False,
@@ -225,12 +232,16 @@ def grouped_cms(
     """Per-key CmsSketch at high key cardinality → (key, sketch, n) with
     blobs byte-identical to a local ``CmsSketch`` build of the same group.
 
-    ``pre_reduce`` (default when ``prehash`` is off) collapses duplicate
-    (key, value) rows map-side into weighted updates, so the shuffle is
-    bounded by the per-partition DISTINCT values of each key rather than
-    its row count. ``assume_colocated=True`` skips the repartition —
-    correct when the input is already partitioned by ``key`` (bucketed
-    read, upstream repartition); the grouped build then has ZERO shuffle.
+    ``pre_reduce=True`` collapses duplicate (key, value) rows map-side into
+    weighted updates, so the shuffle is bounded by the per-partition
+    DISTINCT values of each key rather than its row count. The default
+    ``"auto"`` (``None`` means the same) runs grouped_kll's memoized
+    sampled skew probe with a 4096-row threshold and takes that combine
+    only when some key is hot; otherwise hashing and the build share one
+    Python stage after the exchange. Blobs are byte-identical either way.
+    ``assume_colocated=True`` skips the repartition — correct when the
+    input is already partitioned by ``key`` (bucketed read, upstream
+    repartition); the grouped build then has ZERO shuffle.
 
     ``prehash=True`` hashes the value column JVM-SIDE with ``xxhash64`` —
     no Python stage before the shuffle, and a wide value column never
@@ -241,38 +252,37 @@ def grouped_cms(
     murmur3-funnel blobs (different bucket domains); probe them with
     hashes, e.g. ``sk.estimate(xxhash64-values)`` or SQL
     ``cms_freq(sketch, xxhash64(item))``. Nulls are dropped JVM-side.
-    Mutually exclusive with ``pre_reduce=True``."""
+    Under prehash ``"auto"`` resolves to False; ``pre_reduce=True``
+    raises."""
 
-    dt = df.schema[col].dataType
-    from ._arrow_common import funnel_for_spark_type
+    key_type = df.schema[key].dataType.simpleString()
+    narrow = df.select(F.col(key).alias("k"), F.col(col).alias("v"))
+    if pre_reduce in (None, "auto"):
+        from .grouped_kll import _skew_probe
 
+        pre_reduce = not (prehash or assume_colocated) and _skew_probe(narrow, 4096)
     if prehash and pre_reduce:
         raise ValueError("prehash and pre_reduce are mutually exclusive")
-    if pre_reduce is None:
-        pre_reduce = not prehash
-    key_type = df.schema[key].dataType.simpleString()
-    parts = partitions or df.sparkSession.sparkContext.defaultParallelism * 2
+    funnel = funnel_for_spark_type(df.schema[col].dataType)
     if prehash:
-        from pyspark.sql import functions as F
-
         from ..sketches.base import FUNNEL_PREHASHED
 
-        hashed = (
+        rows = (
             df.where(F.col(col).isNotNull())
             .select(F.col(key).alias("k"), F.xxhash64(col).alias("h1"))
         )
-        colocated = hashed if assume_colocated else hashed.repartition(parts, "k")
-        return colocated.mapInArrow(
-            _build_stage(
-                epsilon, delta, FUNNEL_PREHASHED, max_matrix_bytes, prehashed=True
-            ),
-            f"key {key_type}, sketch binary, n bigint",
+        build = _build_stage(
+            epsilon, delta, FUNNEL_PREHASHED, max_matrix_bytes, prehashed=True
         )
-    funnel = funnel_for_spark_type(dt)
-    stage = _hash2_prereduce_stage(1) if pre_reduce else _hash2_stage(1)
-    hashed = df.select(key, col).mapInArrow(stage, f"k {key_type}, {_HASH2_SCHEMA_SUFFIX}")
-    colocated = hashed if assume_colocated else hashed.repartition(parts, "k")
-    return colocated.mapInArrow(
-        _build_stage(epsilon, delta, funnel, max_matrix_bytes),
-        f"key {key_type}, sketch binary, n bigint",
-    )
+    elif pre_reduce:
+        rows = narrow.mapInArrow(
+            _hash2_prereduce_stage(1), f"k {key_type}, {_HASH2_SCHEMA_SUFFIX}"
+        )
+        build = _build_stage(epsilon, delta, funnel, max_matrix_bytes)
+    else:
+        rows = narrow
+        build = chain(
+            _hash2_stage(1), _build_stage(epsilon, delta, funnel, max_matrix_bytes)
+        )
+    colocated = rows if assume_colocated else repartition_by_key(rows, partitions)
+    return colocated.mapInArrow(build, f"key {key_type}, sketch binary, n bigint")

@@ -2,26 +2,34 @@
 
 The north-star grouped query is per-conv_id distinct counts with ~10^8
 conv_ids (BASELINE.json).  ``applyInPandas`` costs ~1 ms of Python per group
-— 10^8 groups is a day of pure overhead.  This operator instead:
+— 10^8 groups is a day of pure overhead.  This operator instead runs one
+Python stage after one key exchange (the plan grouped_kll, grouped_cms and
+grouped_theta share):
 
-  1. mapInArrow: murmur3-hash the value column → rows (key, h1:uint64) —
-     narrow, no shuffle yet; the shuffle payload drops from the raw value
-     (e.g. ~230-byte text) to 8 bytes + key;
-  2. repartition(key): every key's rows land in exactly one partition
-     (standard hash partitioning — the one unavoidable shuffle of any
-     grouped aggregate, here at minimum width);
-  3. mapInArrow: per partition, np.unique(keys) → code per row; ONE
-     ``np.maximum.at`` scatter into a (n_keys × m) register matrix updates
-     every group simultaneously; registers are 6-bit-packed row-wise and
-     emitted as standard HllSketch blobs (byte-compatible with the ungrouped
-     build — merging all group blobs reproduces the global blob exactly).
+  1. project (key, value) in the JVM; by default one sampled skew probe
+     (grouped_kll._skew_probe, threshold 2^p rows per input partition)
+     decides whether any key is hot;
+  2. repartition(key): every key's rows land in exactly one partition, in
+     ``spark.sql.shuffle.partitions`` partitions unless ``partitions`` is
+     given (_arrow_common.repartition_by_key);
+  3. ONE mapInArrow per partition: murmur3-hash the values, np.unique(keys)
+     → code per row, ONE ``np.maximum.at`` scatter into a (n_keys × m)
+     register matrix that updates every group at once; registers are
+     6-bit-packed row-wise and emitted as standard HllSketch blobs
+     (byte-compatible with the ungrouped build — merging all group blobs
+     reproduces the global blob exactly).
+
+The trade: the exchange carries the raw value (e.g. ~230-byte turn text)
+instead of an 8-byte hash — 2.3 MB against 0.4 MB of shuffle writes on the
+25k-turn benchmark — to save a whole Python stage and an Arrow round trip
+of every row. Shuffle-bound callers pass ``pre_reduce=True`` (a map-side
+register combine: ≤ m + 1 rows per key and input partition) or
+``prehash=True`` (JVM xxhash64, 8 bytes per row and no Python before the
+exchange). When the probe finds a hot key, ``pre_reduce`` engages by
+itself.
 
 Output: (key, sketch binary, n bigint) or (key, estimate double, n bigint)
 with the estimator evaluated vectorized across the whole key matrix.
-
-Skew note: a single pathological key (10^9+ rows) serializes into one
-partition, but post-hash work is one vectorized max-scatter — DRAM-speed.
-The raw-value shuffle that usually makes skew fatal is already avoided.
 """
 
 from __future__ import annotations
@@ -32,10 +40,11 @@ from collections.abc import Iterator
 import numpy as np
 import pyarrow as pa
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, functions as F
 
 from ..sketches.base import MAGIC, VERSION, KIND_HLL
 from ..sketches.hll import _alpha, _leading_zero_rho
+from ._arrow_common import chain, funnel_for_spark_type, repartition_by_key
 
 
 def _hash_stage(col_idx: int):
@@ -252,13 +261,13 @@ def _build_stage(p: int, output: str, funnel: int = 1):
             h_parts.append(batch.column(1).to_numpy(zero_copy_only=False))
         if not keys_parts:
             return
-        keys = pa.concat_arrays([pa.array(kp.to_pylist(), type=keys_parts[0].type) if isinstance(kp, pa.ChunkedArray) else kp for kp in keys_parts])
+        keys = pa.chunked_array(keys_parts).combine_chunks()
         h1 = np.concatenate(h_parts).view(np.uint64)
 
         # factorize keys (arrow dictionary_encode: C++-speed grouping)
         from ._arrow_common import encode_keys
 
-        uniq, codes = encode_keys(pa.chunked_array([keys]).combine_chunks())
+        uniq, codes = encode_keys(keys)
         k = len(uniq)
 
         shift = np.uint64(64 - p)
@@ -352,8 +361,7 @@ def grouped_hll_files(
     hashed = plan_file_tasks(spark, files).mapInArrow(
         _hash_stage_files(key, col), f"k {key_type}, h bigint"
     )
-    parts = partitions or spark.sparkContext.defaultParallelism * 2
-    colocated = hashed.repartition(parts, "k")
+    colocated = repartition_by_key(hashed, partitions)
     if output == "estimate":
         schema = f"key {key_type}, estimate double, n bigint"
     else:
@@ -370,7 +378,7 @@ def grouped_hll(
     p: int = 14,
     output: str = "sketch",
     partitions: int | None = None,
-    pre_reduce: bool = False,
+    pre_reduce: bool | str = "auto",
     assume_colocated: bool = False,
     prehash: bool = False,
 ) -> DataFrame:
@@ -382,6 +390,12 @@ def grouped_hll(
     shuffle carries ≤ m register rows + 1 count row per (key, input
     partition) instead of one row per input row — the skew/duplicate
     armor (a 10^9-row hot key ships ≤ 2^p rows per source partition).
+    The default "auto" runs grouped_kll's memoized sampled skew probe with
+    a 2^p-row threshold and takes the armor only when some key is hot;
+    otherwise hashing and the build share one Python stage after the
+    exchange. False forces the one-stage plan. Blobs are byte-identical
+    either way. NOTE: "auto" runs one eager sampled job over the input
+    lineage at plan-construction time.
     assume_colocated=True skips the repartition entirely — correct when the
     input is already partitioned by `key` (bucketed table read, upstream
     repartition); the grouped build then has ZERO shuffle.
@@ -396,40 +410,37 @@ def grouped_hll(
     FUNNEL_PREHASHED tag and refuse to merge with murmur3-funnel blobs of
     the same column — the register domains differ. Null values are dropped
     first (Spark's xxhash64 maps NULL to the seed, which would count nulls
-    as one distinct value). Mutually exclusive with pre_reduce (whose
-    map-side combine hashes in Python)."""
+    as one distinct value). Under prehash "auto" resolves to False;
+    pre_reduce=True (whose map-side combine hashes in Python) raises."""
     if output not in ("sketch", "estimate"):
         raise ValueError("output must be 'sketch' or 'estimate'")
-    if prehash and pre_reduce:
-        raise ValueError("prehash and pre_reduce are mutually exclusive")
-    from ._arrow_common import funnel_for_spark_type
-
     key_type = df.schema[key].dataType.simpleString()
     funnel = funnel_for_spark_type(df.schema[col].dataType)
-    parts = partitions or df.sparkSession.sparkContext.defaultParallelism * 2
-    narrow = df.select(key, col)
-    if prehash:
-        from pyspark.sql import functions as F
+    narrow = df.select(F.col(key).alias("k"), F.col(col).alias("v"))
+    if pre_reduce == "auto":
+        from .grouped_kll import _skew_probe
 
+        pre_reduce = not (prehash or assume_colocated) and _skew_probe(narrow, 1 << p)
+    if prehash and pre_reduce:
+        raise ValueError("prehash and pre_reduce are mutually exclusive")
+    if prehash:
         from ..sketches.base import FUNNEL_PREHASHED
 
         funnel = FUNNEL_PREHASHED
-        hashed = (
+        rows = (
             df.where(F.col(col).isNotNull())
             .select(F.col(key).alias("k"), F.xxhash64(col).alias("h"))
         )
-        colocated = hashed if assume_colocated else hashed.repartition(parts, "k")
         build = _build_stage(p, output, funnel)
     elif pre_reduce:
         rows = narrow.mapInArrow(
             _prereduce_stage(1, p), f"k {key_type}, reg int, v bigint"
         )
-        colocated = rows if assume_colocated else rows.repartition(parts, "k")
         build = _build_stage_reduced(p, output, funnel)
     else:
-        hashed = narrow.mapInArrow(_hash_stage(1), f"k {key_type}, h bigint")
-        colocated = hashed if assume_colocated else hashed.repartition(parts, "k")
-        build = _build_stage(p, output, funnel)
+        rows = narrow
+        build = chain(_hash_stage(1), _build_stage(p, output, funnel))
+    colocated = rows if assume_colocated else repartition_by_key(rows, partitions)
     if output == "estimate":
         schema = f"key {key_type}, estimate double, n bigint"
     else:

@@ -47,6 +47,8 @@ import pyarrow as pa
 
 from pyspark.sql import DataFrame, functions as F
 
+from ._arrow_common import repartition_by_key
+
 
 def _gather_values(batches: Iterator[pa.RecordBatch]):
     """Collect (keys, float64 values) from a partition's batches, dropping
@@ -323,21 +325,20 @@ def _grouped_value_sketch(
 ) -> DataFrame:
     key_type = df.schema[key].dataType.simpleString()
     narrow = df.select(F.col(key).alias("k"), F.col(col).cast("double").alias("v"))
-    parts = partitions or df.sparkSession.sparkContext.defaultParallelism * 2
     out_schema = f"key {key_type}, sketch binary, n bigint"
     if assume_colocated:
         return narrow.mapInArrow(_build_stage(make_sketch), out_schema)
     if pre_reduce == "auto":
         pre_reduce = _skew_probe(narrow, hot_threshold)
     if not pre_reduce:
-        return narrow.repartition(parts, "k").mapInArrow(
+        return repartition_by_key(narrow, partitions).mapInArrow(
             _build_stage(make_sketch), out_schema
         )
     mixed = narrow.mapInArrow(
         _prereduce_stage(make_sketch, hot_threshold),
         f"k {key_type}, v double, s binary, c bigint",
     )
-    return mixed.repartition(parts, "k").mapInArrow(
+    return repartition_by_key(mixed, partitions).mapInArrow(
         _merge_stage(make_sketch), out_schema
     )
 

@@ -28,6 +28,8 @@ import pyarrow as pa
 
 from pyspark.sql import DataFrame, functions as F
 
+from ._arrow_common import repartition_by_key
+
 
 def _encode_runs(keys, vals, w):
     """Dictionary-encode and collapse to distinct (key, value) runs with
@@ -127,7 +129,6 @@ def grouped_mode(
     """
     key_type = df.schema[key].dataType.simpleString()
     val_type = df.schema[col].dataType.simpleString()
-    parts = partitions or df.sparkSession.sparkContext.defaultParallelism * 2
     narrow = df.select(F.col(key).alias("k"), F.col(col).alias("v"))
     if pre_reduce == "auto":
         from .grouped_kll import _skew_probe
@@ -137,8 +138,8 @@ def grouped_mode(
         reduced = narrow.mapInArrow(
             _prereduce_stage(), f"k {key_type}, v {val_type}, c bigint"
         )
-        colocated = reduced.repartition(parts, "k")
     else:
-        colocated = narrow.repartition(parts, "k")
+        reduced = narrow
+    colocated = repartition_by_key(reduced, partitions)
     schema = f"key {key_type}, top_value {val_type}, top_count bigint, n bigint"
     return colocated.mapInArrow(_build_stage(), schema).withColumnRenamed("key", key)

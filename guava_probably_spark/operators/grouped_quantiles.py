@@ -33,6 +33,8 @@ import pyarrow as pa
 
 from pyspark.sql import DataFrame, functions as F
 
+from ._arrow_common import repartition_by_key
+
 
 def _runs(keys, v, w):
     """Collapse to distinct (key, value) runs with summed weights, runs
@@ -128,7 +130,6 @@ def grouped_quantiles(
     True/False, or cache the input, to avoid evaluating the lineage twice.
     """
     key_type = df.schema[key].dataType.simpleString()
-    parts = partitions or df.sparkSession.sparkContext.defaultParallelism * 2
     narrow = df.select(F.col(key).alias("k"), df[col].cast("double").alias("v"))
     qcols = ", ".join(f"q{int(round(q * 100))} double" for q in qs)
     schema = f"key {key_type}, n bigint, {qcols}"
@@ -140,9 +141,9 @@ def grouped_quantiles(
         reduced = narrow.mapInArrow(
             _prereduce_stage(), f"k {key_type}, v double, c bigint"
         )
-        colocated = reduced.repartition(parts, "k")
     else:
-        colocated = narrow.repartition(parts, "k")
+        reduced = narrow
+    colocated = repartition_by_key(reduced, partitions)
     return colocated.mapInArrow(_build_stage(qs), schema).withColumnRenamed(
         "key", key
     )

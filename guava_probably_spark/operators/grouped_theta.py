@@ -1,6 +1,6 @@
 """High-cardinality grouped Theta/KMV: one bounded-set-op sketch per key,
-vectorized across ALL keys in a partition (same architecture as
-operators/grouped_hll.py — narrow (key, hash) shuffle, one sorted pass).
+vectorized across ALL keys in a partition (same one-stage plan as
+operators/grouped_hll.py — one key exchange, one sorted pass).
 
 Why: per-group HLL answers "distinct per key" but cannot intersect ACROSS
 keys with a bound. Per-key theta sketches can — "users active on day 1 AND
@@ -8,6 +8,15 @@ day 7" (retention), "conversations touching tool A AND tool B" — each a
 `intersect_estimate` between two rows of the output, with the theta
 sample bound (sketches/theta.py) instead of HLL's unbounded
 inclusion–exclusion.
+
+Plan: project (key, value) in the JVM; by default one sampled skew probe
+(grouped_kll._skew_probe, threshold k rows per input partition) decides
+whether any key is hot. Without one, repartition(key) into
+``spark.sql.shuffle.partitions`` partitions unless ``partitions`` is given
+(_arrow_common.repartition_by_key), then ONE mapInArrow per partition
+hashes the values and runs the kernel. With one (or ``pre_reduce=True``),
+a map-side KMV combine ships at most k distinct hashes per (input
+partition, key) across the exchange instead.
 
 Kernel: lexsort (key, hash) → drop duplicate (key, hash) pairs → keep the
 first k per key (the k SMALLEST distinct hashes — exactly ThetaSketch's
@@ -24,9 +33,10 @@ from collections.abc import Iterator
 import numpy as np
 import pyarrow as pa
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, functions as F
 
 from ..sketches.base import KIND_THETA, MAGIC, VERSION, Sketch
+from ._arrow_common import chain, funnel_for_spark_type, repartition_by_key
 from .grouped_hll import _hash_stage
 
 
@@ -174,7 +184,7 @@ def grouped_theta(
     col: str,
     k: int = 4096,
     partitions: int | None = None,
-    pre_reduce: bool | None = None,
+    pre_reduce: bool | str | None = "auto",
     assume_colocated: bool = False,
     prehash: bool = False,
 ) -> DataFrame:
@@ -183,13 +193,16 @@ def grouped_theta(
     Rows of the output support bounded union/intersect/difference ACROSS
     keys (retention-style queries).
 
-    ``pre_reduce`` (default) applies the map-side KMV combine: each input
+    ``pre_reduce=True`` applies the map-side KMV combine: each input
     partition ships at most k distinct hashes per key (+ the raw count on
     one row) — the shuffle is bounded by parts × keys × k rows no matter
     how hot a key is, and duplicate (key, value) rows collapse before the
-    exchange. The retained-set union is associative, so the output blobs
-    are byte-identical either way (tested). Default ``None`` resolves to
-    True unless ``prehash`` is set.
+    exchange. The default ``"auto"`` (``None`` means the same) runs
+    grouped_kll's memoized sampled skew probe with a k-row threshold and
+    takes the combine only when some key is hot; otherwise hashing and
+    the build share one Python stage after the exchange. The retained-set
+    union is associative, so the output blobs are byte-identical either
+    way (tested).
 
     ``prehash=True`` hashes the value column JVM-SIDE with ``xxhash64`` and
     feeds the 64-bit hashes straight into the KMV retention — no Python
@@ -199,40 +212,40 @@ def grouped_theta(
     uniform 64-bit hash; blobs carry FUNNEL_PREHASHED and refuse to merge
     with murmur3-funnel blobs of the same column (the retained domains
     differ). Null values are dropped JVM-side (xxhash64(NULL) = seed
-    would count nulls as one distinct). Mutually exclusive with
-    ``pre_reduce=True`` (whose map-side KMV combine hashes in Python) —
-    the prehash trade is shuffle rows = input rows instead of the
-    ≤ parts × keys × k cap; prefer pre_reduce when keys are hot and
-    values narrow, prehash when the value column is wide text."""
+    would count nulls as one distinct). Under prehash ``"auto"`` resolves
+    to False; ``pre_reduce=True`` (whose map-side KMV combine hashes in
+    Python) raises — the prehash trade is shuffle rows = input rows
+    instead of the ≤ parts × keys × k cap; prefer pre_reduce when keys
+    are hot and values narrow, prehash when the value column is wide
+    text."""
 
-    dt = df.schema[col].dataType
-    from ._arrow_common import funnel_for_spark_type
+    key_type = df.schema[key].dataType.simpleString()
+    narrow = df.select(F.col(key).alias("k"), F.col(col).alias("v"))
+    if pre_reduce in (None, "auto"):
+        from .grouped_kll import _skew_probe
 
+        pre_reduce = not (prehash or assume_colocated) and _skew_probe(narrow, k)
     if prehash and pre_reduce:
         raise ValueError("prehash and pre_reduce are mutually exclusive")
-    if pre_reduce is None:
-        pre_reduce = not prehash
-    key_type = df.schema[key].dataType.simpleString()
-    parts = partitions or df.sparkSession.sparkContext.defaultParallelism * 2
+    funnel = funnel_for_spark_type(df.schema[col].dataType)
     if prehash:
-        from pyspark.sql import functions as F
-
         from ..sketches.base import FUNNEL_PREHASHED
 
         funnel = FUNNEL_PREHASHED
-        hashed = (
+        rows = (
             df.where(F.col(col).isNotNull())
             .select(F.col(key).alias("k"), F.xxhash64(col).alias("h"))
         )
+        build = _build_stage(k, funnel)
     elif pre_reduce:
-        funnel = funnel_for_spark_type(dt)
-        hashed = df.select(key, col).mapInArrow(
+        rows = narrow.mapInArrow(
             _prereduce_stage(1, k), f"k {key_type}, h bigint, c bigint"
         )
+        build = _build_stage(k, funnel)
     else:
-        funnel = funnel_for_spark_type(dt)
-        hashed = df.select(key, col).mapInArrow(_hash_stage(1), f"k {key_type}, h bigint")
-    colocated = hashed if assume_colocated else hashed.repartition(parts, "k")
+        rows = narrow
+        build = chain(_hash_stage(1), _build_stage(k, funnel))
+    colocated = rows if assume_colocated else repartition_by_key(rows, partitions)
     return colocated.mapInArrow(
-        _build_stage(k, funnel), f"key {key_type}, sketch binary, n bigint"
+        build, f"key {key_type}, sketch binary, n bigint"
     ).withColumnRenamed("key", key)
