@@ -42,22 +42,13 @@ def funnel_for_arrow_type(t: pa.DataType) -> int:
 def repartition_by_key(df, partitions: int | None):
     """The one reduce-partition rule of the grouped builds: co-locate each
     key ``k`` in ``partitions`` partitions when the caller asks for a
-    count, else in ``spark.sql.shuffle.partitions`` (which AQE may
-    coalesce when enabled). A fixed ``defaultParallelism * 2`` used to
-    run two waves of Python tasks on every grouped build."""
-    return df.repartition(partitions, "k") if partitions else df.repartition("k")
-
-
-def chain(*stages):
-    """Compose per-partition Arrow stages into one ``mapInArrow`` function,
-    so e.g. hashing and the grouped build run in the same Python task."""
-
-    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for stage in stages:
-            batches = stage(batches)
-        return batches
-
-    return fn
+    count, else in ``defaultParallelism`` partitions — one wave of Python
+    tasks. Neither ``spark.sql.shuffle.partitions`` nor AQE decides it:
+    Spark's default of 200 partitions runs 200 Python tasks per build
+    (about 10× slower on 25 k rows and 4 cores), and AQE coalescing by
+    bytes can leave fewer tasks than cores (1.2–1.5× slower there)."""
+    n = partitions or df.sparkSession.sparkContext.defaultParallelism
+    return df.repartition(n, "k")
 
 
 def encode_keys(keys: pa.Array) -> tuple[pa.Array, np.ndarray]:

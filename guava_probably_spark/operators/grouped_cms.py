@@ -10,8 +10,8 @@ partition can be updated simultaneously:
      (grouped_kll._skew_probe, threshold 4096 rows per input partition, as
      grouped_mode) decides whether any key is hot;
   2. repartition(key): the one unavoidable shuffle, into
-     ``spark.sql.shuffle.partitions`` partitions unless ``partitions`` is
-     given (_arrow_common.repartition_by_key);
+     ``defaultParallelism`` partitions (one wave of Python tasks) unless
+     ``partitions`` is given (_arrow_common.repartition_by_key);
   3. ONE mapInArrow per partition: murmur3-hash the values → (h1, h2),
      dictionary-encode keys → codes; bucket index per depth is
      ((h1 + i·h2) & SIGN) mod w (identical arithmetic to
@@ -47,7 +47,7 @@ from pyspark.sql import DataFrame, functions as F
 
 from ..sketches.base import KIND_CMS, MAGIC, VERSION, Sketch
 from ..sketches.cms import _SIGN_MASK, cms_geometry
-from ._arrow_common import chain, funnel_for_spark_type, repartition_by_key
+from ._arrow_common import funnel_for_spark_type, repartition_by_key
 
 _HASH2_SCHEMA_SUFFIX = "h1 bigint, h2 bigint, c bigint"
 
@@ -281,8 +281,7 @@ def grouped_cms(
         build = _build_stage(epsilon, delta, funnel, max_matrix_bytes)
     else:
         rows = narrow
-        build = chain(
-            _hash2_stage(1), _build_stage(epsilon, delta, funnel, max_matrix_bytes)
-        )
+        stage = _build_stage(epsilon, delta, funnel, max_matrix_bytes)
+        build = lambda it, h=_hash2_stage(1), b=stage: b(h(it))
     colocated = rows if assume_colocated else repartition_by_key(rows, partitions)
     return colocated.mapInArrow(build, f"key {key_type}, sketch binary, n bigint")

@@ -6,12 +6,10 @@ conv_ids (BASELINE.json).  ``applyInPandas`` costs ~1 ms of Python per group
 Python stage after one key exchange (the plan grouped_kll, grouped_cms and
 grouped_theta share):
 
-  1. project (key, value) in the JVM; by default one sampled skew probe
-     (grouped_kll._skew_probe, threshold 2^p rows per input partition)
-     decides whether any key is hot;
+  1. project (key, value) in the JVM;
   2. repartition(key): every key's rows land in exactly one partition, in
-     ``spark.sql.shuffle.partitions`` partitions unless ``partitions`` is
-     given (_arrow_common.repartition_by_key);
+     ``defaultParallelism`` partitions (one wave of Python tasks) unless
+     ``partitions`` is given (_arrow_common.repartition_by_key);
   3. ONE mapInArrow per partition: murmur3-hash the values, np.unique(keys)
      → code per row, ONE ``np.maximum.at`` scatter into a (n_keys × m)
      register matrix that updates every group at once; registers are
@@ -25,8 +23,11 @@ instead of an 8-byte hash — 2.3 MB against 0.4 MB of shuffle writes on the
 of every row. Shuffle-bound callers pass ``pre_reduce=True`` (a map-side
 register combine: ≤ m + 1 rows per key and input partition) or
 ``prehash=True`` (JVM xxhash64, 8 bytes per row and no Python before the
-exchange). When the probe finds a hot key, ``pre_reduce`` engages by
-itself.
+exchange). ``pre_reduce="auto"`` lets grouped_kll's sampled skew probe
+(threshold 2^p rows per input partition) pick the combine only when some
+key is hot; it is not the default here, because the probe is one more
+eager job on every new input and no measured hot-key workload shows yet
+that it pays for itself on HLL.
 
 Output: (key, sketch binary, n bigint) or (key, estimate double, n bigint)
 with the estimator evaluated vectorized across the whole key matrix.
@@ -44,7 +45,7 @@ from pyspark.sql import DataFrame, functions as F
 
 from ..sketches.base import MAGIC, VERSION, KIND_HLL
 from ..sketches.hll import _alpha, _leading_zero_rho
-from ._arrow_common import chain, funnel_for_spark_type, repartition_by_key
+from ._arrow_common import funnel_for_spark_type, repartition_by_key
 
 
 def _hash_stage(col_idx: int):
@@ -378,7 +379,7 @@ def grouped_hll(
     p: int = 14,
     output: str = "sketch",
     partitions: int | None = None,
-    pre_reduce: bool | str = "auto",
+    pre_reduce: bool | str | None = False,
     assume_colocated: bool = False,
     prehash: bool = False,
 ) -> DataFrame:
@@ -390,12 +391,13 @@ def grouped_hll(
     shuffle carries ≤ m register rows + 1 count row per (key, input
     partition) instead of one row per input row — the skew/duplicate
     armor (a 10^9-row hot key ships ≤ 2^p rows per source partition).
-    The default "auto" runs grouped_kll's memoized sampled skew probe with
-    a 2^p-row threshold and takes the armor only when some key is hot;
-    otherwise hashing and the build share one Python stage after the
-    exchange. False forces the one-stage plan. Blobs are byte-identical
-    either way. NOTE: "auto" runs one eager sampled job over the input
-    lineage at plan-construction time.
+    The default False is the one-stage plan: hashing and the build share
+    one Python stage after the exchange. "auto" (``None`` means the same,
+    as in grouped_cms and grouped_theta) runs grouped_kll's memoized
+    sampled skew probe with a 2^p-row threshold and takes the armor only
+    when some key is hot. Blobs are byte-identical either way. NOTE:
+    "auto" runs one eager sampled job over the input lineage at
+    plan-construction time.
     assume_colocated=True skips the repartition entirely — correct when the
     input is already partitioned by `key` (bucketed table read, upstream
     repartition); the grouped build then has ZERO shuffle.
@@ -417,7 +419,7 @@ def grouped_hll(
     key_type = df.schema[key].dataType.simpleString()
     funnel = funnel_for_spark_type(df.schema[col].dataType)
     narrow = df.select(F.col(key).alias("k"), F.col(col).alias("v"))
-    if pre_reduce == "auto":
+    if pre_reduce in (None, "auto"):
         from .grouped_kll import _skew_probe
 
         pre_reduce = not (prehash or assume_colocated) and _skew_probe(narrow, 1 << p)
@@ -439,7 +441,7 @@ def grouped_hll(
         build = _build_stage_reduced(p, output, funnel)
     else:
         rows = narrow
-        build = chain(_hash_stage(1), _build_stage(p, output, funnel))
+        build = lambda it, h=_hash_stage(1), b=_build_stage(p, output, funnel): b(h(it))
     colocated = rows if assume_colocated else repartition_by_key(rows, partitions)
     if output == "estimate":
         schema = f"key {key_type}, estimate double, n bigint"

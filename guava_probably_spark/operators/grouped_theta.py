@@ -12,11 +12,11 @@ inclusion–exclusion.
 Plan: project (key, value) in the JVM; by default one sampled skew probe
 (grouped_kll._skew_probe, threshold k rows per input partition) decides
 whether any key is hot. Without one, repartition(key) into
-``spark.sql.shuffle.partitions`` partitions unless ``partitions`` is given
-(_arrow_common.repartition_by_key), then ONE mapInArrow per partition
-hashes the values and runs the kernel. With one (or ``pre_reduce=True``),
-a map-side KMV combine ships at most k distinct hashes per (input
-partition, key) across the exchange instead.
+``defaultParallelism`` partitions (one wave of Python tasks) unless
+``partitions`` is given (_arrow_common.repartition_by_key), then ONE
+mapInArrow per partition hashes the values and runs the kernel. With one
+(or ``pre_reduce=True``), a map-side KMV combine ships at most k distinct
+hashes per (input partition, key) across the exchange instead.
 
 Kernel: lexsort (key, hash) → drop duplicate (key, hash) pairs → keep the
 first k per key (the k SMALLEST distinct hashes — exactly ThetaSketch's
@@ -36,7 +36,7 @@ import pyarrow as pa
 from pyspark.sql import DataFrame, functions as F
 
 from ..sketches.base import KIND_THETA, MAGIC, VERSION, Sketch
-from ._arrow_common import chain, funnel_for_spark_type, repartition_by_key
+from ._arrow_common import funnel_for_spark_type, repartition_by_key
 from .grouped_hll import _hash_stage
 
 
@@ -244,7 +244,7 @@ def grouped_theta(
         build = _build_stage(k, funnel)
     else:
         rows = narrow
-        build = chain(_hash_stage(1), _build_stage(k, funnel))
+        build = lambda it, h=_hash_stage(1), b=_build_stage(k, funnel): b(h(it))
     colocated = rows if assume_colocated else repartition_by_key(rows, partitions)
     return colocated.mapInArrow(
         build, f"key {key_type}, sketch binary, n bigint"

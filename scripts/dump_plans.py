@@ -248,10 +248,11 @@ def main() -> None:
     sections.append((
         "Grouped HLL — one Python stage (default)",
         "The shared plan of `grouped_hll`, `grouped_cms` and "
-        "`grouped_theta` when the sampled skew probe finds no hot key: the "
+        "`grouped_theta` when no map-side combine runs (the HLL default; "
+        "CMS and theta when the sampled skew probe finds no hot key): the "
         "JVM projects (key, value), ONE Exchange co-locates each key in "
-        "`spark.sql.shuffle.partitions` partitions (REPARTITION_BY_COL, "
-        "so AQE may coalesce them), and ONE `MapInArrow` hashes the values "
+        "`defaultParallelism` partitions (one wave of Python tasks) unless "
+        "`partitions` is given, and ONE `MapInArrow` hashes the values "
         "and builds every key's sketch in the same task. A hot key swaps "
         "in a map-side combine below the Exchange (second `MapInArrow`).",
         fmt(grouped_hll(events, "event_type", "user_id", p=12, pre_reduce=False)),

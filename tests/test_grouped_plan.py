@@ -1,8 +1,9 @@
 """The shared grouped-build plan (operators/grouped_hll, grouped_cms,
-grouped_theta): one Python stage above one key exchange by default, the
-map-side combine only when the sampled skew probe finds a hot key, and one
-reduce-partition rule (``spark.sql.shuffle.partitions`` unless the caller
-passes ``partitions``)."""
+grouped_theta): one Python stage above one key exchange by default; under
+``pre_reduce="auto"`` (the CMS and theta default) the map-side combine only
+when the sampled skew probe finds a hot key; and one reduce-partition rule
+(``defaultParallelism``, one task wave, unless the caller passes
+``partitions``)."""
 
 import re
 
@@ -34,13 +35,14 @@ def _key_exchange_partitions(plan: str) -> list[int]:
 
 
 @pytest.mark.parametrize("name,build,_local", OPS, ids=[o[0] for o in OPS])
-def test_default_plan_is_one_python_stage_over_shuffle_partitions(spark, name, build, _local):
+def test_default_plan_is_one_python_stage_in_one_task_wave(spark, name, build, _local):
     df = spark.range(6_000).select(  # 1,000 keys of 6 rows: none is hot
         F.concat(F.lit("k"), (F.col("id") % 1000).cast("string")).alias("g"),
         F.concat(F.lit("item"), (F.col("id") * 7 % 300).cast("string")).alias("v"),
     )
+    cores = spark.sparkContext.defaultParallelism
     prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "3")
+    spark.conf.set("spark.sql.shuffle.partitions", "200")  # Spark's default
     try:
         plan = _plan(build(df))
     finally:
@@ -48,8 +50,8 @@ def test_default_plan_is_one_python_stage_over_shuffle_partitions(spark, name, b
     assert plan.count("MapInArrow") == 1, plan
     assert plan.count("Exchange") == 1, plan
     assert plan.index("MapInArrow") < plan.index("Exchange"), plan  # above it
-    assert _key_exchange_partitions(plan) == [3], plan
-    # an explicit partition count still wins over the session setting
+    assert _key_exchange_partitions(plan) == [cores], plan  # not 200, not 2 × cores
+    # an explicit partition count still wins
     assert _key_exchange_partitions(_plan(build(df, partitions=6))) == [6]
 
 
@@ -68,8 +70,11 @@ def _hot_pdf(n_hot=40_000, n_cold=300):
 def test_hot_key_auto_takes_map_side_combine_with_identical_blobs(spark, name, build, local):
     pdf = _hot_pdf()
     df = spark.createDataFrame(pdf).repartition(4)
-    auto = build(df)
+    auto = build(df, pre_reduce="auto")
     assert _plan(auto).count("MapInArrow") == 2  # combine, exchange, build
+    # None means "auto" in all three; only HLL defaults to the one-stage plan
+    assert _plan(build(df, pre_reduce=None)).count("MapInArrow") == 2
+    assert _plan(build(df)).count("MapInArrow") == (1 if name == "hll" else 2)
 
     def blobs(out):
         return {r[0]: (bytes(r.sketch), r.n) for r in out.collect()}
