@@ -492,7 +492,7 @@ def _q_merge_associativity(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _q_grouped_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
     events = _t(spark, sf_dir, "events")
-    g = build_grouped(events, "event_type", "user_id", SketchSpec("hll", {"p": 14}), salt=4)
+    g = build_grouped(events, "event_type", "user_id", SketchSpec("hll", {"p": 14}))
     est = g.select("event_type", hll_cardinality()("sketch").alias("est"))
     exact = events.groupBy("event_type").agg(F.countDistinct("user_id").alias("exact_distinct"))
     bound = 3 * 1.04 / (2 ** 14) ** 0.5 + 0.005
@@ -517,7 +517,7 @@ def _q_hll_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     byte-equality against the direct global build."""
     events = _t(spark, sf_dir, "events")
     spec = SketchSpec("hll", {"p": 14})
-    g = build_grouped(events, "event_type", "user_id", spec, salt=4)
+    g = build_grouped(events, "event_type", "user_id", spec)
     rows = g.select("event_type", "sketch").collect()
     acc = None
     for r in rows:
@@ -664,7 +664,7 @@ def _q_rollup_two_level(spark: SparkSession, sf_dir: str) -> DataFrame:
     lineitem = _t(spark, sf_dir, "lineitem")
     spec = SketchSpec("hll", {"p": 14})
     keys = ["l_returnflag", "l_linestatus"]
-    g = build_grouped(lineitem, keys, "l_orderkey", spec, salt=2)
+    g = build_grouped(lineitem, keys, "l_orderkey", spec)
     rolled = rollup_sketches(g, keys)
     bound = 3 * 1.04 / (2 ** 14) ** 0.5 + 0.005
     est = rolled.select(
@@ -697,7 +697,7 @@ def _q_cube_two_level(spark: SparkSession, sf_dir: str) -> DataFrame:
     lineitem = _t(spark, sf_dir, "lineitem")
     spec = SketchSpec("hll", {"p": 14})
     keys = ["l_returnflag", "l_linestatus"]
-    g = build_grouped(lineitem, keys, "l_orderkey", spec, salt=2)
+    g = build_grouped(lineitem, keys, "l_orderkey", spec)
     cubed = cube_sketches(g, keys)
     est = cubed.select(*keys, hll_cardinality()("sketch").alias("est"))
     exact = lineitem.cube(*keys).agg(
@@ -816,7 +816,7 @@ def _q_hll_window_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     events = _t(spark, sf_dir, "events").withColumn(
         "day", F.date_format(F.date_trunc("day", F.col("ts")), "yyyy-MM-dd")
     )
-    g = build_grouped(events, "day", "user_id", SketchSpec("hll", {"p": 14}), salt=2)
+    g = build_grouped(events, "day", "user_id", SketchSpec("hll", {"p": 14}))
     est = g.select("day", hll_cardinality()("sketch").alias("est"))
     exact = events.groupBy("day").agg(F.countDistinct("user_id").alias("exact_distinct"))
     bound = 3 * 1.04 / (2 ** 14) ** 0.5
@@ -1176,7 +1176,7 @@ def _q_bucketed_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     spec = SketchSpec("hll", {"p": 14})
     base = tempfile.mkdtemp(prefix="gps_bucketed_")
     for i, h in enumerate(halves):
-        g = build_grouped(h, "event_type", "user_id", spec, salt=2)
+        g = build_grouped(h, "event_type", "user_id", spec)
         spark.sql(f"DROP TABLE IF EXISTS gps_sketch_half_{i}")
         write_bucketed_sketches(
             g, f"gps_sketch_half_{i}", "event_type", buckets=4, path=f"{base}/h{i}"
@@ -1989,7 +1989,7 @@ def _q_heavy_hitters_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
     # pins real frequencies, not just labels).
     from guava_probably_spark.functions import mg_topk
 
-    g = build_grouped(events, "event_type", "user_id", SketchSpec("mg", {"k": 64}), salt=4)
+    g = build_grouped(events, "event_type", "user_id", SketchSpec("mg", {"k": 64}))
     tops = {
         r.event_type: r.top
         for r in g.select("event_type", mg_topk(5)("sketch").alias("top")).collect()

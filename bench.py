@@ -673,7 +673,7 @@ def run_queries(spark, sf_dir: str, t_path: str) -> tuple[dict, dict]:
     timed(
         "q_grouped_hll_returnflag",
         lambda: build_grouped(
-            lineitem, "l_returnflag", "l_orderkey", SketchSpec("hll", {"p": 12}), salt=8
+            lineitem, "l_returnflag", "l_orderkey", SketchSpec("hll", {"p": 12})
         ).collect(),
     )
     def grouped_conv():

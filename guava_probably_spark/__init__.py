@@ -6,7 +6,7 @@ bdupras/guava-probably, extended to HLL, Count-Min, KLL and t-digest
 Layout:
   sketches/   pure-numpy mergeable sketch kernels (Spark-agnostic)
   operators/  Spark build/merge pipeline (mapInArrow partials + tree merge,
-              grouped salted aggregation, semi-join pruning)
+              grouped builds, semi-join pruning)
   functions/  pandas UDFs + SQL registration (might_contain, estimates)
   sources/    loaders (parquet sandbox / Iceberg production) + synthesis
   plans/      physical-plan shape assertions (no raw-row shuffle)

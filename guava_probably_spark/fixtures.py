@@ -1,7 +1,7 @@
 """Deterministic transcripts fixture — FIXTURES.md §1, BASELINE.json:15 shape.
 
 Pure function of (seed, rows): numpy PCG64, zipf-skewed conv_ids (hot
-conversations exercise the salted grouped path), unicode-bearing token-soup
+conversations exercise the grouped hot-key path), unicode-bearing token-soup
 text, contiguous turn_idx per conv, role/tool/ts rules per FIXTURES.md.
 """
 

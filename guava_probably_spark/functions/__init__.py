@@ -33,6 +33,8 @@ _SKETCH_CACHE: dict[bytes, Sketch] = {}
 _SKETCH_CACHE_BYTES = 0
 # per python worker; a 91 MB filter blob × 16 count-capped entries was a
 # potential 1.5 GB per worker × 32 workers — cap the BYTES, not the count
+# (a count cap also missed on every lookup once a frozen filter had more
+# shards than the cap)
 _SKETCH_CACHE_MAX_BYTES = 256 * 1024 * 1024
 
 
@@ -44,10 +46,7 @@ def _cached_sketch(blob: bytes) -> Sketch:
         # insertion order) — clearing everything would thrash when two
         # large filters alternate in one worker: each miss would evict the
         # other live filter and every batch would re-pay its full decode
-        while _SKETCH_CACHE and (
-            len(_SKETCH_CACHE) >= 16
-            or _SKETCH_CACHE_BYTES + 2 * len(blob) > _SKETCH_CACHE_MAX_BYTES
-        ):
+        while _SKETCH_CACHE and _SKETCH_CACHE_BYTES + 2 * len(blob) > _SKETCH_CACHE_MAX_BYTES:
             old = next(iter(_SKETCH_CACHE))
             _SKETCH_CACHE.pop(old)
             _SKETCH_CACHE_BYTES -= 2 * len(old)

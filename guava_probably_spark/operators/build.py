@@ -13,23 +13,27 @@ Raw data is scanned exactly once and never shuffled.  Column pruning pushes
 through mapInArrow because we select the hashed column first (verified by
 plans.assert_no_raw_shuffle / tests).
 
-Grouped (per-key) sketches use the two-phase salted pattern
-(BASELINE.json:14 "skew handled explicitly"): groupBy(key, salt) partials →
-groupBy(key) merge, so a hot conv_id is built by `salt` tasks in parallel and
-merged, instead of serializing on one task.
+Grouped (per-key) sketches of any kind (``build_grouped``) run the shared
+grouped plan: one key exchange and one Python stage, with a map-side combine
+when the sampled skew probe finds a hot key (BASELINE.json:14 "skew handled
+explicitly"), so a hot conv_id ships partial blobs instead of its rows.
 """
 
 from __future__ import annotations
 
 import math
 import time
+import warnings
 from collections.abc import Iterator
 
+import numpy as np
 import pyarrow as pa
 
 from pyspark.sql import DataFrame, functions as F
+from pyspark.sql.types import BinaryType, LongType, StructField, StructType
 
 from ..sketches import Sketch, SketchSpec
+from ._arrow_common import repartition_by_key
 from .filetasks import list_input_files, plan_file_tasks
 
 PARTIAL_SCHEMA = "sketch binary, n bigint, overflow bigint, part_id bigint, secs double"
@@ -551,92 +555,309 @@ def collect_sketches_files(
 
 
 # ---------------------------------------------------------------------------
-# Grouped (per-key) sketches — two-phase salted aggregation
+# Grouped (per-key) sketches of any kind — the shared grouped plan
+# (operators/grouped_kll): JVM projection, an optional map-side combine for
+# hot keys, one key exchange, ONE Python stage that sorts each partition by
+# key and builds one sketch per key segment.
 # ---------------------------------------------------------------------------
+
+_GP_V, _GP_W, _GP_S, _GP_C = "__gp_v", "__gp_w", "__gp_s", "__gp_c"
+
+
+def _gather_columns(batches: Iterator[pa.RecordBatch]) -> list[pa.Array] | None:
+    """A partition's batches as one contiguous array per column (None when
+    the partition is empty)."""
+    batch_list = [b for b in batches if b.num_rows]
+    if not batch_list:
+        return None
+    return [
+        pa.chunked_array([b.column(i) for b in batch_list]).combine_chunks()
+        for i in range(batch_list[0].num_columns)
+    ]
+
+
+def _nan_to_null(values: pa.Array) -> pa.Array:
+    """A float NaN is a missing value, as the siblings (and pandas) treat
+    it: not ingested and not counted in ``n``."""
+    import pyarrow.compute as pc
+
+    if pa.types.is_floating(values.type) and pc.any(pc.is_nan(values)).as_py():
+        return pc.if_else(pc.is_nan(values), pa.nulls(len(values), values.type), values)
+    return values
+
+
+def _key_segments(
+    key_cols: list[pa.Array], then: pa.Array | None = None
+) -> tuple[np.ndarray, np.ndarray]:
+    """Stable sort of a partition by its (possibly composite) key → (order,
+    bounds): ``order`` lists the row indices key by key, in arrival order
+    within a key (then by ``then``, when given, which does not split runs),
+    and key run i is ``order[bounds[i]:bounds[i + 1]]``. NULL is its own
+    key and NaN keys group together. ``pc.sort_indices`` over the columns
+    rather than ``dictionary_encode``, which has no struct kernel."""
+    import pyarrow.compute as pc
+
+    cols = {f"k{i}": c for i, c in enumerate(key_cols)}
+    if then is not None:
+        cols["then"] = then
+    order = pc.sort_indices(
+        pa.table(cols), sort_keys=[(name, "ascending") for name in cols]
+    )
+    n = len(order)
+    starts = np.zeros(n, dtype=bool)
+    starts[0] = True
+    for c in key_cols:
+        s = c.take(order)
+        a, b = s.slice(1), s.slice(0, n - 1)
+        diff = pc.fill_null(pc.not_equal(a, b), False).to_numpy(zero_copy_only=False)
+        if pa.types.is_floating(c.type):
+            both_nan = pc.and_(pc.is_nan(a), pc.is_nan(b))
+            diff &= ~pc.fill_null(both_nan, False).to_numpy(zero_copy_only=False)
+        diff |= a.is_null().to_numpy(zero_copy_only=False) != b.is_null().to_numpy(
+            zero_copy_only=False
+        )
+        starts[1:] |= diff
+    bounds = np.append(np.flatnonzero(starts), n)
+    return order.to_numpy(zero_copy_only=False), bounds
+
+
+def _sorted_inputs(
+    cols: list[pa.Array], n_keys: int, weighted: bool, order: np.ndarray
+) -> tuple[pa.Array, np.ndarray | None]:
+    """The value column (and weights) after the key columns, in ``order``."""
+    values = _nan_to_null(cols[n_keys]).take(pa.array(order))
+    w = cols[n_keys + 1].to_numpy(zero_copy_only=False)[order] if weighted else None
+    return values, w
+
+
+def _segment_sketch(
+    spec: SketchSpec, values: pa.Array, w: np.ndarray | None, lo: int, hi: int
+) -> tuple[Sketch, int, int]:
+    """One key's rows ``values[lo:hi]`` (weights ``w[lo:hi]``) → (sketch,
+    non-null rows, cuckoo overflow)."""
+    sk = spec.create()
+    _bind_funnel(sk, values)
+    seg = values.slice(lo, hi - lo)
+    if w is None:
+        overflow = _ingest_overflow(sk, seg)
+    else:
+        sk.update(seg, weights=w[lo:hi])
+        overflow = 0
+    return sk, len(seg) - seg.null_count, overflow
+
+
+def _overflow_error(key_cols: list[pa.Array], row: int, overflow: int) -> OverflowError:
+    # the grouped output schema has no overflow column, so a group exceeding
+    # a cuckoo's capacity must fail LOUDLY — dropping the count would be
+    # silent false negatives (size the capacity for the largest group, or use
+    # bloom/hll for unbounded groups)
+    key_vals = tuple(c[int(row)].as_py() for c in key_cols)
+    return OverflowError(
+        f"cuckoo capacity overflow in group {key_vals}: "
+        f"{overflow} elements did not fit"
+    )
+
+
+def _grouped_batch(key_cols, rows: np.ndarray, blobs, ns, names) -> pa.RecordBatch:
+    idx = pa.array(rows)
+    return pa.RecordBatch.from_arrays(
+        [c.take(idx) for c in key_cols]
+        + [pa.array(blobs, type=pa.binary()), pa.array(ns, type=pa.int64())],
+        names=names,
+    )
+
+
+def _grouped_build_stage(spec: SketchSpec, n_keys: int, weighted: bool, names):
+    """The one Python stage: per key segment of the partition, build a
+    sketch from its rows."""
+
+    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        cols = _gather_columns(batches)
+        if cols is None:
+            return
+        key_cols = cols[:n_keys]
+        order, bounds = _key_segments(key_cols)
+        values, w = _sorted_inputs(cols, n_keys, weighted, order)
+        blobs, ns = [], []
+        for lo, hi in zip(bounds[:-1], bounds[1:]):
+            sk, n, overflow = _segment_sketch(spec, values, w, lo, hi)
+            if overflow:
+                raise _overflow_error(key_cols, order[lo], overflow)
+            blobs.append(sk.to_bytes())
+            ns.append(n)
+        yield _grouped_batch(key_cols, order[bounds[:-1]], blobs, ns, names)
+
+    return fn
+
+
+def _grouped_prereduce_stage(
+    spec: SketchSpec, n_keys: int, weighted: bool, hot_threshold: int, names
+):
+    """Map-side hot-key combine, value-typed twin of grouped_kll's: per
+    INPUT partition, a key with ≥ ``hot_threshold`` rows becomes one partial
+    blob row (``__gp_s``, with its non-null row count in ``__gp_c``); colder
+    rows pass through raw with null ``__gp_s``/``__gp_c``."""
+
+    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        batch_list = [b for b in batches if b.num_rows]
+        cols = _gather_columns(iter(batch_list))
+        if cols is None:
+            return
+        key_cols = cols[:n_keys]
+        order, bounds = _key_segments(key_cols)
+        run = np.diff(bounds)
+        hot = np.flatnonzero(run >= hot_threshold)
+
+        def raw(columns: list[pa.Array]) -> pa.RecordBatch:
+            n = len(columns[0])
+            return pa.RecordBatch.from_arrays(
+                columns + [pa.nulls(n, pa.binary()), pa.nulls(n, pa.int64())],
+                names=names,
+            )
+
+        if not len(hot):  # nothing hot here: forward the rows untouched
+            for b in batch_list:
+                yield raw(b.columns)
+            return
+        row_hot = np.repeat(run >= hot_threshold, run)  # per sorted row
+        cold = np.sort(order[~row_hot])  # arrival order
+        if len(cold):
+            yield raw([c.take(pa.array(cold)) for c in cols])
+        values, w = _sorted_inputs(cols, n_keys, weighted, order)
+        blobs, ns = [], []
+        for i in hot:  # few by definition (≥ hot_threshold rows each)
+            sk, n, overflow = _segment_sketch(spec, values, w, bounds[i], bounds[i + 1])
+            if overflow:
+                raise _overflow_error(key_cols, order[bounds[i]], overflow)
+            blobs.append(sk.to_bytes())
+            ns.append(n)
+        first = pa.array(order[bounds[hot]])
+        m = len(hot)
+        yield pa.RecordBatch.from_arrays(
+            [c.take(first) for c in key_cols]
+            + [pa.nulls(m, c.type) for c in cols[n_keys:]]
+            + [pa.array(blobs, type=pa.binary()), pa.array(ns, type=pa.int64())],
+            names=names,
+        )
+
+    return fn
+
+
+def _grouped_merge_stage(spec: SketchSpec, n_keys: int, weighted: bool, names):
+    """Reduce side of the combine: per key, ingest the raw rows, then merge
+    the partial blobs in (``fold_sketch_rows``, so cuckoo merge overflow is
+    counted — and raised — like build overflow)."""
+    dedup = _spec_dedup(spec)
+
+    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        cols = _gather_columns(batches)
+        if cols is None:
+            return
+        key_cols = cols[:n_keys]
+        partial, counts = cols[-2], cols[-1]
+        is_part = partial.is_valid()
+        # raw rows first within a key, then its partials
+        order, bounds = _key_segments(key_cols, then=is_part)
+        values, w = _sorted_inputs(cols, n_keys, weighted, order)
+        part_sorted = is_part.to_numpy(zero_copy_only=False)[order]
+        blob_sorted = partial.take(pa.array(order))
+        count_sorted = counts.to_numpy(zero_copy_only=False)[order]
+        blobs, ns = [], []
+        for lo, hi in zip(bounds[:-1], bounds[1:]):
+            n_raw = int((~part_sorted[lo:hi]).sum())
+            rows = [_segment_sketch(spec, values, w, lo, lo + n_raw)] if n_raw else []
+            rows.extend(
+                (blob_sorted[j].as_py(), int(count_sorted[j]), 0)
+                for j in range(lo + n_raw, hi)
+            )
+            acc, n, overflow = fold_sketch_rows(rows, dedup=dedup)
+            if overflow:
+                raise _overflow_error(key_cols, order[lo], overflow)
+            blobs.append(acc.to_bytes())
+            ns.append(n)
+        yield _grouped_batch(key_cols, order[bounds[:-1]], blobs, ns, names)
+
+    return fn
+
 
 def build_grouped(
     df: DataFrame,
     key: str | list[str],
     col: str,
     spec: SketchSpec,
-    salt: int = 8,
+    salt: int | None = None,
     weight_col: str | None = None,
+    pre_reduce: bool | str | None = "auto",
 ) -> DataFrame:
-    """Per-key sketches: (*keys, sketch binary, n bigint).
+    """Per-key sketches of any kind: (*keys, sketch binary, n bigint), where
+    ``n`` counts the key's non-null values (a key whose values are all null
+    gets an empty sketch and ``n`` = 0; NULL is a key of its own).
 
-    Phase 1 groups by (*keys, salt) so a hot key (zipf conv_id) is split
-    across `salt` parallel tasks; phase 2 merges the ≤salt partials per key.
-    Only phase 1 shuffles raw rows — unavoidable for per-key results — and
-    phase 2 shuffles sketch blobs.  For >10^4 distinct keys prefer the
-    vectorized ``grouped_hll`` (applyInPandas costs ~1 ms of Python/group).
+    The shared grouped plan (``grouped_kll``, ``grouped_cms``,
+    ``grouped_theta``): project ``(*keys, col[, weight])`` in the JVM, one
+    key exchange into ``defaultParallelism`` partitions, then ONE
+    ``mapInArrow`` that stable-sorts each partition by key and builds one
+    sketch per key segment. Per-key sketches of the order-insensitive kinds
+    are byte-identical to a local build over the key's rows.
+
+    Skew — the one hot-key policy of the grouped builds: ``pre_reduce=
+    "auto"`` (or None) runs the memoized sampled probe
+    (``grouped_kll._skew_probe``); if a key plausibly has ≥
+    ``max(4096, blob bytes / 8)`` rows in an input partition, a map-side
+    combine turns each such (partition, key) run into a partial blob
+    before the exchange, cold rows pass raw, and the reduce stage merges
+    the partials in. True/False force the combine or the one-stage plan.
 
     ``weight_col``: per-row int64 weights for weighted sketches (tuple /
-    CMS / CountSketch) — "total tokens across distinct conversations PER
-    SEGMENT" is one grouped pass. Null keys/weights are filtered first so
-    weights stay aligned with the hashed keys (the sketches raise on
-    misalignment rather than corrupt silently).
+    CMS / CountSketch / t-digest; SHLL timestamps) — "total tokens across
+    distinct conversations PER SEGMENT" is one grouped pass. Rows with a
+    null value or weight are filtered first so weights stay aligned with
+    the values.
+
+    A cuckoo group that exceeds its capacity raises ``OverflowError`` (the
+    output has no overflow column; a dropped element would be a silent
+    false negative). ``salt`` is deprecated and ignored.
     """
-    keys = [key] if isinstance(key, str) else list(key)
-    key_ddl = ", ".join(f"{k} {df.schema[k].dataType.simpleString()}" for k in keys)
-    out_schema = f"{key_ddl}, sketch binary, n bigint"
-    # pandas renders a nullable int column as float64(NaN); remember the true
-    # Spark-side type so the kernel hashes int64, not doubles
-    col_is_int = df.schema[col].dataType.simpleString() in (
-        "tinyint", "smallint", "int", "bigint", "long",
-    )
-
-    def build_fn(pdf):
-        import pandas as pd
-
-        sk = spec.create()
-        column = pa.Array.from_pandas(pdf[col])
-        if col_is_int and pa.types.is_floating(column.type):
-            column = column.cast(pa.int64())
-        _bind_funnel(sk, column)
-        if weight_col is not None:
-            import numpy as np
-
-            w = np.asarray(pdf["_w"], dtype=np.int64)
-            sk.update(column, weights=w)
-            overflow = 0
-        else:
-            overflow = _ingest_overflow(sk, column)
-        if overflow:
-            # the grouped output schema has no overflow column, so a group
-            # exceeding a cuckoo's capacity must fail LOUDLY — dropping the
-            # count would be silent false negatives (size the capacity for
-            # the largest group, or use bloom/hll for unbounded groups)
-            key_vals = tuple(pdf[k].iloc[0] for k in keys)
-            raise OverflowError(
-                f"cuckoo capacity overflow in group {key_vals}: "
-                f"{overflow} elements did not fit"
-            )
-        n = len(column) - column.null_count
-        row = {k: [pdf[k].iloc[0]] for k in keys}
-        row.update({"sketch": [sk.to_bytes()], "n": [n]})
-        return pd.DataFrame(row)
-
-    def merge_fn(pdf):
-        import pandas as pd
-
-        acc, n, _ = fold_sketch_rows(
-            ((blob, cnt, 0) for blob, cnt in zip(pdf["sketch"], pdf["n"])),
-            dedup=_spec_dedup(spec),
+    if salt is not None:
+        warnings.warn(
+            "build_grouped(salt=...) has no effect: hot keys take the "
+            "map-side combine of pre_reduce instead",
+            DeprecationWarning,
+            stacklevel=2,
         )
-        row = {k: [pdf[k].iloc[0]] for k in keys}
-        row.update({"sketch": [acc.to_bytes()], "n": [n]})
-        return pd.DataFrame(row)
-
-    if weight_col is not None:
-        base = df.select(
-            *keys, col, F.col(weight_col).cast("long").alias("_w")
-        ).filter(F.col(col).isNotNull() & F.col("_w").isNotNull())
-    else:
-        base = df.select(*keys, col)
-    salted = base.withColumn(
-        "_salt", F.coalesce(F.pmod(F.xxhash64(F.col(col)), F.lit(salt)), F.lit(0))
+    keys = [key] if isinstance(key, str) else list(key)
+    # internal names cannot collide with a caller's column (e.g. a key "k")
+    aliases = [f"__gp_k{i}" for i in range(len(keys))]
+    projected = [F.col(k).alias(a) for k, a in zip(keys, aliases)] + [F.col(col).alias(_GP_V)]
+    weighted = weight_col is not None
+    if weighted:
+        projected.append(F.col(weight_col).cast("long").alias(_GP_W))
+    narrow = df.select(*projected)
+    if weighted:
+        narrow = narrow.filter(F.col(_GP_V).isNotNull() & F.col(_GP_W).isNotNull())
+    out_names = keys + ["sketch", "n"]
+    out_schema = StructType(
+        [StructField(k, df.schema[k].dataType) for k in keys]
+        + [StructField("sketch", BinaryType()), StructField("n", LongType())]
     )
-    phase1 = salted.groupBy(*keys, "_salt").applyInPandas(build_fn, out_schema)
-    if salt <= 1:
-        return phase1
-    return phase1.groupBy(*keys).applyInPandas(merge_fn, out_schema)
+    # a partial only pays once the raw rows (≥ 8 B each) outweigh its blob
+    hot_threshold = max(4096, len(spec.create().to_bytes()) // 8)
+    if pre_reduce in (None, "auto"):
+        from .grouped_kll import _skew_probe
+
+        pre_reduce = _skew_probe(narrow, hot_threshold, aliases)
+    if not pre_reduce:
+        return repartition_by_key(narrow, None, aliases).mapInArrow(
+            _grouped_build_stage(spec, len(keys), weighted, out_names), out_schema
+        )
+    mixed_names = narrow.columns + [_GP_S, _GP_C]
+    mixed = narrow.mapInArrow(
+        _grouped_prereduce_stage(spec, len(keys), weighted, hot_threshold, mixed_names),
+        StructType(
+            narrow.schema.fields
+            + [StructField(_GP_S, BinaryType()), StructField(_GP_C, LongType())]
+        ),
+    )
+    return repartition_by_key(mixed, None, aliases).mapInArrow(
+        _grouped_merge_stage(spec, len(keys), weighted, out_names), out_schema
+    )

@@ -199,6 +199,15 @@ def frozen_lookup_udf(spark: SparkSession, frozen: DataFrame, shards: int):
     return lookup
 
 
+def _blob_groups(blobs: pd.Series):
+    """(blob bytes, row mask) per distinct non-null blob of a batch: one
+    ``pd.factorize`` over the column (NULL → −1, skipped), not a byte
+    compare of every row against every distinct blob."""
+    codes, uniq = pd.factorize(blobs)
+    for code, blob in enumerate(uniq):
+        yield bytes(blob), codes == code
+
+
 @pandas_udf(BooleanType())
 def _blob_probe(blobs: pd.Series, hashes: pd.Series) -> pd.Series:
     """(blob, prehash) → membership; rows group by distinct blob so the
@@ -209,12 +218,10 @@ def _blob_probe(blobs: pd.Series, hashes: pd.Series) -> pd.Series:
     h = hashes.to_numpy(dtype=np.int64, na_value=0)
     isnull = hashes.isna().to_numpy()
     out = np.zeros(len(h), dtype=bool)
-    keys = blobs.map(lambda b: None if b is None else bytes(b))
-    for kb in keys.dropna().unique():
-        sk = _cached_sketch(kb)
-        m = (keys == kb).to_numpy(dtype=bool) & ~isnull
+    for blob, m in _blob_groups(blobs):
+        m &= ~isnull
         hu = h[m].view(np.uint64)
-        out[m] = sk.contains_hashes(hu, hu)
+        out[m] = _cached_sketch(blob).contains_hashes(hu, hu)
     return pd.Series(out)
 
 
@@ -227,11 +234,9 @@ def _blob_lookup(blobs: pd.Series, hashes: pd.Series) -> pd.Series:
     h = hashes.to_numpy(dtype=np.int64, na_value=0)
     isnull = hashes.isna().to_numpy()
     out = np.full(len(h), np.nan, dtype=np.float64)
-    keys = blobs.map(lambda b: None if b is None else bytes(b))
-    for kb in keys.dropna().unique():
-        sk = _cached_sketch(kb)
-        m = (keys == kb).to_numpy(dtype=bool) & ~isnull
-        found, vals = sk.lookup_hashes(h[m].view(np.uint64))
+    for blob, m in _blob_groups(blobs):
+        m &= ~isnull
+        found, vals = _cached_sketch(blob).lookup_hashes(h[m].view(np.uint64))
         out[m] = np.where(found, vals.astype(np.float64), np.nan)
     return pd.Series(out).astype("Int64")
 

@@ -2,8 +2,8 @@
 vectorized across ALL keys in a partition (the frequency sibling of
 operators/grouped_hll.py — same one-stage plan, one scatter pass).
 
-Why: `build_grouped` with a CMS spec pays ~1 ms of applyInPandas Python per
-group — wrong at 10^6+ keys. CMS counts are additive, so every group in a
+Why: `build_grouped` with a CMS spec builds one sketch object per group in a
+Python loop — wrong at 10^6+ keys. CMS counts are additive, so every group in a
 partition can be updated simultaneously:
 
   1. project (key, value) in the JVM; by default one sampled skew probe

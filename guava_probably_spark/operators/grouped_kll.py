@@ -4,8 +4,8 @@ loop (no applyInPandas).
 
 Why not fully vectorized like grouped_hll/grouped_cms: KLL compaction is a
 sequential level process, so groups can't share one scatter. But the
-1 ms/group cost of `build_grouped` is applyInPandas overhead (pandas
-groupby + serialization), not sketch math. This operator:
+~1 ms/group cost the generic grouped build once paid was applyInPandas
+overhead (pandas groupby + serialization), not sketch math. This operator:
 
   1. select (key, value→float64), drop nulls — narrow rows, the shuffle
      carries 8 bytes + key, never the payload;
@@ -263,8 +263,9 @@ _PROBE_CACHE: dict = {}  # (plan semanticHash, threshold) -> bool
 _PROBE_CACHE_CAP = 256
 
 
-def _skew_probe(narrow: DataFrame, hot_threshold: int) -> bool:
-    """Eager sampled skew detection: does any key plausibly ship
+def _skew_probe(narrow: DataFrame, hot_threshold: int, keys=("k",)) -> bool:
+    """Eager sampled skew detection: does any key (the ``keys`` columns of
+    ``narrow``, ``k`` by default) plausibly ship
     ≥ ``hot_threshold`` rows PER INPUT PARTITION (the regime where a
     map-side partial actually compresses)? One cheap JVM-side job (sample →
     partial-agg count → limit 1). The cutoff assumes a hot key's rows
@@ -300,7 +301,7 @@ def _skew_probe(narrow: DataFrame, hot_threshold: int) -> bool:
     )
     hot = (
         narrow.sample(fraction=_SKEW_PROBE_FRACTION, seed=42)
-        .groupBy("k")
+        .groupBy(*keys)
         .count()
         .where(F.col("count") >= cutoff)
         .limit(1)

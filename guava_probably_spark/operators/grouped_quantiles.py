@@ -1,8 +1,8 @@
 """Exact grouped quantiles at high key cardinality — vectorized across ALL
 keys in a partition (the order-statistics sibling of operators/grouped_hll.py).
 
-The sketch path (`build_grouped` with KLL/t-digest via applyInPandas) pays
-~1 ms of Python per group — wrong at 10^8 conv_ids. When per-key exact
+The sketch path (`build_grouped` / `grouped_kll` with KLL/t-digest) pays a
+Python sketch build per group — wrong at 10^8 conv_ids. When per-key exact
 quantiles are wanted (bounded rows per key, e.g. turns per conversation),
 one narrow shuffle of (key, float64) plus ONE lexsort per partition answers
 every requested quantile for every key simultaneously:

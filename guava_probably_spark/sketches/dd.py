@@ -40,7 +40,7 @@ range, so collapse never fires on real data.
 
 Distributed posture: same as KLL/t-digest — per-partition partial sketches
 built vectorized over Arrow batches, tree-merged as KB blobs; grouped
-builds ride the generic salted/two-phase grouped builder unchanged.
+builds ride the generic grouped builder (`build_grouped`) unchanged.
 """
 
 from __future__ import annotations

@@ -47,7 +47,7 @@ def synth_transcripts(spark: SparkSession, rows: int, seed: int = 42) -> DataFra
     never bottlenecks the benchmark.  Shape matches BASELINE.json:15:
     (conv_id string, turn_idx int, role string, text string, tool string,
     ts timestamp).  conv_id frequency is skewed (power-law-ish via xxhash64
-    bit tricks) to exercise the salted grouped path.
+    bit tricks) to exercise the grouped hot-key path.
     """
     n_convs = max(1, rows // 10)
     df = spark.range(rows)

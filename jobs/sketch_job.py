@@ -63,7 +63,6 @@ def main() -> None:
     ap.add_argument("--param", action="append", default=[], help="k=v, repeatable")
     ap.add_argument("--checkpoint", default=None, help="resumable per-file partials dir")
     ap.add_argument("--output", default=None, help="blob file (global) / parquet dir (grouped)")
-    ap.add_argument("--salt", type=int, default=8)
     ap.add_argument(
         "--window-order",
         default=None,
@@ -106,7 +105,7 @@ def main() -> None:
         if args.kind == "hll":
             out = grouped_hll(df, args.key, args.col, **spec.params)
         else:
-            out = build_grouped(df, args.key, args.col, spec, salt=args.salt)
+            out = build_grouped(df, args.key, args.col, spec)
         if args.output:
             out.write.mode("overwrite").parquet(args.output)
             status["output"] = args.output

@@ -72,12 +72,14 @@ def main() -> None:
         fmt(merged),
     ))
 
-    g = build_grouped(events, "event_type", "user_id", SketchSpec("hll", {"p": 12}), salt=4)
+    g = build_grouped(events, "event_type", "user_id", SketchSpec("hll", {"p": 12}))
     sections.append((
-        "Grouped build (salted two-phase)",
-        "Phase 1 groups on (key, salt) so a hot key is built by `salt` "
-        "tasks; phase 2 merges per key. Both phases shuffle only "
-        "(key, blob) rows.",
+        "Grouped build (one key exchange, one Python stage)",
+        "The JVM projects (key, value); ONE Exchange co-locates each key in "
+        "`defaultParallelism` partitions and ONE `MapInArrow` sorts each "
+        "partition by key and builds a sketch per key segment. A hot key "
+        "(sampled probe) adds a map-side `MapInArrow` combine below the "
+        "Exchange.",
         fmt(g),
     ))
 
@@ -156,7 +158,7 @@ def main() -> None:
 
     for i in range(2):
         half = events.filter(F.pmod(F.col("event_id"), F.lit(2)) == i)
-        gh = build_grouped(half, "event_type", "user_id", SketchSpec("hll", {"p": 12}), salt=2)
+        gh = build_grouped(half, "event_type", "user_id", SketchSpec("hll", {"p": 12}))
         spark.sql(f"DROP TABLE IF EXISTS plans_half_{i}")
         write_bucketed_sketches(gh, f"plans_half_{i}", "event_type", buckets=4,
                                 path=f"/tmp/gps-plans-warehouse/h{i}")

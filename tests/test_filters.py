@@ -352,3 +352,32 @@ def test_sketch_cache_keys_by_blob_bytes_not_hash():
     finally:
         gf._SKETCH_CACHE.clear()
         gf._SKETCH_CACHE_BYTES = 0
+
+
+def test_sketch_cache_holds_64_shards_without_redecoding(monkeypatch):
+    """A frozen filter's 64 shards fit the byte cap, so two passes over
+    them decode each blob once (a 16-entry count cap missed every lookup:
+    128 decodes)."""
+    import pyarrow as pa
+
+    from guava_probably_spark import functions as gf
+    from guava_probably_spark.sketches import Sketch
+
+    blobs = []
+    for shard in range(64):
+        sk = BloomSketch(1000, 0.01)
+        sk.update(pa.array([f"m{shard}"]))
+        blobs.append(sk.to_bytes())
+    decodes = []
+    real = Sketch.from_bytes
+    monkeypatch.setattr(gf.Sketch, "from_bytes", lambda b: decodes.append(1) or real(b))
+    gf._SKETCH_CACHE.clear()
+    gf._SKETCH_CACHE_BYTES = 0
+    try:
+        for _ in range(2):
+            for shard, blob in enumerate(blobs):
+                assert gf._cached_sketch(blob).might_contain(f"m{shard}")
+        assert len(decodes) == 64
+    finally:
+        gf._SKETCH_CACHE.clear()
+        gf._SKETCH_CACHE_BYTES = 0
