@@ -46,7 +46,10 @@ def _cached_sketch(blob: bytes) -> Sketch:
         # insertion order) — clearing everything would thrash when two
         # large filters alternate in one worker: each miss would evict the
         # other live filter and every batch would re-pay its full decode
-        while _SKETCH_CACHE and _SKETCH_CACHE_BYTES + 2 * len(blob) > _SKETCH_CACHE_MAX_BYTES:
+        while (
+            _SKETCH_CACHE
+            and _SKETCH_CACHE_BYTES + 2 * len(blob) > _SKETCH_CACHE_MAX_BYTES
+        ):
             old = next(iter(_SKETCH_CACHE))
             _SKETCH_CACHE.pop(old)
             _SKETCH_CACHE_BYTES -= 2 * len(old)

@@ -43,10 +43,11 @@ def repartition_by_key(df, partitions: int | None, keys=("k",)):
     """The one reduce-partition rule of the grouped builds: co-locate each
     key (the ``keys`` columns, ``k`` by default) in ``partitions``
     partitions when the caller asks for a count, else in
-    ``defaultParallelism`` partitions — one wave of Python tasks. Neither ``spark.sql.shuffle.partitions`` nor AQE decides it:
-    Spark's default of 200 partitions runs 200 Python tasks per build
-    (about 10× slower on 25 k rows and 4 cores), and AQE coalescing by
-    bytes can leave fewer tasks than cores (1.2–1.5× slower there)."""
+    ``defaultParallelism`` partitions — one wave of Python tasks. Neither
+    ``spark.sql.shuffle.partitions`` nor AQE decides it: Spark's default
+    of 200 partitions runs 200 Python tasks per build (about 10× slower on
+    25 k rows and 4 cores), and AQE coalescing by bytes can leave fewer
+    tasks than cores (1.2–1.5× slower there)."""
     n = partitions or df.sparkSession.sparkContext.defaultParallelism
     return df.repartition(n, *keys)
 

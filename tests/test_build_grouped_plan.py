@@ -68,7 +68,8 @@ def test_hot_key_auto_takes_map_side_combine_with_local_blobs(spark):
         auto = build_grouped(df, "g", "v", spec)
         plan = _plan(auto)
         assert plan.count("MapInArrow") == 2, plan  # combine, exchange, merge
-        assert _plan(build_grouped(df, "g", "v", spec, pre_reduce=None)).count("MapInArrow") == 2
+        none = build_grouped(df, "g", "v", spec, pre_reduce=None)  # None means "auto"
+        assert _plan(none).count("MapInArrow") == 2
         got = _blobs(auto, "g")
         assert got == _blobs(build_grouped(df, "g", "v", spec, pre_reduce=False), "g")
         assert len(got) == n_cold + 1
@@ -79,7 +80,8 @@ def test_hot_key_auto_takes_map_side_combine_with_local_blobs(spark):
 
 def test_null_key_is_a_group_and_all_null_values_give_n_zero(spark):
     df = spark.createDataFrame(
-        [("a", "x"), ("a", "y"), (None, "x"), (None, "z"), (None, None), ("b", None), ("b", None)],
+        [("a", "x"), ("a", "y"), (None, "x"), (None, "z"), (None, None)]
+        + [("b", None), ("b", None)],
         "g string, v string",
     )
     got = _blobs(build_grouped(df, "g", "v", HLL), "g")
@@ -119,7 +121,8 @@ def test_weight_col_matches_local_weighted_builds(spark):
 
 def test_salt_warns_and_leaves_output_unchanged(spark):
     df = spark.range(3_000).select(
-        (F.col("id") % 5).alias("g"), F.concat(F.lit("v"), (F.col("id") % 211).cast("string")).alias("v")
+        (F.col("id") % 5).alias("g"),
+        F.concat(F.lit("v"), (F.col("id") % 211).cast("string")).alias("v"),
     )
     with pytest.warns(DeprecationWarning, match="salt"):
         salted = build_grouped(df, "g", "v", BLOOM, salt=8)
