@@ -14,9 +14,8 @@ through mapInArrow because we select the hashed column first (verified by
 plans.assert_no_raw_shuffle / tests).
 
 Grouped (per-key) sketches of any kind (``build_grouped``) run the shared
-grouped plan: one key exchange and one Python stage, with a map-side combine
-when the sampled skew probe finds a hot key (BASELINE.json:14 "skew handled
-explicitly"), so a hot conv_id ships partial blobs instead of its rows.
+grouped plan: one key exchange, a JVM sort of each reduce partition by key,
+and one Python stage that streams the sorted rows into one sketch per key.
 """
 
 from __future__ import annotations
@@ -556,24 +555,12 @@ def collect_sketches_files(
 
 # ---------------------------------------------------------------------------
 # Grouped (per-key) sketches of any kind — the shared grouped plan
-# (operators/grouped_kll): JVM projection, an optional map-side combine for
-# hot keys, one key exchange, ONE Python stage that sorts each partition by
-# key and builds one sketch per key segment.
+# (operators/grouped_kll): JVM projection, one key exchange, a JVM sort of
+# each reduce partition by key, and ONE Python stage that streams the sorted
+# batches and builds one sketch per key run.
 # ---------------------------------------------------------------------------
 
-_GP_V, _GP_W, _GP_S, _GP_C = "__gp_v", "__gp_w", "__gp_s", "__gp_c"
-
-
-def _gather_columns(batches: Iterator[pa.RecordBatch]) -> list[pa.Array] | None:
-    """A partition's batches as one contiguous array per column (None when
-    the partition is empty)."""
-    batch_list = [b for b in batches if b.num_rows]
-    if not batch_list:
-        return None
-    return [
-        pa.chunked_array([b.column(i) for b in batch_list]).combine_chunks()
-        for i in range(batch_list[0].num_columns)
-    ]
+_GP_V, _GP_W = "__gp_v", "__gp_w"
 
 
 def _nan_to_null(values: pa.Array) -> pa.Array:
@@ -586,29 +573,21 @@ def _nan_to_null(values: pa.Array) -> pa.Array:
     return values
 
 
-def _key_segments(
-    key_cols: list[pa.Array], then: pa.Array | None = None
-) -> tuple[np.ndarray, np.ndarray]:
-    """Stable sort of a partition by its (possibly composite) key → (order,
-    bounds): ``order`` lists the row indices key by key, in arrival order
-    within a key (then by ``then``, when given, which does not split runs),
-    and key run i is ``order[bounds[i]:bounds[i + 1]]``. NULL is its own
-    key and NaN keys group together. ``pc.sort_indices`` over the columns
-    rather than ``dictionary_encode``, which has no struct kernel."""
+def _key_starts(key_cols: list[pa.Array], prev: list[pa.Array] | None) -> np.ndarray:
+    """Per row of a key-sorted batch: does a new key start there? Row 0 is
+    compared with ``prev`` (the previous batch's last keys, one element per
+    column) and starts a key when there is none. NULL is a key of its own
+    and NaN keys are one key, as in Spark's sort and GROUP BY."""
     import pyarrow.compute as pc
 
-    cols = {f"k{i}": c for i, c in enumerate(key_cols)}
-    if then is not None:
-        cols["then"] = then
-    order = pc.sort_indices(
-        pa.table(cols), sort_keys=[(name, "ascending") for name in cols]
-    )
-    n = len(order)
+    n = len(key_cols[0])
     starts = np.zeros(n, dtype=bool)
-    starts[0] = True
-    for c in key_cols:
-        s = c.take(order)
-        a, b = s.slice(1), s.slice(0, n - 1)
+    if prev is None:
+        starts[0] = True
+    for i, c in enumerate(key_cols):
+        if prev is not None:
+            c = pa.concat_arrays([prev[i], c])
+        a, b = c.slice(1), c.slice(0, len(c) - 1)
         diff = pc.fill_null(pc.not_equal(a, b), False).to_numpy(zero_copy_only=False)
         if pa.types.is_floating(c.type):
             both_nan = pc.and_(pc.is_nan(a), pc.is_nan(b))
@@ -616,166 +595,70 @@ def _key_segments(
         diff |= a.is_null().to_numpy(zero_copy_only=False) != b.is_null().to_numpy(
             zero_copy_only=False
         )
-        starts[1:] |= diff
-    bounds = np.append(np.flatnonzero(starts), n)
-    return order.to_numpy(zero_copy_only=False), bounds
+        starts[n - len(diff) :] |= diff
+    return starts
 
 
-def _sorted_inputs(
-    cols: list[pa.Array], n_keys: int, weighted: bool, order: np.ndarray
-) -> tuple[pa.Array, np.ndarray | None]:
-    """The value column (and weights) after the key columns, in ``order``."""
-    values = _nan_to_null(cols[n_keys]).take(pa.array(order))
-    w = cols[n_keys + 1].to_numpy(zero_copy_only=False)[order] if weighted else None
-    return values, w
-
-
-def _segment_sketch(
-    spec: SketchSpec, values: pa.Array, w: np.ndarray | None, lo: int, hi: int
-) -> tuple[Sketch, int, int]:
-    """One key's rows ``values[lo:hi]`` (weights ``w[lo:hi]``) → (sketch,
-    non-null rows, cuckoo overflow)."""
-    sk = spec.create()
-    _bind_funnel(sk, values)
-    seg = values.slice(lo, hi - lo)
-    if w is None:
-        overflow = _ingest_overflow(sk, seg)
-    else:
-        sk.update(seg, weights=w[lo:hi])
-        overflow = 0
-    return sk, len(seg) - seg.null_count, overflow
-
-
-def _overflow_error(key_cols: list[pa.Array], row: int, overflow: int) -> OverflowError:
+def _overflow_error(key: list[pa.Array], overflow: int) -> OverflowError:
     # the grouped output schema has no overflow column, so a group exceeding
     # a cuckoo's capacity must fail LOUDLY — dropping the count would be
     # silent false negatives (size the capacity for the largest group, or use
     # bloom/hll for unbounded groups)
-    key_vals = tuple(c[int(row)].as_py() for c in key_cols)
+    key_vals = tuple(c[0].as_py() for c in key)
     return OverflowError(
         f"cuckoo capacity overflow in group {key_vals}: "
         f"{overflow} elements did not fit"
     )
 
 
-def _grouped_batch(key_cols, rows: np.ndarray, blobs, ns, names) -> pa.RecordBatch:
-    idx = pa.array(rows)
+def _grouped_batch(keys: list[list[pa.Array]], blobs, ns, names) -> pa.RecordBatch:
     return pa.RecordBatch.from_arrays(
-        [c.take(idx) for c in key_cols]
+        [pa.concat_arrays([k[i] for k in keys]) for i in range(len(keys[0]))]
         + [pa.array(blobs, type=pa.binary()), pa.array(ns, type=pa.int64())],
         names=names,
     )
 
 
 def _grouped_build_stage(spec: SketchSpec, n_keys: int, weighted: bool, names):
-    """The one Python stage: per key segment of the partition, build a
-    sketch from its rows."""
+    """The one Python stage. Each reduce partition arrives sorted by key, so
+    the stage streams it: the open key's sketch is carried across batch
+    boundaries and emitted when the next key starts. It holds one batch and
+    one sketch at a time, never the whole partition."""
 
     def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        cols = _gather_columns(batches)
-        if cols is None:
-            return
-        key_cols = cols[:n_keys]
-        order, bounds = _key_segments(key_cols)
-        values, w = _sorted_inputs(cols, n_keys, weighted, order)
-        blobs, ns = [], []
-        for lo, hi in zip(bounds[:-1], bounds[1:]):
-            sk, n, overflow = _segment_sketch(spec, values, w, lo, hi)
-            if overflow:
-                raise _overflow_error(key_cols, order[lo], overflow)
-            blobs.append(sk.to_bytes())
-            ns.append(n)
-        yield _grouped_batch(key_cols, order[bounds[:-1]], blobs, ns, names)
-
-    return fn
-
-
-def _grouped_prereduce_stage(
-    spec: SketchSpec, n_keys: int, weighted: bool, hot_threshold: int, names
-):
-    """Map-side hot-key combine, value-typed twin of grouped_kll's: per
-    INPUT partition, a key with ≥ ``hot_threshold`` rows becomes one partial
-    blob row (``__gp_s``, with its non-null row count in ``__gp_c``); colder
-    rows pass through raw with null ``__gp_s``/``__gp_c``."""
-
-    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        batch_list = [b for b in batches if b.num_rows]
-        cols = _gather_columns(iter(batch_list))
-        if cols is None:
-            return
-        key_cols = cols[:n_keys]
-        order, bounds = _key_segments(key_cols)
-        run = np.diff(bounds)
-        hot = np.flatnonzero(run >= hot_threshold)
-
-        def raw(columns: list[pa.Array]) -> pa.RecordBatch:
-            n = len(columns[0])
-            return pa.RecordBatch.from_arrays(
-                columns + [pa.nulls(n, pa.binary()), pa.nulls(n, pa.int64())],
-                names=names,
-            )
-
-        if not len(hot):  # nothing hot here: forward the rows untouched
-            for b in batch_list:
-                yield raw(b.columns)
-            return
-        row_hot = np.repeat(run >= hot_threshold, run)  # per sorted row
-        cold = np.sort(order[~row_hot])  # arrival order
-        if len(cold):
-            yield raw([c.take(pa.array(cold)) for c in cols])
-        values, w = _sorted_inputs(cols, n_keys, weighted, order)
-        blobs, ns = [], []
-        for i in hot:  # few by definition (≥ hot_threshold rows each)
-            sk, n, overflow = _segment_sketch(spec, values, w, bounds[i], bounds[i + 1])
-            if overflow:
-                raise _overflow_error(key_cols, order[bounds[i]], overflow)
-            blobs.append(sk.to_bytes())
-            ns.append(n)
-        first = pa.array(order[bounds[hot]])
-        m = len(hot)
-        yield pa.RecordBatch.from_arrays(
-            [c.take(first) for c in key_cols]
-            + [pa.nulls(m, c.type) for c in cols[n_keys:]]
-            + [pa.array(blobs, type=pa.binary()), pa.array(ns, type=pa.int64())],
-            names=names,
-        )
-
-    return fn
-
-
-def _grouped_merge_stage(spec: SketchSpec, n_keys: int, weighted: bool, names):
-    """Reduce side of the combine: per key, ingest the raw rows, then merge
-    the partial blobs in (``fold_sketch_rows``, so cuckoo merge overflow is
-    counted — and raised — like build overflow)."""
-    dedup = _spec_dedup(spec)
-
-    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        cols = _gather_columns(batches)
-        if cols is None:
-            return
-        key_cols = cols[:n_keys]
-        partial, counts = cols[-2], cols[-1]
-        is_part = partial.is_valid()
-        # raw rows first within a key, then its partials
-        order, bounds = _key_segments(key_cols, then=is_part)
-        values, w = _sorted_inputs(cols, n_keys, weighted, order)
-        part_sorted = is_part.to_numpy(zero_copy_only=False)[order]
-        blob_sorted = partial.take(pa.array(order))
-        count_sorted = counts.to_numpy(zero_copy_only=False)[order]
-        blobs, ns = [], []
-        for lo, hi in zip(bounds[:-1], bounds[1:]):
-            n_raw = int((~part_sorted[lo:hi]).sum())
-            rows = [_segment_sketch(spec, values, w, lo, lo + n_raw)] if n_raw else []
-            rows.extend(
-                (blob_sorted[j].as_py(), int(count_sorted[j]), 0)
-                for j in range(lo + n_raw, hi)
-            )
-            acc, n, overflow = fold_sketch_rows(rows, dedup=dedup)
-            if overflow:
-                raise _overflow_error(key_cols, order[lo], overflow)
-            blobs.append(acc.to_bytes())
-            ns.append(n)
-        yield _grouped_batch(key_cols, order[bounds[:-1]], blobs, ns, names)
+        prev = None  # the keys of the last row seen
+        key, sk, n = None, None, 0  # the open key: its keys, sketch, count
+        keys, blobs, ns = [], [], []  # finished keys not yet emitted
+        for batch in batches:
+            if not batch.num_rows:
+                continue
+            key_cols = batch.columns[:n_keys]
+            starts = _key_starts(key_cols, prev)
+            prev = [c.slice(batch.num_rows - 1) for c in key_cols]
+            values = _nan_to_null(batch.column(n_keys))
+            w = batch.column(n_keys + 1).to_numpy(zero_copy_only=False) if weighted else None
+            cuts = np.append(np.union1d(np.flatnonzero(starts), [0]), batch.num_rows)
+            for lo, hi in zip(cuts[:-1], cuts[1:]):
+                if starts[lo]:
+                    if sk is not None:
+                        keys.append(key)
+                        blobs.append(sk.to_bytes())
+                        ns.append(n)
+                    key, sk, n = [c.slice(lo, 1) for c in key_cols], spec.create(), 0
+                    _bind_funnel(sk, values)
+                seg = values.slice(lo, hi - lo)
+                if w is None:
+                    overflow = _ingest_overflow(sk, seg)
+                    if overflow:
+                        raise _overflow_error(key, overflow)
+                else:
+                    sk.update(seg, weights=w[lo:hi])
+                n += len(seg) - seg.null_count
+            if blobs:
+                yield _grouped_batch(keys, blobs, ns, names)
+                keys, blobs, ns = [], [], []
+        if sk is not None:
+            yield _grouped_batch([key], [sk.to_bytes()], [n], names)
 
     return fn
 
@@ -787,7 +670,6 @@ def build_grouped(
     spec: SketchSpec,
     salt: int | None = None,
     weight_col: str | None = None,
-    pre_reduce: bool | str | None = "auto",
 ) -> DataFrame:
     """Per-key sketches of any kind: (*keys, sketch binary, n bigint), where
     ``n`` counts the key's non-null values (a key whose values are all null
@@ -795,18 +677,15 @@ def build_grouped(
 
     The shared grouped plan (``grouped_kll``, ``grouped_cms``,
     ``grouped_theta``): project ``(*keys, col[, weight])`` in the JVM, one
-    key exchange into ``defaultParallelism`` partitions, then ONE
-    ``mapInArrow`` that stable-sorts each partition by key and builds one
-    sketch per key segment. Per-key sketches of the order-insensitive kinds
-    are byte-identical to a local build over the key's rows.
+    key exchange into ``defaultParallelism`` partitions, a JVM sort of each
+    partition by key (it spills to disk, so a partition of any size fits),
+    then ONE ``mapInArrow`` that streams the sorted batches and builds one
+    sketch per key run. Per-key sketches of the order-insensitive kinds are
+    byte-identical to a local build over the key's rows.
 
-    Skew — the one hot-key policy of the grouped builds: ``pre_reduce=
-    "auto"`` (or None) runs the memoized sampled probe
-    (``grouped_kll._skew_probe``); if a key plausibly has ≥
-    ``max(4096, blob bytes / 8)`` rows in an input partition, a map-side
-    combine turns each such (partition, key) run into a partial blob
-    before the exchange, cold rows pass raw, and the reduce stage merges
-    the partials in. True/False force the combine or the one-stage plan.
+    Skew: the policy of ``grouped_hll``'s default — no probe and no map-side
+    combine. A hot key's rows stream through one sketch in one reduce task,
+    so it costs that task time, not memory.
 
     ``weight_col``: per-row int64 weights for weighted sketches (tuple /
     CMS / CountSketch / t-digest; SHLL timestamps) — "total tokens across
@@ -820,8 +699,8 @@ def build_grouped(
     """
     if salt is not None:
         warnings.warn(
-            "build_grouped(salt=...) has no effect: hot keys take the "
-            "map-side combine of pre_reduce instead",
+            "build_grouped(salt=...) has no effect: each key is built in "
+            "one reduce task",
             DeprecationWarning,
             stacklevel=2,
         )
@@ -835,29 +714,15 @@ def build_grouped(
     narrow = df.select(*projected)
     if weighted:
         narrow = narrow.filter(F.col(_GP_V).isNotNull() & F.col(_GP_W).isNotNull())
-    out_names = keys + ["sketch", "n"]
     out_schema = StructType(
         [StructField(k, df.schema[k].dataType) for k in keys]
         + [StructField("sketch", BinaryType()), StructField("n", LongType())]
     )
-    # a partial only pays once the raw rows (≥ 8 B each) outweigh its blob
-    hot_threshold = max(4096, len(spec.create().to_bytes()) // 8)
-    if pre_reduce in (None, "auto"):
-        from .grouped_kll import _skew_probe
-
-        pre_reduce = _skew_probe(narrow, hot_threshold, aliases)
-    if not pre_reduce:
-        return repartition_by_key(narrow, None, aliases).mapInArrow(
-            _grouped_build_stage(spec, len(keys), weighted, out_names), out_schema
+    return (
+        repartition_by_key(narrow, None, aliases)
+        .sortWithinPartitions(*aliases)
+        .mapInArrow(
+            _grouped_build_stage(spec, len(keys), weighted, keys + ["sketch", "n"]),
+            out_schema,
         )
-    mixed_names = narrow.columns + [_GP_S, _GP_C]
-    mixed = narrow.mapInArrow(
-        _grouped_prereduce_stage(spec, len(keys), weighted, hot_threshold, mixed_names),
-        StructType(
-            narrow.schema.fields
-            + [StructField(_GP_S, BinaryType()), StructField(_GP_C, LongType())]
-        ),
-    )
-    return repartition_by_key(mixed, None, aliases).mapInArrow(
-        _grouped_merge_stage(spec, len(keys), weighted, out_names), out_schema
     )

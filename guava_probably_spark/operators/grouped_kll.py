@@ -263,9 +263,8 @@ _PROBE_CACHE: dict = {}  # (plan semanticHash, threshold) -> bool
 _PROBE_CACHE_CAP = 256
 
 
-def _skew_probe(narrow: DataFrame, hot_threshold: int, keys=("k",)) -> bool:
-    """Eager sampled skew detection: does any key (the ``keys`` columns of
-    ``narrow``, ``k`` by default) plausibly ship
+def _skew_probe(narrow: DataFrame, hot_threshold: int) -> bool:
+    """Eager sampled skew detection: does any key plausibly ship
     ≥ ``hot_threshold`` rows PER INPUT PARTITION (the regime where a
     map-side partial actually compresses)? One cheap JVM-side job (sample →
     partial-agg count → limit 1). The cutoff assumes a hot key's rows
@@ -301,7 +300,7 @@ def _skew_probe(narrow: DataFrame, hot_threshold: int, keys=("k",)) -> bool:
     )
     hot = (
         narrow.sample(fraction=_SKEW_PROBE_FRACTION, seed=42)
-        .groupBy(*keys)
+        .groupBy("k")
         .count()
         .where(F.col("count") >= cutoff)
         .limit(1)

@@ -76,10 +76,9 @@ def main() -> None:
     sections.append((
         "Grouped build (one key exchange, one Python stage)",
         "The JVM projects (key, value); ONE Exchange co-locates each key in "
-        "`defaultParallelism` partitions and ONE `MapInArrow` sorts each "
-        "partition by key and builds a sketch per key segment. A hot key "
-        "(sampled probe) adds a map-side `MapInArrow` combine below the "
-        "Exchange.",
+        "`defaultParallelism` partitions, a Sort orders each partition by "
+        "key, and ONE `MapInArrow` streams the sorted batches into one "
+        "sketch per key.",
         fmt(g),
     ))
 

@@ -1,9 +1,9 @@
 """``build_grouped`` (per-key sketches of any kind) on the shared grouped
-plan: one Python stage above one key exchange of ``defaultParallelism``
-partitions by default, the map-side combine when ``pre_reduce="auto"``
-finds a hot key, and the grouping semantics of the plan — NULL keys,
-all-null values, composite keys, weights, cuckoo overflow, and the
-deprecated ``salt``."""
+plan: one Python stage above a sort and one key exchange of
+``defaultParallelism`` partitions, a stage that streams each partition
+batch by batch, and the grouping semantics of the plan — NULL keys,
+all-null values, composite keys, weights, keys spanning batches, cuckoo
+overflow, and the deprecated ``salt``."""
 
 import re
 
@@ -50,13 +50,14 @@ def test_default_plan_is_one_python_stage_above_one_key_exchange(spark):
     assert "FlatMapGroupsInPandas" not in plan, plan
     assert plan.count("MapInArrow") == 1, plan
     assert plan.count("Exchange") == 1, plan
-    assert plan.index("MapInArrow") < plan.index("Exchange"), plan  # above it
+    # MapInArrow above a Sort of each partition above the Exchange
+    assert plan.index("MapInArrow") < plan.index("Sort") < plan.index("Exchange"), plan
     parts = re.findall(r"Exchange hashpartitioning\(__gp_k0#\d+, (\d+)\)", plan)
     assert parts == [str(cores)], plan
 
 
-def test_hot_key_auto_takes_map_side_combine_with_local_blobs(spark):
-    n_hot, n_cold = 40_000, 300  # hot: ≥ 2× 4096 rows in each of 4 partitions
+def test_hot_key_builds_in_the_one_stage_plan_with_local_blobs(spark):
+    n_hot, n_cold = 40_000, 300  # hot: 10,000 rows in each of 4 input partitions
     pdf = pd.DataFrame(
         {
             "g": ["hot"] * n_hot + [f"c{i}" for i in range(n_cold)],
@@ -65,13 +66,9 @@ def test_hot_key_auto_takes_map_side_combine_with_local_blobs(spark):
     )
     df = spark.createDataFrame(pdf).repartition(4)
     for spec in (BLOOM, HLL):
-        auto = build_grouped(df, "g", "v", spec)
-        plan = _plan(auto)
-        assert plan.count("MapInArrow") == 2, plan  # combine, exchange, merge
-        none = build_grouped(df, "g", "v", spec, pre_reduce=None)  # None means "auto"
-        assert _plan(none).count("MapInArrow") == 2
-        got = _blobs(auto, "g")
-        assert got == _blobs(build_grouped(df, "g", "v", spec, pre_reduce=False), "g")
+        out = build_grouped(df, "g", "v", spec)
+        assert _plan(out).count("MapInArrow") == 1  # no probe, no combine
+        got = _blobs(out, "g")
         assert len(got) == n_cold + 1
         for g in ("hot", "c0", "c299"):
             sub = list(pdf.v[pdf.g == g])
@@ -129,22 +126,76 @@ def test_salt_warns_and_leaves_output_unchanged(spark):
     assert _blobs(salted, "g") == _blobs(build_grouped(df, "g", "v", BLOOM), "g")
 
 
-@pytest.mark.parametrize("kw", [{}, {"pre_reduce": False}, {"pre_reduce": True}], ids=str)
-def test_cuckoo_overflow_raises_on_every_path(spark, kw):
-    """One 5,000-member group in a 1,000-slot cuckoo: no salted split can
-    hide the overflow any more (the salted build dropped the merge
-    overflow — 3,911 members then probed False with no error)."""
+def test_keys_spanning_many_small_batches_match_local_builds(spark):
+    """With 64-row Arrow batches every key is cut across batches; the
+    stage carries each open sketch over the cuts."""
+    rows = [(i % 5 if i % 11 else None, f"v{i * 7 % 331}") for i in range(3_000)]
+    df = spark.createDataFrame(rows, "g int, v string")
+    prev = spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch")
+    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "64")
+    try:
+        got = _blobs(build_grouped(df, "g", "v", BLOOM), "g")
+    finally:
+        spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", prev)
+    groups: dict = {}
+    for g, v in rows:
+        groups.setdefault((g,), []).append(v)
+    assert set(got) == set(groups)
+    for key, vals in groups.items():
+        assert got[key] == (_local(BLOOM, vals), len(vals)), key
+
+
+def test_stage_streams_sorted_batches_without_holding_the_partition():
+    """The stage emits a key as soon as the next one starts, before it
+    pulls any later batch, so a reduce task holds one batch (never a
+    concatenation of the partition, whose 32-bit string offsets would
+    overflow past 2 GiB). NULL and NaN keys run across the cuts too."""
+    from guava_probably_spark.operators.build import _grouped_build_stage
+
+    names = ["g", "h", "sketch", "n"]
+    keys = [None, None, 1.0, 1.0, 1.0, 1.0, 2.0, float("nan"), float("nan")]
+    subs = ["a", "a", "a", "a", "b", "b", "b", None, None]
+    vals = [f"v{i}" for i in range(len(keys))]
+    cuts = [0, 3, 5, 6, 8, 9]  # keys (1.0, "a") and (nan, None) span a cut
+    pulled = []
+
+    def batches():
+        for i, (lo, hi) in enumerate(zip(cuts[:-1], cuts[1:])):
+            pulled.append(i)
+            yield pa.RecordBatch.from_arrays(
+                [pa.array(keys[lo:hi], pa.float64()), pa.array(subs[lo:hi], pa.string()),
+                 pa.array(vals[lo:hi])],
+                names=["__gp_k0", "__gp_k1", "__gp_v"],
+            )
+
+    out = _grouped_build_stage(HLL, 2, False, names)(batches())
+    first = next(out)  # (None, "a") ends inside batch 0
+    assert first.to_pydict()["g"] == [None] and pulled == [0]
+    second = next(out)  # (1.0, "a") spans batches 0 and 1
+    assert second.to_pydict()["h"] == ["a"] and pulled == [0, 1]
+    rows = first.to_pylist() + second.to_pylist() + [r for b in out for r in b.to_pylist()]
+    assert pulled == [0, 1, 2, 3, 4]
+    got = [(r["g"], r["h"], r["sketch"], r["n"]) for r in rows]
+    assert got[:4] == [
+        (None, "a", _local(HLL, vals[0:2]), 2),
+        (1.0, "a", _local(HLL, vals[2:4]), 2),
+        (1.0, "b", _local(HLL, vals[4:6]), 2),
+        (2.0, "b", _local(HLL, vals[6:7]), 1),
+    ]
+    assert len(got) == 5 and np.isnan(got[4][0]) and got[4][1:] == (None, _local(HLL, vals[7:]), 2)
+
+
+def test_cuckoo_overflow_raises_across_batches(spark):
+    """One 5,000-member group in a 1,000-slot cuckoo, fed in 500-row
+    batches: the overflow raises once the group no longer fits (the salted
+    build dropped the merge overflow — 3,911 members then probed False with
+    no error)."""
     df = spark.createDataFrame([("g", f"v-{i}") for i in range(5_000)], "k string, v string")
     spec = SketchSpec("cuckoo", {"capacity": 1_000, "fpp": 0.01})
-    with pytest.raises(Exception, match="cuckoo capacity overflow"):
-        build_grouped(df, "k", "v", spec, **kw).collect()
-
-
-def test_cuckoo_overflow_in_the_combine_merge_raises(spark):
-    """Two hot partials that each fit but overflow when merged: the
-    reduce-side merge counts the overflow and raises."""
-    rows = [("g", f"v-{i}") for i in range(9_000)]
-    df = spark.createDataFrame(rows, "k string, v string").repartition(2)
-    spec = SketchSpec("cuckoo", {"capacity": 6_000, "fpp": 0.01})
-    with pytest.raises(Exception, match="cuckoo capacity overflow"):
-        build_grouped(df, "k", "v", spec, pre_reduce=True).collect()
+    prev = spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch")
+    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "500")
+    try:
+        with pytest.raises(Exception, match="cuckoo capacity overflow"):
+            build_grouped(df, "k", "v", spec).collect()
+    finally:
+        spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", prev)
