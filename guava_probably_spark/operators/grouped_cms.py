@@ -6,9 +6,9 @@ Why: `build_grouped` with a CMS spec builds one sketch object per group in a
 Python loop — wrong at 10^6+ keys. CMS counts are additive, so every group in a
 partition can be updated simultaneously:
 
-  1. project (key, value) in the JVM; by default one sampled skew probe
-     (grouped_kll._skew_probe, threshold 4096 rows per input partition, as
-     grouped_mode) decides whether any key is hot;
+  1. project (key, value) in the JVM; the shared driver's sampled skew
+     probe (_arrow_common.grouped_build, threshold 4096 rows per input
+     partition, as grouped_mode) decides whether any key is hot;
   2. repartition(key): the one unavoidable shuffle, into
      ``defaultParallelism`` partitions (one wave of Python tasks) unless
      ``partitions`` is given (_arrow_common.repartition_by_key);
@@ -18,10 +18,10 @@ partition can be updated simultaneously:
      sketches/cms.py:_buckets); ONE np.bincount per depth over the
      flattened (code, bucket) index updates every group's d×w matrix.
 
-With a hot key (or ``pre_reduce=True``) a map-side stage hashes first and
-collapses duplicate (key, value) rows into a count, so a hot key ships its
-DISTINCT values per input partition, not its row set. Without one, the
-exchange carries every (key, value) row once — no Python runs before it.
+With a hot key a map-side stage hashes first and collapses duplicate
+(key, value) rows into a count, so a hot key ships its DISTINCT values per
+input partition, not its row set. Without one, the exchange carries every
+(key, value) row once — no Python runs before it.
 
 Blobs are byte-identical to a local ``CmsSketch.to_bytes()`` of the same
 group (counts are order-independent), including the zlib rule above
@@ -43,65 +43,47 @@ from collections.abc import Iterator
 import numpy as np
 import pyarrow as pa
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame
 
-from ..sketches.base import KIND_CMS, MAGIC, VERSION, Sketch
+from ..sketches.base import FUNNEL_PREHASHED, KIND_CMS, MAGIC, VERSION, Sketch
 from ..sketches.cms import _SIGN_MASK, cms_geometry
-from ._arrow_common import funnel_for_spark_type, repartition_by_key
+from ._arrow_common import (
+    GroupedKind,
+    funnel_for_spark_type,
+    gather_keyed,
+    grouped_build,
+    hash_values,
+    int64_columns,
+    sort_dedup_key_hash,
+)
 
-_HASH2_SCHEMA_SUFFIX = "h1 bigint, h2 bigint, c bigint"
+
+def _hash_pairs(batches: Iterator[pa.RecordBatch]) -> Iterator[tuple]:
+    """The murmur3 front end with both halves: CMS depth rows need h2."""
+    return hash_values(batches, with_h2=True)
 
 
-def _hash2_prereduce_stage(col_idx: int):
+def _combine(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
     """Hash + map-side duplicate collapse: per (key, value) one output row
     carrying the pair's multiplicity. CMS updates are weighted-additive, so
     (h1, h2, c) reproduces c identical updates exactly."""
-
-    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        from ._arrow_common import gather_keyed_hashes, sort_dedup_key_hash
-
-        gathered = gather_keyed_hashes(batches, col_idx, with_h2=True)
-        if gathered is None:
-            return
-        uniq, codes, h1, h2 = gathered
-        # collapse duplicate (key, h1) runs; h2 rides along (same value ⇒
-        # same 128-bit hash, and a 64-bit h1 collision within one key is
-        # harmless — CMS would over-count that bucket pair identically)
-        orig_idx, sc, sh1, cnt = sort_dedup_key_hash(codes, h1)
-        yield pa.RecordBatch.from_arrays(
-            [
-                uniq.take(pa.array(sc)),
-                pa.array(sh1.view(np.int64)),
-                pa.array(h2[orig_idx].view(np.int64)),
-                pa.array(cnt.astype(np.int64)),
-            ],
-            names=["k", "h1", "h2", "c"],
-        )
-
-    return fn
-
-
-def _hash2_stage(col_idx: int):
-    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        from ..sketches.base import hash_column
-
-        for batch in batches:
-            key_arr = batch.column(0)
-            val = batch.column(col_idx)
-            if val.null_count:
-                keep = val.is_valid()
-                key_arr = key_arr.filter(keep)
-                val = val.drop_null()
-            if len(val) == 0:
-                continue
-            _, h1, h2 = hash_column(val)
-            ones = np.ones(len(val), dtype=np.int64)
-            yield pa.RecordBatch.from_arrays(
-                [key_arr, pa.array(h1.view(np.int64)), pa.array(h2.view(np.int64)), pa.array(ones)],
-                names=["k", "h1", "h2", "c"],
-            )
-
-    return fn
+    gathered = gather_keyed(_hash_pairs(batches))
+    if gathered is None:
+        return
+    uniq, codes, h1, h2 = gathered
+    # collapse duplicate (key, h1) runs; h2 rides along (same value ⇒ same
+    # 128-bit hash, and a 64-bit h1 collision within one key is harmless —
+    # CMS would over-count that bucket pair identically)
+    orig_idx, sc, sh1, cnt = sort_dedup_key_hash(codes, h1)
+    yield pa.RecordBatch.from_arrays(
+        [
+            uniq.take(pa.array(sc)),
+            pa.array(sh1.view(np.int64)),
+            pa.array(h2[orig_idx].view(np.int64)),
+            pa.array(cnt.astype(np.int64)),
+        ],
+        names=["k", "h1", "h2", "c"],
+    )
 
 
 def _pack_cms_rows(
@@ -154,37 +136,31 @@ def _pack_cms_rows(
 
 def _build_stage(
     epsilon: float, delta: float, funnel: int, max_matrix_bytes: int,
-    prehashed: bool = False,
+    front=int64_columns,
 ):
+    """The counter build over one partition: ``front`` turns its batches
+    into (keys, h1, h2, c) — combined (k, h1, h2, c) rows, (k, xxhash64)
+    rows, whose second depth hash derives from h1, or raw (k, v) rows
+    through the murmur3 front end (``_hash_pairs``; c = None, one update
+    per row)."""
     w, d = cms_geometry(epsilon, delta)
 
     def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        keys_parts, h1_parts, h2_parts, c_parts = [], [], [], []
-        for batch in batches:
-            keys_parts.append(batch.column(0))
-            h1_parts.append(batch.column(1).to_numpy(zero_copy_only=False))
-            if not prehashed:
-                h2_parts.append(batch.column(2).to_numpy(zero_copy_only=False))
-                c_parts.append(batch.column(3).to_numpy(zero_copy_only=False))
-        if not keys_parts:
+        gathered = gather_keyed(front(batches))
+        if gathered is None:
             return
-        keys = pa.chunked_array(keys_parts).combine_chunks()
-        h1 = np.concatenate(h1_parts).view(np.uint64)
-        if prehashed:
-            # input is (k, h1=xxhash64) only: the depth rows need a second
+        uniq, codes, h1, *rest = gathered
+        h2, c = (*rest, None, None)[:2]  # (k, xxhash64) rows carry neither
+        h1 = h1.view(np.uint64)
+        if h2 is None:
+            # (k, h1=xxhash64) only: the depth rows need a second
             # independent hash — derive it from h1 (uniform 64-bit) with the
             # shared salt+fmix rule so local CmsSketch(funnel=PREHASHED)
             # builds/probes land in the SAME buckets (blob byte-identity)
             from ..sketches.cms import prehash_pair
 
             h1, h2 = prehash_pair(h1)
-            c = np.ones(len(h1), dtype=np.int64)
-        else:
-            h2 = np.concatenate(h2_parts).view(np.uint64)
-            c = np.concatenate(c_parts).astype(np.int64)
-        from ._arrow_common import encode_keys
-
-        uniq, codes = encode_keys(keys)
+        h2 = h2.view(np.uint64)
         n_keys = len(uniq)
         need = n_keys * d * w * 8
         if need > max_matrix_bytes:
@@ -201,7 +177,7 @@ def _build_stage(
         # is exactly the OOM the max_matrix_bytes guard promises to prevent.
         counts = np.zeros((n_keys, d, w), dtype=np.int64)
         base = codes * w
-        cf = c.astype(np.float64)  # exact for counts < 2^53
+        cf = None if c is None else c.astype(np.float64)  # exact below 2^53
         for i in range(d):
             with np.errstate(over="ignore"):
                 col = ((h1 + np.uint64(i) * h2) & _SIGN_MASK) % np.uint64(w)
@@ -224,7 +200,6 @@ def grouped_cms(
     epsilon: float = 0.005,
     delta: float = 0.01,
     partitions: int | None = None,
-    pre_reduce: bool | str | None = "auto",
     max_matrix_bytes: int = 1 << 31,
     assume_colocated: bool = False,
     prehash: bool = False,
@@ -232,13 +207,12 @@ def grouped_cms(
     """Per-key CmsSketch at high key cardinality → (key, sketch, n) with
     blobs byte-identical to a local ``CmsSketch`` build of the same group.
 
-    ``pre_reduce=True`` collapses duplicate (key, value) rows map-side into
-    weighted updates, so the shuffle is bounded by the per-partition
-    DISTINCT values of each key rather than its row count. The default
-    ``"auto"`` (``None`` means the same) runs grouped_kll's memoized
-    sampled skew probe with a 4096-row threshold and takes that combine
-    only when some key is hot; otherwise hashing and the build share one
-    Python stage after the exchange. Blobs are byte-identical either way.
+    A hot key (the shared driver's skew probe, 4096 rows per input
+    partition) takes a map-side stage that collapses duplicate (key, value)
+    rows into weighted updates, so the shuffle is bounded by the
+    per-partition DISTINCT values of each key rather than its row count;
+    otherwise hashing and the build share one Python stage after the
+    exchange. Blobs are byte-identical either way.
     ``assume_colocated=True`` skips the repartition — correct when the
     input is already partitioned by ``key`` (bucketed read, upstream
     repartition); the grouped build then has ZERO shuffle.
@@ -251,37 +225,21 @@ def grouped_cms(
     is unchanged. Blobs carry FUNNEL_PREHASHED and refuse to merge with
     murmur3-funnel blobs (different bucket domains); probe them with
     hashes, e.g. ``sk.estimate(xxhash64-values)`` or SQL
-    ``cms_freq(sketch, xxhash64(item))``. Nulls are dropped JVM-side.
-    Under prehash ``"auto"`` resolves to False; ``pre_reduce=True``
-    raises."""
-
-    key_type = df.schema[key].dataType.simpleString()
-    narrow = df.select(F.col(key).alias("k"), F.col(col).alias("v"))
-    if pre_reduce in (None, "auto"):
-        from .grouped_kll import _skew_probe
-
-        pre_reduce = not (prehash or assume_colocated) and _skew_probe(narrow, 4096)
-    if prehash and pre_reduce:
-        raise ValueError("prehash and pre_reduce are mutually exclusive")
-    funnel = funnel_for_spark_type(df.schema[col].dataType)
-    if prehash:
-        from ..sketches.base import FUNNEL_PREHASHED
-
-        rows = (
-            df.where(F.col(col).isNotNull())
-            .select(F.col(key).alias("k"), F.xxhash64(col).alias("h1"))
-        )
-        build = _build_stage(
-            epsilon, delta, FUNNEL_PREHASHED, max_matrix_bytes, prehashed=True
-        )
-    elif pre_reduce:
-        rows = narrow.mapInArrow(
-            _hash2_prereduce_stage(1), f"k {key_type}, {_HASH2_SCHEMA_SUFFIX}"
-        )
-        build = _build_stage(epsilon, delta, funnel, max_matrix_bytes)
-    else:
-        rows = narrow
-        stage = _build_stage(epsilon, delta, funnel, max_matrix_bytes)
-        build = lambda it, h=_hash2_stage(1), b=stage: b(h(it))
-    colocated = rows if assume_colocated else repartition_by_key(rows, partitions)
-    return colocated.mapInArrow(build, f"key {key_type}, sketch binary, n bigint")
+    ``cms_freq(sketch, xxhash64(item))``. Nulls are dropped JVM-side."""
+    funnel = (
+        FUNNEL_PREHASHED if prehash else funnel_for_spark_type(df.schema[col].dataType)
+    )
+    from_hashes = _build_stage(epsilon, delta, funnel, max_matrix_bytes)
+    kind = GroupedKind(
+        "sketch binary, n bigint",
+        _build_stage(epsilon, delta, funnel, max_matrix_bytes, _hash_pairs),
+        probe_rows=4096,
+        combine=_combine,
+        combined="h1 bigint, h2 bigint, c bigint",
+        merge=from_hashes,
+        hashed=from_hashes,
+    )
+    return grouped_build(
+        df, key, col, kind, partitions=partitions,
+        assume_colocated=assume_colocated, prehash=prehash, rename=False,
+    )

@@ -9,15 +9,16 @@ overhead (pandas groupby + serialization), not sketch math. This operator:
 
   1. select (key, value→float64), drop nulls — narrow rows, the shuffle
      carries 8 bytes + key, never the payload;
-  2. map-side hot-key pre-reduce (``pre_reduce`` — the skew armor, VERDICT
-     r2 item 2; default ``"auto"`` = one eager sampled JVM-side skew probe
-     picks single- vs two-phase): any key with ≥ ``hot_threshold`` rows in an
-     input partition is pre-summarized into a partial sketch blob BEFORE
-     the exchange; KLL/t-digest are mergeable, so a zipf-hot conv_id ships
-     ``input_parts`` KB-blobs instead of serializing its 10^9-row set into
-     one reduce task's sort. Colder keys pass through as raw rows — at
-     high key cardinality a blob per (partition, key) costs more than the
-     rows, and the no-hot-key fast path forwards the partition unsorted;
+  2. map-side hot-key combine (the skew armor, VERDICT r2 item 2), taken
+     when the shared driver's sampled skew probe
+     (_arrow_common.grouped_build) finds a hot key: any key with at least
+     the kind's threshold of rows in an input partition is pre-summarized
+     into a partial sketch blob BEFORE the exchange; KLL/t-digest are
+     mergeable, so a zipf-hot conv_id ships ``input_parts`` KB-blobs
+     instead of serializing its 10^9-row set into one reduce task's sort.
+     Colder keys pass through as raw rows — at high key cardinality a blob
+     per (partition, key) costs more than the rows, and the no-hot-key
+     fast path forwards the partition unsorted;
   3. repartition(key): all of a key's rows/partials land in one partition;
   4. mapInArrow: dictionary-encode keys → codes; ONE stable argsort groups
      rows by key preserving arrival order; per key, `KllSketch.update`
@@ -45,9 +46,9 @@ from collections.abc import Iterator
 import numpy as np
 import pyarrow as pa
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame
 
-from ._arrow_common import repartition_by_key
+from ._arrow_common import GroupedKind, grouped_build
 
 
 def _gather_values(batches: Iterator[pa.RecordBatch]):
@@ -97,9 +98,9 @@ def _build_stage(make_sketch):
     return fn
 
 
-def _prereduce_stage(make_sketch, hot_threshold: int):
+def _prereduce_stage(make_sketch, threshold: int):
     """Map-side hot-key combine (skew armor). Per INPUT partition: keys with
-    ≥ ``hot_threshold`` local rows are summarized into a partial sketch blob
+    ≥ ``threshold`` local rows are summarized into a partial sketch blob
     (shuffle cost O(k log n) bytes instead of the row set); colder keys pass
     through as raw rows (a blob per (partition, key) would cost MORE than
     the rows at high key cardinality). Output rows are tagged by
@@ -118,7 +119,7 @@ def _prereduce_stage(make_sketch, hot_threshold: int):
         vc = pc.value_counts(
             pa.chunked_array([b.column(0) for b in batch_list])
         )
-        if len(vc) == 0 or pc.max(vc.field("counts")).as_py() < hot_threshold:
+        if len(vc) == 0 or pc.max(vc.field("counts")).as_py() < threshold:
             # common case at high key cardinality: nothing hot here — pass
             # the original batches through untouched (null v/NaN rows are
             # dropped by the merge stage)
@@ -140,7 +141,7 @@ def _prereduce_stage(make_sketch, hot_threshold: int):
         keys, v = gathered
         uniq, codes = encode_keys(keys)
         n_per = np.bincount(codes, minlength=len(uniq)).astype(np.int64)
-        hot = np.flatnonzero(n_per >= hot_threshold)
+        hot = np.flatnonzero(n_per >= threshold)
         hot_mask = np.zeros(len(uniq), dtype=bool)
         hot_mask[hot] = True
         row_is_hot = hot_mask[codes]
@@ -157,7 +158,7 @@ def _prereduce_stage(make_sketch, hot_threshold: int):
                 names=["k", "v", "s", "c"],
             )
         blobs = []
-        for i in hot:  # few by definition (≥ hot_threshold rows each)
+        for i in hot:  # few by definition (≥ threshold rows each)
             sk = make_sketch()
             sk.update(v[codes == i])  # arrival order preserved
             blobs.append(sk.to_bytes())
@@ -258,88 +259,27 @@ def _merge_stage(make_sketch):
     return fn
 
 
-_SKEW_PROBE_FRACTION = 0.01
-_PROBE_CACHE: dict = {}  # (plan semanticHash, threshold) -> bool
-_PROBE_CACHE_CAP = 256
-
-
-def _skew_probe(narrow: DataFrame, hot_threshold: int) -> bool:
-    """Eager sampled skew detection: does any key plausibly ship
-    ≥ ``hot_threshold`` rows PER INPUT PARTITION (the regime where a
-    map-side partial actually compresses)? One cheap JVM-side job (sample →
-    partial-agg count → limit 1). The cutoff assumes a hot key's rows
-    spread roughly evenly over input partitions — global ≥ threshold ×
-    n_input_partitions; a key clustered into few partitions can slip past
-    the probe, but such a key also fits comfortably in one reduce task, and
-    a key ≥ 2× the cutoff is detected with near certainty (sampled count is
-    Binomial with mean ≥ 2× cutoff). A false positive merely routes the
-    input through the (correct, ~1.45× slower) armored plan. Bounded by
-    design: the probe returns one boolean. Precedent for the eager bounded
-    job: the IVF codebook sample (pipeline/ivf.py).
-
-    Measured alternative (r3): a broadcast skew-SPLIT plan (hot rows only
-    through the partial round trip, cold rows single-phase, union) lost to
-    full two-phase at 8M rows — triple scan + two joins cost more than one
-    extra Arrow round trip — so auto picks between single- and full
-    two-phase only.
-
-    The verdict is memoized per (input plan semanticHash, threshold) for
-    the session: re-running the same query reuses the answer instead of
-    re-scanning the sample. Data appended under an identical plan within
-    one session won't re-trigger the probe — pass pre_reduce=True/False to
-    override."""
-    try:
-        cache_key = (narrow.semanticHash(), hot_threshold)
-    except Exception:  # pragma: no cover — semanticHash unavailable
-        cache_key = None
-    if cache_key is not None and cache_key in _PROBE_CACHE:
-        return _PROBE_CACHE[cache_key]
-    n_parts = max(1, narrow.rdd.getNumPartitions())
-    cutoff = max(
-        2, int(hot_threshold * n_parts * _SKEW_PROBE_FRACTION)
-    )
-    hot = (
-        narrow.sample(fraction=_SKEW_PROBE_FRACTION, seed=42)
-        .groupBy("k")
-        .count()
-        .where(F.col("count") >= cutoff)
-        .limit(1)
-        .count()
-    )
-    if cache_key is not None:
-        if len(_PROBE_CACHE) >= _PROBE_CACHE_CAP:
-            _PROBE_CACHE.clear()
-        _PROBE_CACHE[cache_key] = hot > 0
-    return hot > 0
-
-
 def _grouped_value_sketch(
     df: DataFrame,
     key: str,
     col: str,
     make_sketch,
     partitions: int | None,
-    assume_colocated: bool = False,
-    pre_reduce: bool | str = "auto",
-    hot_threshold: int = 4096,
+    assume_colocated: bool,
+    probe_rows: int,
 ) -> DataFrame:
-    key_type = df.schema[key].dataType.simpleString()
-    narrow = df.select(F.col(key).alias("k"), F.col(col).cast("double").alias("v"))
-    out_schema = f"key {key_type}, sketch binary, n bigint"
-    if assume_colocated:
-        return narrow.mapInArrow(_build_stage(make_sketch), out_schema)
-    if pre_reduce == "auto":
-        pre_reduce = _skew_probe(narrow, hot_threshold)
-    if not pre_reduce:
-        return repartition_by_key(narrow, partitions).mapInArrow(
-            _build_stage(make_sketch), out_schema
-        )
-    mixed = narrow.mapInArrow(
-        _prereduce_stage(make_sketch, hot_threshold),
-        f"k {key_type}, v double, s binary, c bigint",
+    kind = GroupedKind(
+        "sketch binary, n bigint",
+        _build_stage(make_sketch),
+        probe_rows=probe_rows,
+        combine=_prereduce_stage(make_sketch, probe_rows),
+        combined="v double, s binary, c bigint",
+        merge=_merge_stage(make_sketch),
+        cast="double",
     )
-    return repartition_by_key(mixed, partitions).mapInArrow(
-        _merge_stage(make_sketch), out_schema
+    return grouped_build(
+        df, key, col, kind, partitions=partitions,
+        assume_colocated=assume_colocated, rename=False,
     )
 
 
@@ -350,32 +290,23 @@ def grouped_kll(
     k: int = 200,
     partitions: int | None = None,
     assume_colocated: bool = False,
-    pre_reduce: bool | str = "auto",
-    hot_threshold: int | None = None,
 ) -> DataFrame:
     """Per-key KllSketch at high key cardinality → (key, sketch, n).
     ``assume_colocated=True`` skips the repartition for input already
     partitioned by ``key`` — zero shuffle.
 
-    ``pre_reduce`` is the skew armor: keys with ≥ ``hot_threshold`` rows IN
-    AN INPUT PARTITION are pre-summarized into a partial KLL blob before
-    the exchange (KLL is mergeable), so a zipf-hot key ships
-    ``input_parts`` KB-sized blobs across the shuffle instead of its entire
-    row set serializing into one task's sort. Colder keys pass through as
-    raw rows — at high key cardinality a blob per (partition, key) would
-    cost more than the rows. Default threshold 16·k rows: below that the
-    blob (~k·log(n/k) doubles + header) doesn't beat 8-byte raw rows.
-
-    ``"auto"`` (default) runs ONE eager sampled skew probe (JVM-only,
-    ~1% sample) and picks the plan: no per-partition-hot keys → single-phase
-    build (zero Python-side overhead); otherwise the two-phase armor (one
-    extra Arrow round trip of every row, measured ~1.45× at 8M rows / 792k
-    cold keys — see _skew_probe for the measured skew-split alternative
-    that lost). Pass True/False to skip the probe and force
-    two-phase / single-phase. NOTE: "auto" runs one eager sampled job over
-    the input lineage at plan-construction time — for an expensive upstream
-    DAG (joins, UDFs) pass an explicit True/False, or cache the input,
-    to avoid evaluating the lineage twice.
+    The skew armor: when the shared driver's sampled probe finds a key
+    with ≥ 16·k rows IN AN INPUT PARTITION, such keys are pre-summarized
+    into a partial KLL blob before the exchange (KLL is mergeable), so a
+    zipf-hot key ships ``input_parts`` KB-sized blobs across the shuffle
+    instead of its entire row set serializing into one task's sort.
+    Colder keys pass through as raw rows — at high key cardinality a blob
+    per (partition, key) would cost more than the rows. Below 16·k rows
+    the blob (~k·log(n/k) doubles + header) doesn't beat 8-byte raw rows.
+    The probe is one eager sampled job over the input lineage at
+    plan-construction time (see _arrow_common.grouped_build) — for an
+    expensive upstream DAG (joins, UDFs) cache the input to avoid
+    evaluating the lineage twice.
     """
 
     def make():
@@ -385,8 +316,7 @@ def grouped_kll(
 
     return _grouped_value_sketch(
         df, key, col, make, partitions, assume_colocated,
-        pre_reduce,
-        max(16 * k, 1024) if hot_threshold is None else hot_threshold,
+        max(16 * k, 1024),
     )
 
 
@@ -397,8 +327,6 @@ def grouped_tdigest(
     delta: float = 200.0,
     partitions: int | None = None,
     assume_colocated: bool = False,
-    pre_reduce: bool | str = "auto",
-    hot_threshold: int | None = None,
 ) -> DataFrame:
     """Per-key TDigestSketch at high key cardinality → (key, sketch, n) —
     same narrow shuffle + segment-loop architecture as ``grouped_kll``,
@@ -413,8 +341,7 @@ def grouped_tdigest(
 
     return _grouped_value_sketch(
         df, key, col, make, partitions, assume_colocated,
-        pre_reduce,
-        max(int(16 * delta), 1024) if hot_threshold is None else hot_threshold,
+        max(int(16 * delta), 1024),
     )
 
 
@@ -426,8 +353,6 @@ def grouped_dd(
     max_bins: int = 2048,
     partitions: int | None = None,
     assume_colocated: bool = False,
-    pre_reduce: bool | str = "auto",
-    hot_threshold: int | None = None,
 ) -> DataFrame:
     """Per-key DDSketch at high key cardinality → (key, sketch, n): the
     "per-conversation p99 within α percent" query — VALUE-relative
@@ -437,8 +362,9 @@ def grouped_dd(
     order-INsensitive exact bucket addition, so WHILE NO COLLAPSE FIRES
     (``collapses == 0`` — the default 2048-bin store spans >10^17 of
     dynamic range) per-key blobs are byte-identical to local builds under
-    ANY partitioning or pre_reduce path — the grouped-HLL/CMS determinism
-    class, with the quantile semantics of the grouped-KLL family. Once a
+    ANY partitioning, with or without the combine — the grouped-HLL/CMS
+    determinism class, with the quantile semantics of the grouped-KLL
+    family. Once a
     store collapses, both the counter and the low-tail bucket layout
     become path-dependent (mass and the high-quantile bound still hold).
 
@@ -455,11 +381,10 @@ def grouped_dd(
 
     return _grouped_value_sketch(
         df, key, col, make, partitions, assume_colocated,
-        pre_reduce,
         # scale to the blob size like 16·k / 16·δ on the siblings: a
         # partial only compresses when the raw rows outweigh the ~max_bins
         # int64 store it ships
-        max(2 * max_bins, 1024) if hot_threshold is None else hot_threshold,
+        max(2 * max_bins, 1024),
     )
 
 
@@ -471,8 +396,6 @@ def grouped_req(
     hra: bool = True,
     partitions: int | None = None,
     assume_colocated: bool = False,
-    pre_reduce: bool | str = "auto",
-    hot_threshold: int | None = None,
 ) -> DataFrame:
     """Per-key ReqSketch at high key cardinality → (key, sketch, n): the
     "per-conversation p99.99 within RELATIVE rank error" query — the
@@ -489,8 +412,7 @@ def grouped_req(
 
     return _grouped_value_sketch(
         df, key, col, make, partitions, assume_colocated,
-        pre_reduce,
         # a REQ partial holds ~2·3·k floats per level at low n: partials
         # beat raw rows from a few hundred rows per (partition, key)
-        max(64 * k, 1024) if hot_threshold is None else hot_threshold,
+        max(64 * k, 1024),
     )

@@ -12,8 +12,9 @@ every requested quantile for every key simultaneously:
   `quantile_disc` convention DuckDB uses — oracle-matched by construction).
 
 Skew posture (r3): exact quantiles are count-distributive over
-(value, count) runs, so the same sampled skew probe grouped_kll uses
-(``pre_reduce="auto"``) gates a map-side run-length combine — a zipf-hot
+(value, count) runs, so the shared driver's sampled skew probe
+(_arrow_common.grouped_build, 4096 rows per input partition) gates the
+map-side run-length combine grouped_mode shares — a zipf-hot
 key whose value domain repeats (turn indexes, token counts) crosses the
 exchange as its distinct (key, value, count) runs instead of its raw row
 set, and the reduce side answers quantiles from cumulative run counts —
@@ -33,50 +34,43 @@ import pyarrow as pa
 
 from pyspark.sql import DataFrame, functions as F
 
-from ._arrow_common import repartition_by_key
+from ._arrow_common import (
+    GroupedKind,
+    collapse_key_value_runs,
+    encode_keys,
+    gather_keyed_values,
+    grouped_build,
+    run_combine,
+)
 
 
 def _runs(keys, v, w):
     """Collapse to distinct (key, value) runs with summed weights, runs
     sorted by (key, value). Returns (uniq, run_key, run_val, run_cnt)."""
-    from ._arrow_common import collapse_key_value_runs, encode_keys
-
     uniq, codes = encode_keys(keys)
     run_key, run_val, run_cnt = collapse_key_value_runs(codes, v, w)
     return uniq, run_key, run_val, run_cnt
 
 
-def _prereduce_stage():
-    """Map-side run-length combine: per input partition emit distinct
-    (key, value, count) rows — bounds a hot key's shuffle footprint by its
-    distinct values in that partition."""
-
-    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        from ._arrow_common import gather_keyed_values
-
-        gathered = gather_keyed_values(batches, as_float=True)
-        if gathered is None:
-            return
-        keys, v, w = gathered
-        uniq, run_key, run_val, run_cnt = _runs(keys, v, w)
-        yield pa.RecordBatch.from_arrays(
-            [
-                uniq.take(pa.array(run_key)),
-                pa.array(run_val),
-                pa.array(run_cnt),
-            ],
-            names=["k", "v", "c"],
-        )
-
-    return fn
+def quantile_names(qs: Sequence[float]) -> list[str]:
+    """Output column name per quantile: ``q50`` for a whole percent,
+    ``q99_9`` for a fractional one (percent to 6 decimals). Raises
+    ``ValueError`` when two quantiles would share a name."""
+    names = []
+    for q in qs:
+        pct = f"{q * 100:.6f}".rstrip("0").rstrip(".")
+        names.append("q" + pct.replace(".", "_"))
+    dup = sorted({n for n in names if names.count(n) > 1})
+    if dup:
+        raise ValueError(f"quantiles {list(qs)} repeat output column(s) {dup}")
+    return names
 
 
 def _build_stage(qs: Sequence[float]):
     qarr = np.asarray(qs, dtype=np.float64)
+    qnames = quantile_names(qs)
 
     def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        from ._arrow_common import gather_keyed_values
-
         gathered = gather_keyed_values(batches, as_float=True)
         if gathered is None:
             return
@@ -95,7 +89,6 @@ def _build_stage(qs: Sequence[float]):
         nz = seg_start[:-1] > 0
         base[nz] = cum[seg_start[:-1][nz] - 1]
         cols = [uniq, pa.array(n_per)]
-        names = ["key", "n"]
         for q in qarr:
             # nearest-rank (DuckDB quantile_disc): 0-based rank per key
             idx = np.maximum(np.ceil(q * n_per).astype(np.int64) - 1, 0)
@@ -103,8 +96,7 @@ def _build_stage(qs: Sequence[float]):
             # first run whose within-key cumulative count exceeds the rank
             pos = np.searchsorted(cum, base + idx, side="right")
             cols.append(pa.array(run_val[pos]))
-            names.append(f"q{int(round(q * 100))}")
-        yield pa.RecordBatch.from_arrays(cols, names=names)
+        yield pa.RecordBatch.from_arrays(cols, names=["key", "n", *qnames])
 
     return fn
 
@@ -115,38 +107,29 @@ def grouped_quantiles(
     col: str,
     qs: Sequence[float] = (0.25, 0.5, 0.75),
     partitions: int | None = None,
-    pre_reduce: bool | str = "auto",
-    hot_threshold: int = 4096,
 ) -> DataFrame:
-    """Exact nearest-rank quantiles per key: (key, n, q25, q50, …).
+    """Exact nearest-rank quantiles per key: (key, n, q25, q50, …), one
+    column per quantile named by :func:`quantile_names` (``q99_9`` for
+    0.999).
 
-    ``pre_reduce="auto"`` (default) reuses grouped_kll's sampled skew probe:
-    unskewed inputs keep the single-phase plan; per-partition-hot keys
-    trigger the map-side (key, value, count) combine, which is exact
-    (nearest-rank over counted runs) and bounds a hot key's shuffle by its
-    distinct values per partition. Pass True/False to force a plan. NOTE:
-    "auto" runs one eager sampled job over the input lineage at
-    plan-construction time — for an expensive upstream DAG pass an explicit
-    True/False, or cache the input, to avoid evaluating the lineage twice.
+    Unskewed inputs keep the single-phase plan; per-partition-hot keys
+    (the shared driver's sampled skew probe) take the map-side
+    (key, value, count) combine, which is exact (nearest-rank over counted
+    runs) and bounds a hot key's shuffle by its distinct values per
+    partition. The probe is one eager sampled job over the input lineage
+    at plan-construction time — for an expensive upstream DAG cache the
+    input to avoid evaluating the lineage twice.
     """
-    key_type = df.schema[key].dataType.simpleString()
-    narrow = df.select(F.col(key).alias("k"), df[col].cast("double").alias("v"))
-    qcols = ", ".join(f"q{int(round(q * 100))} double" for q in qs)
-    schema = f"key {key_type}, n bigint, {qcols}"
-    if pre_reduce == "auto":
-        from .grouped_kll import _skew_probe
-
-        pre_reduce = _skew_probe(narrow, hot_threshold)
-    if pre_reduce:
-        reduced = narrow.mapInArrow(
-            _prereduce_stage(), f"k {key_type}, v double, c bigint"
-        )
-    else:
-        reduced = narrow
-    colocated = repartition_by_key(reduced, partitions)
-    return colocated.mapInArrow(_build_stage(qs), schema).withColumnRenamed(
-        "key", key
+    qcols = ", ".join(f"{name} double" for name in quantile_names(qs))
+    kind = GroupedKind(
+        f"n bigint, {qcols}",
+        _build_stage(qs),
+        probe_rows=4096,
+        combine=run_combine,
+        combined="v double, c bigint",
+        cast="double",
     )
+    return grouped_build(df, key, col, kind, partitions=partitions)
 
 
 def quantile_trim(
@@ -176,7 +159,7 @@ def quantile_trim(
     """
     if keep not in ("below", "above"):
         raise ValueError(f"keep must be 'below' or 'above', got {keep!r}")
-    qname = f"q{int(round(q * 100))}"
+    (qname,) = quantile_names((q,))
     th_col = "__gps_trim_threshold"
     if method == "exact":
         th = grouped_quantiles(df, key, col, qs=(q,)).select(

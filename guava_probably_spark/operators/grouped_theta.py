@@ -9,14 +9,14 @@ day 7" (retention), "conversations touching tool A AND tool B" — each a
 sample bound (sketches/theta.py) instead of HLL's unbounded
 inclusion–exclusion.
 
-Plan: project (key, value) in the JVM; by default one sampled skew probe
-(grouped_kll._skew_probe, threshold k rows per input partition) decides
-whether any key is hot. Without one, repartition(key) into
-``defaultParallelism`` partitions (one wave of Python tasks) unless
-``partitions`` is given (_arrow_common.repartition_by_key), then ONE
-mapInArrow per partition hashes the values and runs the kernel. With one
-(or ``pre_reduce=True``), a map-side KMV combine ships at most k distinct
-hashes per (input partition, key) across the exchange instead.
+Plan: the shared driver's (_arrow_common.grouped_build). Project (key,
+value) in the JVM; the sampled skew probe (threshold k rows per input
+partition) decides whether any key is hot. Without one, repartition(key)
+into ``defaultParallelism`` partitions (one wave of Python tasks) unless
+``partitions`` is given, then ONE mapInArrow per partition hashes the
+values and runs the kernel. With one, a map-side KMV combine ships at
+most k distinct hashes per (input partition, key) across the exchange
+instead.
 
 Kernel: lexsort (key, hash) → drop duplicate (key, hash) pairs → keep the
 first k per key (the k SMALLEST distinct hashes — exactly ThetaSketch's
@@ -33,11 +33,18 @@ from collections.abc import Iterator
 import numpy as np
 import pyarrow as pa
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame
 
-from ..sketches.base import KIND_THETA, MAGIC, VERSION, Sketch
-from ._arrow_common import funnel_for_spark_type, repartition_by_key
-from .grouped_hll import _hash_stage
+from ..sketches.base import FUNNEL_PREHASHED, KIND_THETA, MAGIC, VERSION, Sketch
+from ._arrow_common import (
+    GroupedKind,
+    funnel_for_spark_type,
+    gather_keyed,
+    grouped_build,
+    hash_values,
+    int64_columns,
+    sort_dedup_key_hash,
+)
 
 
 def _pack_theta_rows(
@@ -101,8 +108,6 @@ def _kmin_distinct(
     """Per key-code: the k smallest DISTINCT hashes (lexsort → dedup →
     rank<k). Returns (codes_top sorted asc, hashes_top asc within code,
     first-row mask per code within the top set)."""
-    from ._arrow_common import sort_dedup_key_hash
-
     _, sc, sh, _ = sort_dedup_key_hash(codes, h1)
     if len(sc) == 0:  # partition fed only zero-row batches
         return sc, sh, np.zeros(0, dtype=bool)
@@ -117,7 +122,7 @@ def _kmin_distinct(
     return sc[top], sh[top], (rank == 0)[top]
 
 
-def _prereduce_stage(col_idx: int, k_param: int):
+def _prereduce_stage(k_param: int):
     """Hash + MAP-SIDE KMV combine in one Python pass: per (partition, key)
     only the k smallest distinct hashes cross the shuffle, plus the raw
     row count carried on the key's first row. This is the skew armor — a
@@ -126,9 +131,7 @@ def _prereduce_stage(col_idx: int, k_param: int):
     byte-identical to the unreduced build (tested)."""
 
     def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        from ._arrow_common import gather_keyed_hashes
-
-        gathered = gather_keyed_hashes(batches, col_idx)
+        gathered = gather_keyed(hash_values(batches))
         if gathered is None:
             return
         uniq, codes, h1, _ = gathered
@@ -144,28 +147,21 @@ def _prereduce_stage(col_idx: int, k_param: int):
     return fn
 
 
-def _build_stage(k_param: int, funnel: int):
-    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        keys_parts = []
-        h_parts = []
-        c_parts = []
-        for batch in batches:
-            keys_parts.append(batch.column(0))
-            h_parts.append(batch.column(1).to_numpy(zero_copy_only=False))
-            if batch.num_columns > 2:
-                c_parts.append(batch.column(2).to_numpy(zero_copy_only=False))
-        if not keys_parts:
-            return
-        keys = pa.chunked_array(keys_parts).combine_chunks()
-        if len(keys) == 0:  # only zero-row batches reached this partition
-            return
-        h1 = np.concatenate(h_parts).view(np.uint64)
-        from ._arrow_common import encode_keys
+def _build_stage(k_param: int, funnel: int, front=int64_columns):
+    """The KMV build over one partition: ``front`` turns its batches into
+    (keys, h[, c]) — (k, hash) or combined (k, h, c) rows by default, raw
+    (k, v) rows through :func:`hash_values`."""
 
-        uniq, codes = encode_keys(keys)
-        if c_parts:  # pre-reduced input: raw counts ride the c column
+    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        gathered = gather_keyed(front(batches))
+        if gathered is None:
+            return
+        uniq, codes, h1, *rest = gathered
+        h1 = h1.view(np.uint64)
+        c = rest[0] if rest else None
+        if c is not None:  # combined input: raw counts ride the c column
             counts = np.zeros(len(uniq), dtype=np.int64)
-            np.add.at(counts, codes, np.concatenate(c_parts).astype(np.int64))
+            np.add.at(counts, codes, c.astype(np.int64))
         else:
             counts = np.bincount(codes, minlength=len(uniq)).astype(np.int64)
 
@@ -184,7 +180,6 @@ def grouped_theta(
     col: str,
     k: int = 4096,
     partitions: int | None = None,
-    pre_reduce: bool | str | None = "auto",
     assume_colocated: bool = False,
     prehash: bool = False,
 ) -> DataFrame:
@@ -193,16 +188,14 @@ def grouped_theta(
     Rows of the output support bounded union/intersect/difference ACROSS
     keys (retention-style queries).
 
-    ``pre_reduce=True`` applies the map-side KMV combine: each input
-    partition ships at most k distinct hashes per key (+ the raw count on
-    one row) — the shuffle is bounded by parts × keys × k rows no matter
-    how hot a key is, and duplicate (key, value) rows collapse before the
-    exchange. The default ``"auto"`` (``None`` means the same) runs
-    grouped_kll's memoized sampled skew probe with a k-row threshold and
-    takes the combine only when some key is hot; otherwise hashing and
-    the build share one Python stage after the exchange. The retained-set
-    union is associative, so the output blobs are byte-identical either
-    way (tested).
+    A hot key (the shared driver's skew probe, k rows per input partition)
+    takes the map-side KMV combine: each input partition ships at most k
+    distinct hashes per key (+ the raw count on one row) — the shuffle is
+    bounded by parts × keys × k rows no matter how hot a key is, and
+    duplicate (key, value) rows collapse before the exchange. Otherwise
+    hashing and the build share one Python stage after the exchange. The
+    retained-set union is associative, so the output blobs are
+    byte-identical either way (tested).
 
     ``prehash=True`` hashes the value column JVM-SIDE with ``xxhash64`` and
     feeds the 64-bit hashes straight into the KMV retention — no Python
@@ -212,40 +205,23 @@ def grouped_theta(
     uniform 64-bit hash; blobs carry FUNNEL_PREHASHED and refuse to merge
     with murmur3-funnel blobs of the same column (the retained domains
     differ). Null values are dropped JVM-side (xxhash64(NULL) = seed
-    would count nulls as one distinct). Under prehash ``"auto"`` resolves
-    to False; ``pre_reduce=True`` (whose map-side KMV combine hashes in
-    Python) raises — the prehash trade is shuffle rows = input rows
-    instead of the ≤ parts × keys × k cap; prefer pre_reduce when keys
-    are hot and values narrow, prehash when the value column is wide
-    text."""
-
-    key_type = df.schema[key].dataType.simpleString()
-    narrow = df.select(F.col(key).alias("k"), F.col(col).alias("v"))
-    if pre_reduce in (None, "auto"):
-        from .grouped_kll import _skew_probe
-
-        pre_reduce = not (prehash or assume_colocated) and _skew_probe(narrow, k)
-    if prehash and pre_reduce:
-        raise ValueError("prehash and pre_reduce are mutually exclusive")
-    funnel = funnel_for_spark_type(df.schema[col].dataType)
-    if prehash:
-        from ..sketches.base import FUNNEL_PREHASHED
-
-        funnel = FUNNEL_PREHASHED
-        rows = (
-            df.where(F.col(col).isNotNull())
-            .select(F.col(key).alias("k"), F.xxhash64(col).alias("h"))
-        )
-        build = _build_stage(k, funnel)
-    elif pre_reduce:
-        rows = narrow.mapInArrow(
-            _prereduce_stage(1, k), f"k {key_type}, h bigint, c bigint"
-        )
-        build = _build_stage(k, funnel)
-    else:
-        rows = narrow
-        build = lambda it, h=_hash_stage(1), b=_build_stage(k, funnel): b(h(it))
-    colocated = rows if assume_colocated else repartition_by_key(rows, partitions)
-    return colocated.mapInArrow(
-        build, f"key {key_type}, sketch binary, n bigint"
-    ).withColumnRenamed("key", key)
+    would count nulls as one distinct). The prehash trade is shuffle rows
+    = input rows and no hot-key combine; prefer it when the value column
+    is wide text."""
+    funnel = (
+        FUNNEL_PREHASHED if prehash else funnel_for_spark_type(df.schema[col].dataType)
+    )
+    from_hashes = _build_stage(k, funnel)
+    kind = GroupedKind(
+        "sketch binary, n bigint",
+        _build_stage(k, funnel, hash_values),
+        probe_rows=k,
+        combine=_prereduce_stage(k),
+        combined="h bigint, c bigint",
+        merge=from_hashes,
+        hashed=from_hashes,
+    )
+    return grouped_build(
+        df, key, col, kind, partitions=partitions,
+        assume_colocated=assume_colocated, prehash=prehash,
+    )

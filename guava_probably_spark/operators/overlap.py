@@ -88,7 +88,6 @@ def source_overlap_matrix(
     key: str,
     col: str,
     k: int = 4096,
-    pre_reduce: bool = True,
     partitions: int | None = None,
     sketches: DataFrame | None = None,
     materialize: bool | None = None,
@@ -120,9 +119,7 @@ def source_overlap_matrix(
     materialize = pin_default(materialize)
     g = sketches
     if g is None:
-        g = grouped_theta(
-            df, key, col, k=k, pre_reduce=pre_reduce, partitions=partitions
-        )
+        g = grouped_theta(df, key, col, k=k, partitions=partitions)
         if materialize:
             g = g.localCheckpoint(eager=True)
     kt = g.schema[key].dataType.simpleString()

@@ -366,12 +366,15 @@ def ccnet_buckets(
         raise ValueError(f"cuts {cuts!r} collide at integer-percent names")
     th_cols = [f"__gps_ccb_{q}" for q in qnames]
     if method == "exact":
-        from guava_probably_spark.operators.grouped_quantiles import grouped_quantiles
+        from guava_probably_spark.operators.grouped_quantiles import (
+            grouped_quantiles,
+            quantile_names,
+        )
 
         th = grouped_quantiles(
             df.filter(F.col(col).isNotNull()), key, col, qs=tuple(cuts)
         ).select(
-            key, *[F.col(q).alias(t) for q, t in zip(qnames, th_cols)]
+            key, *[F.col(q).alias(t) for q, t in zip(quantile_names(cuts), th_cols)]
         )
     elif method == "kll":
         from guava_probably_spark import SketchSpec

@@ -235,28 +235,34 @@ def main() -> None:
 
     from guava_probably_spark.operators import grouped_kll
 
+    # a planted hot key: 40,000 rows of one key over 4 input partitions,
+    # far above KLL's probe threshold (max(16k, 1024) rows per partition)
+    hot = spark.range(0, 40_000, 1, 4).select(
+        F.lit("hot").alias("event_type"), (F.col("id") % 97).cast("double").alias("value")
+    )
     sections.append((
-        "Grouped KLL — two-phase skew armor (pre_reduce=True)",
-        "Phase 1 (`MapInArrow` directly over the scan) pre-builds partial "
+        "Grouped KLL — two-phase skew armor (planted hot key)",
+        "Built from a planted hot key (40,000 rows of one key over 4 input "
+        "partitions), so the shared driver's sampled skew probe fires. "
+        "Phase 1 (`MapInArrow` directly over the input) pre-builds partial "
         "sketch blobs for per-partition-hot keys and forwards cold rows "
         "raw; the ONE Exchange above it carries the mixed narrow stream "
         "(8-byte values + KB blobs), never a hot key's raw row set; phase "
-        "2 merges per key. The default `pre_reduce=\"auto\"` picks this "
-        "plan only when the sampled skew probe fires — unskewed inputs "
-        "keep the single-phase shape (no first MapInArrow).",
-        fmt(grouped_kll(events, "event_type", "value", k=64, pre_reduce=True)),
+        "2 merges per key. Unskewed inputs keep the single-phase shape "
+        "(no first MapInArrow).",
+        fmt(grouped_kll(hot, "event_type", "value", k=64)),
     ))
     sections.append((
         "Grouped HLL — one Python stage (default)",
-        "The shared plan of `grouped_hll`, `grouped_cms` and "
-        "`grouped_theta` when no map-side combine runs (the HLL default; "
-        "CMS and theta when the sampled skew probe finds no hot key): the "
+        "The shared driver's plan (`_arrow_common.grouped_build`) when no "
+        "map-side combine runs (always for HLL; for the other grouped "
+        "builds when the sampled skew probe finds no hot key): the "
         "JVM projects (key, value), ONE Exchange co-locates each key in "
         "`defaultParallelism` partitions (one wave of Python tasks) unless "
         "`partitions` is given, and ONE `MapInArrow` hashes the values "
         "and builds every key's sketch in the same task. A hot key swaps "
         "in a map-side combine below the Exchange (second `MapInArrow`).",
-        fmt(grouped_hll(events, "event_type", "user_id", p=12, pre_reduce=False)),
+        fmt(grouped_hll(events, "event_type", "user_id", p=12)),
     ))
     sections.append((
         "Grouped HLL — JVM prehash (prehash=True)",
@@ -272,7 +278,8 @@ def main() -> None:
 
     sections.append((
         "Source-overlap matrix (all-pairs set algebra from blobs)",
-        "ONE corpus scan (the grouped-theta build, map-side KMV pre-reduce) "
+        "ONE corpus scan (the grouped-theta build; the map-side KMV combine "
+        "runs when the skew probe finds a hot source) "
         "produces a ≤k·8-byte blob per source, pinned once via eager "
         "`localCheckpoint` (both `Scan ExistingRDD` nodes below read that "
         "materialized blob table — without it the self-join re-derived the "

@@ -202,10 +202,8 @@ def test_grouped_quantiles_counted_runs_property(rows, n_chunks):
     import numpy as np
     import pyarrow as pa
 
-    from guava_probably_spark.operators.grouped_quantiles import (
-        _build_stage,
-        _prereduce_stage,
-    )
+    from guava_probably_spark.operators._arrow_common import run_combine
+    from guava_probably_spark.operators.grouped_quantiles import _build_stage
 
     keys = pa.array([f"k{k}" for k, _ in rows], type=pa.string())
     vals = pa.array([v for _, v in rows], type=pa.float64())
@@ -232,6 +230,6 @@ def test_grouped_quantiles_counted_runs_property(rows, n_chunks):
         }
 
     raw = run(batches)
-    reduced = list(_prereduce_stage()(iter(batches)))
+    reduced = list(run_combine(iter(batches)))
     combined = run(reduced)
     assert raw == combined

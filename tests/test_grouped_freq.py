@@ -1,5 +1,5 @@
 """Vectorized grouped CMS / segment-loop grouped KLL (operators/grouped_cms,
-operators/grouped_kll): blob parity with local builds, pre-reduce
+operators/grouped_kll): blob parity with local builds, map-side combine
 invariance, estimate accuracy, mergeability."""
 
 import numpy as np
@@ -7,11 +7,17 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
-from guava_probably_spark.operators import grouped_cms, grouped_kll
+from guava_probably_spark.operators import _arrow_common, grouped_cms, grouped_kll
 from guava_probably_spark.sketches import Sketch
 from guava_probably_spark.sketches.base import FUNNEL_UTF8
 from guava_probably_spark.sketches.cms import CmsSketch
 from guava_probably_spark.sketches.kll import KllSketch
+
+
+def _probe_says(monkeypatch, verdict):
+    """Pin the grouped driver's skew-probe verdict: True takes the map-side
+    combine, False the one-stage build, whatever the input."""
+    monkeypatch.setattr(_arrow_common, "_skew_probe", lambda rows, threshold: verdict)
 
 
 def _docs(n=9_000, keys=4, vals=300):
@@ -41,13 +47,12 @@ def test_grouped_cms_blob_identical_to_local(spark):
         assert true <= sk.freq(heavy) <= true + sk.error_bound()
 
 
-def test_grouped_cms_prereduce_invariant(spark):
+def test_grouped_cms_prereduce_invariant(spark, monkeypatch):
     df = spark.createDataFrame(_docs(n=12_000, keys=3, vals=50)).repartition(7)
+    _probe_says(monkeypatch, True)
     a = {r.key: (r.sketch, r.n) for r in grouped_cms(df, "g", "v", 0.02, 0.1).collect()}
-    b = {
-        r.key: (r.sketch, r.n)
-        for r in grouped_cms(df, "g", "v", 0.02, 0.1, pre_reduce=False).collect()
-    }
+    _probe_says(monkeypatch, False)
+    b = {r.key: (r.sketch, r.n) for r in grouped_cms(df, "g", "v", 0.02, 0.1).collect()}
     assert a == b
 
 
@@ -219,7 +224,7 @@ def _hotkey_pdf(n_hot=60_000, n_cold_keys=500, rows_per_cold=8, seed=5):
     return pd.concat([hot, cold], ignore_index=True)
 
 
-def test_grouped_kll_hotkey_prereduce_bounds_shuffle_and_keeps_bounds(spark):
+def test_grouped_kll_hotkey_prereduce_bounds_shuffle_and_keeps_bounds(spark, monkeypatch):
     """Skew armor (VERDICT r2 item 2): a planted hot key must cross the
     exchange as ≤ input_parts partial blobs, not its raw row set, and the
     merged estimates must stay within the published rank-error bound."""
@@ -248,11 +253,13 @@ def test_grouped_kll_hotkey_prereduce_bounds_shuffle_and_keeps_bounds(spark):
     cold_raw = mixed.where(F.col("k") == "c0").collect()
     assert all(r.s is None for r in cold_raw) and len(cold_raw) == 8
 
-    # end to end: estimates within bound, counts exact, vs pre_reduce=False
+    # end to end: estimates within bound, counts exact, with and without
+    # the combine
     for flag in (True, False):
+        _probe_says(monkeypatch, flag)
         rows = {
             r.key: (Sketch.from_bytes(r.sketch), r.n)
-            for r in grouped_kll(df, "g", "x", k=200, pre_reduce=flag).collect()
+            for r in grouped_kll(df, "g", "x", k=200).collect()
         }
         sk, n = rows["hot"]
         assert n == 60_000
@@ -281,14 +288,12 @@ def test_grouped_tdigest_hotkey_prereduce_estimates(spark):
         assert abs(est_rank - q) <= 0.02
 
 
-def test_grouped_mode_hotkey_prereduce_identical_and_bounded(spark):
+def test_grouped_mode_hotkey_prereduce_identical_and_bounded(spark, monkeypatch):
     """grouped_mode's map-side (key, value, count) combine: result rows are
     IDENTICAL to the unreduced build (mode is count-distributive) and a hot
     key crosses the shuffle as ≤ parts × distinct_values counted rows."""
-    from guava_probably_spark.operators.grouped_mode import (
-        _prereduce_stage,
-        grouped_mode,
-    )
+    from guava_probably_spark.operators._arrow_common import run_combine
+    from guava_probably_spark.operators.grouped_mode import grouped_mode
 
     rng = np.random.default_rng(9)
     n_hot = 50_000
@@ -301,15 +306,14 @@ def test_grouped_mode_hotkey_prereduce_identical_and_bounded(spark):
     )
     df = spark.createDataFrame(pdf).repartition(8)
 
-    mixed = df.select("g", "v").mapInArrow(
-        _prereduce_stage(), "k string, v string, c bigint"
-    )
+    mixed = df.select("g", "v").mapInArrow(run_combine, "k string, v string, c bigint")
     hot_rows = mixed.where(F.col("k") == "hot").collect()
     assert len(hot_rows) <= 8 * 5  # parts × distinct values
     assert sum(r.c for r in hot_rows) == n_hot
 
-    a = sorted(map(tuple, grouped_mode(df, "g", "v").collect()))
-    b = sorted(map(tuple, grouped_mode(df, "g", "v", pre_reduce=False).collect()))
+    a = sorted(map(tuple, grouped_mode(df, "g", "v").collect()))  # hot: combined
+    _probe_says(monkeypatch, False)
+    b = sorted(map(tuple, grouped_mode(df, "g", "v").collect()))
     assert a == b
     hot = [t for t in a if t[0] == "hot"]
     counts = pdf[pdf.g == "hot"].v.value_counts()
@@ -361,20 +365,15 @@ def test_grouped_hll_prehash_estimates_and_funnel_isolation(spark):
     (row,) = grouped_hll(ndf, "g", "v", p=p, prehash=True).collect()
     sk = Sketch.from_bytes(row.sketch)
     assert row.n == 5 and abs(sk.estimate() - 1.0) < 0.5
-    # mutually exclusive with pre_reduce
-    with pytest.raises(ValueError):
-        grouped_hll(df, "g", "v", prehash=True, pre_reduce=True)
 
 
-def test_grouped_quantiles_hotkey_prereduce_identical_and_bounded(spark):
+def test_grouped_quantiles_hotkey_prereduce_identical_and_bounded(spark, monkeypatch):
     """grouped_quantiles' run-length combine: results IDENTICAL to the
     unreduced build (nearest-rank over counted runs is the same order
     statistic) and a hot key crosses the shuffle as ≤ parts × distinct
     values counted rows."""
-    from guava_probably_spark.operators.grouped_quantiles import (
-        _prereduce_stage,
-        grouped_quantiles,
-    )
+    from guava_probably_spark.operators._arrow_common import run_combine
+    from guava_probably_spark.operators.grouped_quantiles import grouped_quantiles
 
     rng = np.random.default_rng(13)
     n_hot = 50_000
@@ -389,14 +388,16 @@ def test_grouped_quantiles_hotkey_prereduce_identical_and_bounded(spark):
     df = spark.createDataFrame(pdf).repartition(8)
 
     mixed = df.select("g", F.col("x").cast("double")).mapInArrow(
-        _prereduce_stage(), "k string, v double, c bigint"
+        run_combine, "k string, v double, c bigint"
     )
     hot_rows = mixed.where(F.col("k") == "hot").collect()
     assert len(hot_rows) <= 8 * 40  # parts × distinct values
     assert sum(r.c for r in hot_rows) == n_hot
 
-    a = sorted(map(tuple, grouped_quantiles(df, "g", "x", pre_reduce=True).collect()))
-    b = sorted(map(tuple, grouped_quantiles(df, "g", "x", pre_reduce=False).collect()))
+    _probe_says(monkeypatch, True)
+    a = sorted(map(tuple, grouped_quantiles(df, "g", "x").collect()))
+    _probe_says(monkeypatch, False)
+    b = sorted(map(tuple, grouped_quantiles(df, "g", "x").collect()))
     assert a == b
     # nearest-rank parity with numpy on the hot key
     hot = dict(zip(("g", "n", "q25", "q50", "q75"), [t for t in a if t[0] == "hot"][0]))
@@ -409,9 +410,7 @@ def test_grouped_quantiles_hotkey_prereduce_identical_and_bounded(spark):
 def test_skew_probe_memoization(spark):
     """The sampled skew probe memoizes per (plan semanticHash, threshold):
     a second call with the same input plan must not run another Spark job."""
-    import importlib
-
-    gk = importlib.import_module("guava_probably_spark.operators.grouped_kll")
+    gk = _arrow_common
 
     pdf = pd.DataFrame({"g": [f"k{i % 5}" for i in range(1000)], "x": range(1000)})
     df = spark.createDataFrame(pdf)
@@ -430,12 +429,12 @@ def test_skew_probe_memoization(spark):
     assert len(gk._PROBE_CACHE) == 2
 
 
-def test_grouped_dd_byte_identical_under_any_partitioning(spark):
+def test_grouped_dd_byte_identical_under_any_partitioning(spark, monkeypatch):
     """grouped_dd (per-key relative-error quantiles): DD ingest/merge are
     order-insensitive exact bucket addition, so per-key blobs must be
-    byte-identical to a local build under ANY partitioning AND both
-    pre_reduce paths — the grouped-HLL/CMS determinism class, which
-    grouped_kll/tdigest (order-sensitive) cannot give."""
+    byte-identical to a local build under ANY partitioning AND with or
+    without the map-side combine — the grouped-HLL/CMS determinism class,
+    which grouped_kll/tdigest (order-sensitive) cannot give."""
     from guava_probably_spark.operators import grouped_dd
     from guava_probably_spark.sketches.dd import DDSketch
 
@@ -449,11 +448,15 @@ def test_grouped_dd_byte_identical_under_any_partitioning(spark):
         sk = DDSketch(0.01)
         sk.update(np.asarray(sub.x, dtype=float))
         local[g] = sk.to_bytes()
-    for parts, flag in ((1, False), (7, False), (16, True), (16, "auto")):
+    for parts, flag in ((1, False), (7, False), (16, True), (16, None)):
+        if flag is None:
+            monkeypatch.undo()  # the real probe
+        else:
+            _probe_says(monkeypatch, flag)
         df = spark.createDataFrame(pdf).repartition(parts)
         rows = {
             r.key: (r.sketch, r.n)
-            for r in grouped_dd(df, "g", "x", alpha=0.01, pre_reduce=flag).collect()
+            for r in grouped_dd(df, "g", "x", alpha=0.01).collect()
         }
         assert set(rows) == set(local)
         for g, (blob, cnt) in rows.items():
@@ -461,7 +464,7 @@ def test_grouped_dd_byte_identical_under_any_partitioning(spark):
             assert blob == local[g], (parts, flag, g)
 
 
-def test_grouped_dd_hotkey_prereduce_value_bound(spark):
+def test_grouped_dd_hotkey_prereduce_value_bound(spark, monkeypatch):
     """Skew armor carries over: a planted hot key ships ≤ one partial blob
     per input partition, and every quantile of the merged sketch is within
     α of the exact value (heavy-tailed data — the DD guarantee)."""
@@ -490,9 +493,10 @@ def test_grouped_dd_hotkey_prereduce_value_bound(spark):
 
     srt = np.sort(hot)
     for flag in (True, False):
+        _probe_says(monkeypatch, flag)
         rows = {
             r.key: (Sketch.from_bytes(r.sketch), r.n)
-            for r in grouped_dd(df, "g", "x", alpha=0.01, pre_reduce=flag).collect()
+            for r in grouped_dd(df, "g", "x", alpha=0.01).collect()
         }
         sk, cnt = rows["hot"]
         assert cnt == len(hot) and sk.collapses == 0
@@ -506,8 +510,8 @@ def test_grouped_cms_prehash_blob_identity_probe_and_isolation(spark):
     """prehash=True (JVM xxhash64, text never crosses the boundary): the
     grouped blob is BYTE-IDENTICAL to a local CmsSketch(FUNNEL_PREHASHED)
     fed the same Spark-computed hashes; estimates bracket exact counts
-    through the hash probe; murmur3-funnel merges refuse; pre_reduce
-    combo raises; nulls are dropped."""
+    through the hash probe; murmur3-funnel merges refuse; nulls are
+    dropped."""
     from guava_probably_spark.operators import grouped_cms
     from guava_probably_spark.sketches.base import (
         FUNNEL_PREHASHED,
@@ -557,8 +561,6 @@ def test_grouped_cms_prehash_blob_identity_probe_and_isolation(spark):
     # raw values against a prehashed sketch must raise, not mis-probe
     with pytest.raises(IncompatibleSketchError):
         rows["k0"][0].estimate(["item1"])
-    with pytest.raises(ValueError):
-        grouped_cms(df, "g", "v", eps, delta, prehash=True, pre_reduce=True)
     # nulls dropped (xxhash64(NULL) = seed must not count)
     ndf = spark.createDataFrame(pd.DataFrame({"g": ["a"] * 6, "v": ["x", None] * 3}))
     (row,) = grouped_cms(ndf, "g", "v", eps, delta, prehash=True).collect()
@@ -603,14 +605,12 @@ def test_grouped_theta_prehash_blob_identity_and_isolation(spark):
     }
     with pytest.raises(IncompatibleSketchError):
         rows["k0"][0].merge(plain["k0"])
-    with pytest.raises(ValueError):
-        grouped_theta(df, "g", "v", k=256, prehash=True, pre_reduce=True)
 
 
-def test_grouped_req_relative_tail_both_phases(spark):
+def test_grouped_req_relative_tail_both_phases(spark, monkeypatch):
     """grouped_req on the shared kernel: per-key extreme-tail ranks within
     the RELATIVE bound (eps*(1-q)) — exercised through BOTH the
-    single-phase build and the forced pre_reduce partial path (REQ
+    single-phase build and the forced map-side partial path (REQ
     partials are mergeable)."""
     rng = np.random.default_rng(23)
     n = 60_000
@@ -621,9 +621,10 @@ def test_grouped_req_relative_tail_both_phases(spark):
     from guava_probably_spark.operators import grouped_req
 
     for phase in (False, True):
+        _probe_says(monkeypatch, phase)
         rows = {
             r.key: (Sketch.from_bytes(r.sketch), r.n)
-            for r in grouped_req(df, "g", "x", k=32, pre_reduce=phase).collect()
+            for r in grouped_req(df, "g", "x", k=32).collect()
         }
         assert len(rows) == 4
         for g, sub in pdf.groupby("g"):
@@ -638,3 +639,29 @@ def test_grouped_req_relative_tail_both_phases(spark):
                 hi = float(np.mean(xs <= v))
                 err = max(0.0, lo - q, q - hi)
                 assert err <= eps * (1 - q + 1.0 / m), (g, q, phase)
+
+
+def test_grouped_quantiles_fractional_percent_names(spark):
+    """Output columns come from one naming helper: whole percents keep
+    ``q50``, fractional ones become ``q99_9`` (they used to round into
+    ``q100`` and collide with the maximum), and quantiles that would share
+    a name raise up front instead of failing in a task."""
+    from guava_probably_spark.operators.grouped_quantiles import (
+        grouped_quantiles,
+        quantile_trim,
+    )
+
+    df = spark.range(2_000).select(
+        (F.col("id") % 2).alias("g"), F.col("id").cast("double").alias("x")
+    )
+    out = grouped_quantiles(df, "g", "x", qs=(0.5, 0.999))
+    assert out.columns == ["g", "n", "q50", "q99_9"]
+    rows = {r.g: r for r in out.collect()}
+    assert (rows[0].q50, rows[0].q99_9) == (998.0, 1996.0)  # max is 1998.0
+    got = {r.g: tuple(r)[2:] for r in grouped_quantiles(df, "g", "x", qs=(0.99, 0.999, 1.0)).collect()}
+    assert got == {0: (1978.0, 1996.0, 1998.0), 1: (1979.0, 1997.0, 1999.0)}
+    with pytest.raises(ValueError, match="q50"):
+        grouped_quantiles(df, "g", "x", qs=(0.5, 0.5))
+    # quantile_trim names its threshold with the same helper
+    kept = quantile_trim(df, "g", "x", q=0.999, keep="above").orderBy("x").collect()
+    assert [r.x for r in kept] == [1998.0, 1999.0]  # above p99.9 (1996, 1997)

@@ -112,43 +112,6 @@ def test_grouped_packer_mixed_dense_and_sparse_rows(spark):
     assert round(cold.estimate()) == 1
 
 
-def test_grouped_prereduce_blob_identical_and_caps_shuffle(spark):
-    """pre_reduce=True must produce byte-identical blobs to the direct path
-    (same registers, same packer) while capping any key's shuffle rows at
-    m register rows + 1 count row per input partition."""
-    import pandas as pd
-
-    from pyspark.sql import functions as F
-
-    from guava_probably_spark.operators import grouped_hll
-    from guava_probably_spark.operators.grouped_hll import _prereduce_stage
-
-    n_hot = 40_000
-    pdf = pd.DataFrame(
-        {
-            "k": ["hot"] * n_hot + [f"c{i}" for i in range(200)],
-            "v": [f"u{i % 5000}" for i in range(n_hot)] + ["x"] * 200,
-        }
-    )
-    df = spark.createDataFrame(pdf).repartition(4)
-    a = {
-        r.k: (r.sketch, r.n)
-        for r in grouped_hll(df, "k", "v", p=10, output="sketch").collect()
-    }
-    b = {
-        r.k: (r.sketch, r.n)
-        for r in grouped_hll(df, "k", "v", p=10, output="sketch", pre_reduce=True).collect()
-    }
-    assert a == b  # byte-identical blobs AND identical counts
-    # shuffle-row cap: pre-reduced rows per partition <= keys*(m+1)
-    reduced = df.select("k", "v").mapInArrow(_prereduce_stage(1, 10), "k string, reg int, v bigint")
-    rows = reduced.count()
-    # hot key alone would be 40k rows un-reduced; with m=1024 it is <= 4*(1024+1)
-    assert rows <= 4 * 201 * 60 and rows < n_hot  # loose bound; key point: << raw rows
-    hot_rows = reduced.filter(F.col("k") == "hot").count()
-    assert hot_rows <= 4 * (1024 + 1)
-
-
 def test_grouped_assume_colocated_zero_shuffle(spark):
     """assume_colocated on pre-partitioned input: identical results, and the
     plan contains no Exchange above the scan-side repartition."""
@@ -162,9 +125,7 @@ def test_grouped_assume_colocated_zero_shuffle(spark):
         r.event_type: r.sketch
         for r in grouped_hll(events, "event_type", "user_id", p=10).collect()
     }
-    colo = grouped_hll(
-        pre, "event_type", "user_id", p=10, assume_colocated=True, pre_reduce=True
-    )
+    colo = grouped_hll(pre, "event_type", "user_id", p=10, assume_colocated=True)
     got = {r.event_type: r.sketch for r in colo.collect()}
     assert got == base
     plan = colo._jdf.queryExecution().executedPlan().toString()
@@ -173,9 +134,15 @@ def test_grouped_assume_colocated_zero_shuffle(spark):
     assert final.count("Exchange") == 1
 
 
-def test_grouped_hll_files_matches_jvm_scan_path(spark):
+def test_grouped_hll_files_matches_jvm_scan_path(spark, tmp_path):
     """grouped_hll_files (python-native file scan) produces byte-identical
-    blobs to the JVM-scan grouped path."""
+    blobs to the JVM-scan grouped path — for a string key and for a date
+    key (the key's Spark type comes from the parquet schema)."""
+    import datetime
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
     from guava_probably_spark.operators import grouped_hll, grouped_hll_files
 
     path = os.path.join(SF_DIR, "events.parquet")
@@ -189,3 +156,27 @@ def test_grouped_hll_files_matches_jvm_scan_path(spark):
         for r in grouped_hll_files(spark, path, "event_type", "user_id", p=12).collect()
     }
     assert a == b
+
+    days = tmp_path / "days.parquet"
+    start = datetime.date(2024, 1, 1)
+    pq.write_table(
+        pa.table(
+            {
+                "day": pa.array(
+                    [start + datetime.timedelta(days=i % 5) for i in range(2_000)],
+                    pa.date32(),
+                ),
+                "user": [f"u{i % 300}" for i in range(2_000)],
+            }
+        ),
+        str(days),
+    )
+    a = {
+        r.day: (r.sketch, r.n)
+        for r in grouped_hll(spark.read.parquet(str(days)), "day", "user", p=12).collect()
+    }
+    b = {
+        r.day: (r.sketch, r.n)
+        for r in grouped_hll_files(spark, str(days), "day", "user", p=12).collect()
+    }
+    assert len(a) == 5 and a == b

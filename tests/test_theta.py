@@ -239,13 +239,14 @@ def test_grouped_theta_compressed_regime_blob_identical(spark):
     assert Sketch.from_bytes(rows["big"]).estimate() == big_ref.estimate()
 
 
-def test_grouped_theta_prereduce_blob_identical(spark):
+def test_grouped_theta_prereduce_blob_identical(spark, monkeypatch):
     """Map-side KMV combine must not change output blobs or counts: the
-    retained-set union is associative, so pre_reduce=True is byte-identical
-    to the unreduced build across partitionings, including duplicates."""
+    retained-set union is associative, so the combined build is
+    byte-identical to the unreduced one across partitionings, including
+    duplicates."""
     import pandas as pd
 
-    from guava_probably_spark.operators import grouped_theta
+    from guava_probably_spark.operators import _arrow_common, grouped_theta
 
     n = 20_000
     pdf = pd.DataFrame(
@@ -255,11 +256,12 @@ def test_grouped_theta_prereduce_blob_identical(spark):
         }
     )
     df = spark.createDataFrame(pdf).repartition(7)
-    a = {r.g: (r.sketch, r.n) for r in grouped_theta(df, "g", "v", k=256).collect()}
-    b = {
-        r.g: (r.sketch, r.n)
-        for r in grouped_theta(df, "g", "v", k=256, pre_reduce=False).collect()
-    }
+
+    def build(combine):  # pin the grouped driver's skew-probe verdict
+        monkeypatch.setattr(_arrow_common, "_skew_probe", lambda rows, t: combine)
+        return {r.g: (r.sketch, r.n) for r in grouped_theta(df, "g", "v", k=256).collect()}
+
+    a, b = build(True), build(False)
     assert a == b
     for g, (blob, cnt) in a.items():
         ref = ThetaSketch(k=256, funnel=1)
@@ -284,7 +286,7 @@ def test_grouped_theta_stages_tolerate_zero_row_batches():
         [pa.array([], type=pa.string()), pa.array([], type=pa.string())],
         names=["k", "v"],
     )
-    assert list(_prereduce_stage(1, 64)(iter([empty_raw]))) == []
+    assert list(_prereduce_stage(64)(iter([empty_raw]))) == []
 
     empty_mid = pa.RecordBatch.from_arrays(
         [pa.array([], type=pa.string()), pa.array([], type=pa.int64())],
