@@ -15,6 +15,12 @@ Layout:
 
 __version__ = "0.1.0"
 
+from . import _worker
+
+# in a Spark Python worker, stop pyspark's per-task importlib.invalidate_caches()
+# from re-reading every zip on sys.path (see _worker.py)
+_worker.install_on_worker()
+
 from .sketches import (  # noqa: F401
     BloomSketch,
     CmsSketch,

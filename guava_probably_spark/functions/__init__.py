@@ -59,6 +59,15 @@ def _cached_sketch(blob: bytes) -> Sketch:
     return sk
 
 
+def _blob_groups(blobs: pd.Series):
+    """(blob bytes, row mask) per distinct non-null blob of a batch: one
+    ``pd.factorize`` over the column (NULL → −1, skipped), not a byte
+    compare of every row against every distinct blob."""
+    codes, uniq = pd.factorize(blobs)
+    for code, blob in enumerate(uniq):
+        yield bytes(blob), codes == code
+
+
 def _coerce_for_funnel(arr: pa.Array, sk: Sketch) -> pa.Array:
     """pandas represents a nullable int column as float64(NaN) — restore the
     integer type for LONG-funnel sketches before hashing.
@@ -427,14 +436,9 @@ def sketch_contains():
 
     @pandas_udf(BooleanType())
     def f(blobs: pd.Series, values: pd.Series) -> pd.Series:
-        n = len(values)
-        out = np.zeros(n, dtype=bool)
-        if n == 0:
-            return pd.Series(out)
-        keys = blobs.map(lambda b: None if b is None else bytes(b))
-        for kb in keys.dropna().unique():
-            sk = _cached_sketch(kb)
-            m = (keys == kb).to_numpy(dtype=bool)
+        out = np.zeros(len(values), dtype=bool)
+        for blob, m in _blob_groups(blobs):
+            sk = _cached_sketch(blob)
             arr = _coerce_for_funnel(pa.Array.from_pandas(values[m]), sk)
             res = _expand_nulls(arr, sk.might_contain_batch(arr), False)
             out[m] = np.asarray(res, dtype=bool)

@@ -32,6 +32,7 @@ from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.types import BinaryType, LongType, StructField, StructType
 
 from ..sketches import Sketch, SketchSpec
+from ..sketches.base import FUNNEL_NONE, FUNNEL_PREHASHED, hash_column
 from ._arrow_common import repartition_by_key
 from .filetasks import list_input_files, plan_file_tasks
 
@@ -123,17 +124,25 @@ def _ingest_overflow(sk: Sketch, column) -> int:
     build path would be a silent false negative, so it flows into the
     partial's overflow column (bloom bits can't overflow; estimators
     never fail)."""
-    from ..sketches.base import FUNNEL_NONE, FUNNEL_PREHASHED, hash_column
-
-    ingest = getattr(sk, "ingest_hashes", None)
-    if sk.funnel in (FUNNEL_NONE, FUNNEL_PREHASHED) or ingest is None:
-        # FUNNEL_PREHASHED: the column already IS the 64-bit hash stream
-        # (JVM xxhash64) — update() derives (h1, h2) from it; murmur3
-        # re-hashing here would silently change the register domain
+    ingest = _hash_ingest(sk)
+    if ingest is None:
         sk.update(column)
         return 0
     _, h1, h2 = hash_column(column, sk.funnel)
     return int(ingest(h1, h2) or 0)
+
+
+def _hash_ingest(sk: Sketch):
+    """``sk.ingest_hashes`` when a build should murmur3 the column once and
+    ingest ``(h1, h2)``; None when the column must go through ``update()``:
+    value sketches (FUNNEL_NONE), value-carrying kinds with no hash-only
+    ingest (bottomk witnesses, varopt samples), and FUNNEL_PREHASHED, whose
+    column already IS the 64-bit hash stream (JVM xxhash64) — update()
+    derives (h1, h2) from it; murmur3 re-hashing would silently change the
+    register domain."""
+    if sk.funnel in (FUNNEL_NONE, FUNNEL_PREHASHED):
+        return None
+    return getattr(sk, "ingest_hashes", None)
 
 
 def build_partials(df: DataFrame, col: str, spec: SketchSpec) -> DataFrame:
@@ -337,6 +346,55 @@ _MULTI_ARROW = pa.schema(
 )
 
 
+class _MultiPartial:
+    """One task's partial of a multi-target build: per target a sketch, the
+    rows it consumed and its overflow count."""
+
+    def __init__(self, targets: list[tuple[str, str, SketchSpec]]):
+        self.targets = targets
+        self.sks = {name: spec.create() for name, _, spec in targets}
+        self.ns = dict.fromkeys(self.sks, 0)
+        self.ovs = dict.fromkeys(self.sks, 0)
+        self.first = True
+
+    def add(self, column_of) -> None:
+        """One batch into every target; ``column_of(c)`` is column ``c``'s
+        Arrow array. Hash-ingesting sketches on one column share one hash
+        pass — 3 sketches over conv_id = 1 hash."""
+        hashed: dict[tuple, tuple] = {}
+        for name, c, _ in self.targets:
+            column = column_of(c)
+            sk = self.sks[name]
+            if self.first:
+                _bind_funnel(sk, column)
+            ingest = _hash_ingest(sk)
+            if ingest is None:
+                sk.update(column)
+            else:
+                key = (c, sk.funnel)
+                if key not in hashed:
+                    hashed[key] = hash_column(column, sk.funnel)[1:]
+                self.ovs[name] += int(ingest(*hashed[key]) or 0)
+            self.ns[name] += len(column) - column.null_count
+        self.first = False
+
+    def batches(self) -> Iterator[pa.RecordBatch]:
+        """The partial as one (name, sketch, n, overflow) batch; nothing
+        when the task saw no non-null value."""
+        if all(v == 0 for v in self.ns.values()):
+            return
+        names = [name for name, _, _ in self.targets]
+        yield pa.RecordBatch.from_pydict(
+            {
+                "name": names,
+                "sketch": [self.sks[name].to_bytes() for name in names],
+                "n": [self.ns[name] for name in names],
+                "overflow": [self.ovs[name] for name in names],
+            },
+            schema=_MULTI_ARROW,
+        )
+
+
 def build_partials_multi(
     df: DataFrame, targets: list[tuple[str, str, SketchSpec]]
 ) -> DataFrame:
@@ -345,45 +403,10 @@ def build_partials_multi(
     col_idx = {c: i for i, c in enumerate(cols)}
 
     def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        from ..sketches.base import FUNNEL_NONE, hash_column
-
-        sks = {name: spec.create() for name, _, spec in targets}
-        ns = dict.fromkeys(sks, 0)
-        ovs = dict.fromkeys(sks, 0)
-        first = True
+        part = _MultiPartial(targets)
         for batch in batches:
-            # hash each column ONCE per batch; all hash-based sketches on the
-            # same column share (h1, h2) — 3 sketches over conv_id = 1 hash
-            hashed: dict[str, tuple] = {}
-            for name, c, _ in targets:
-                column = batch.column(col_idx[c])
-                sk = sks[name]
-                if first:
-                    _bind_funnel(sk, column)
-                ing = getattr(sk, "ingest_hashes", None)
-                if sk.funnel == FUNNEL_NONE or ing is None:
-                    # value-carrying kinds (bottomk witnesses, varopt
-                    # samples) have no hash-only ingest — same fallback as
-                    # the single-sketch build
-                    sk.update(column)
-                else:
-                    if c not in hashed:
-                        _, h1, h2 = hash_column(column, sk.funnel)
-                        hashed[c] = (h1, h2)
-                    ovs[name] += int(ing(*hashed[c]) or 0)
-                ns[name] += len(column) - column.null_count
-            first = False
-        if all(v == 0 for v in ns.values()):
-            return
-        yield pa.RecordBatch.from_pydict(
-            {
-                "name": [name for name, _, _ in targets],
-                "sketch": [sks[name].to_bytes() for name, _, _ in targets],
-                "n": [ns[name] for name, _, _ in targets],
-                "overflow": [ovs[name] for name, _, _ in targets],
-            },
-            schema=_MULTI_ARROW,
-        )
+            part.add(lambda c: batch.column(col_idx[c]))
+        yield from part.batches()
 
     return df.select(*cols).mapInArrow(fn, MULTI_SCHEMA)
 
@@ -489,12 +512,7 @@ def build_partials_files_multi(
     def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         import pyarrow.parquet as pq
 
-        from ..sketches.base import FUNNEL_NONE, hash_column
-
-        sks = {name: spec.create() for name, _, spec in targets}
-        ns = dict.fromkeys(sks, 0)
-        ovs = dict.fromkeys(sks, 0)
-        first = True
+        part = _MultiPartial(targets)
         for batch in batches:
             for file_path in batch.column(0).flatten().to_pylist():
                 # use_threads=False: 32 parallel workers must not each spin
@@ -506,35 +524,8 @@ def build_partials_files_multi(
                 # measured 2-3x kernel speedup and much better multi-core
                 # scaling vs whole-file batches (DRAM-bandwidth bound)
                 for rb in table.to_batches(max_chunksize=16384):
-                    hashed: dict[str, tuple] = {}
-                    for name, c, _ in targets:
-                        column = rb.column(rb.schema.get_field_index(c))
-                        sk = sks[name]
-                        if first:
-                            _bind_funnel(sk, column)
-                        ing = getattr(sk, "ingest_hashes", None)
-                        if sk.funnel == FUNNEL_NONE or ing is None:
-                            # value-carrying kinds (bottomk witnesses,
-                            # varopt samples) have no hash-only ingest
-                            sk.update(column)
-                        else:
-                            if c not in hashed:
-                                _, h1, h2 = hash_column(column, sk.funnel)
-                                hashed[c] = (h1, h2)
-                            ovs[name] += int(ing(*hashed[c]) or 0)
-                        ns[name] += len(column) - column.null_count
-                    first = False
-        if all(v == 0 for v in ns.values()):
-            return
-        yield pa.RecordBatch.from_pydict(
-            {
-                "name": [name for name, _, _ in targets],
-                "sketch": [sks[name].to_bytes() for name, _, _ in targets],
-                "n": [ns[name] for name, _, _ in targets],
-                "overflow": [ovs[name] for name, _, _ in targets],
-            },
-            schema=_MULTI_ARROW,
-        )
+                    part.add(lambda c: rb.column(rb.schema.get_field_index(c)))
+        yield from part.batches()
 
     return plan_file_tasks(spark, files).mapInArrow(fn, MULTI_SCHEMA)
 

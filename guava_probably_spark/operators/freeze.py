@@ -199,21 +199,12 @@ def frozen_lookup_udf(spark: SparkSession, frozen: DataFrame, shards: int):
     return lookup
 
 
-def _blob_groups(blobs: pd.Series):
-    """(blob bytes, row mask) per distinct non-null blob of a batch: one
-    ``pd.factorize`` over the column (NULL → −1, skipped), not a byte
-    compare of every row against every distinct blob."""
-    codes, uniq = pd.factorize(blobs)
-    for code, blob in enumerate(uniq):
-        yield bytes(blob), codes == code
-
-
 @pandas_udf(BooleanType())
 def _blob_probe(blobs: pd.Series, hashes: pd.Series) -> pd.Series:
     """(blob, prehash) → membership; rows group by distinct blob so the
     decode cost per Arrow batch is the number of distinct blobs (≈ shards
     present in the partition), via the module-level byte-keyed cache."""
-    from ..functions import _cached_sketch
+    from ..functions import _blob_groups, _cached_sketch
 
     h = hashes.to_numpy(dtype=np.int64, na_value=0)
     isnull = hashes.isna().to_numpy()
@@ -229,7 +220,7 @@ def _blob_probe(blobs: pd.Series, hashes: pd.Series) -> pd.Series:
 def _blob_lookup(blobs: pd.Series, hashes: pd.Series) -> pd.Series:
     """(blob, prehash) → stored value or NULL — the join-path twin of
     ``frozen_lookup_udf``."""
-    from ..functions import _cached_sketch
+    from ..functions import _blob_groups, _cached_sketch
 
     h = hashes.to_numpy(dtype=np.int64, na_value=0)
     isnull = hashes.isna().to_numpy()

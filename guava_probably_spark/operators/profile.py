@@ -42,6 +42,7 @@ from pyspark.sql import DataFrame, functions as F
 
 from ..sketches import Sketch, SketchSpec
 from ..sketches.base import FUNNEL_LONG, FUNNEL_UTF8
+from .grouped_quantiles import quantile_names
 
 PROFILE_DDL = (
     "column string, dtype string, n bigint, nulls bigint, hll binary, "
@@ -245,11 +246,6 @@ def profile_table(
     return partials.groupBy("column").applyInPandas(merge_fn, PROFILE_DDL)
 
 
-def _q_label(q: float) -> str:
-    """0.25 → q25, 0.5 → q50, 0.999 → q99_9 — stable legal column names."""
-    return "q" + f"{q * 100:g}".replace(".", "_")
-
-
 def profile_summary(
     df: DataFrame,
     columns: list[str] | None = None,
@@ -265,6 +261,7 @@ def profile_summary(
     vmax, mean).  Collects C blob rows to the driver (C = column count —
     the output is inherently one row per column, never per key)."""
     spark = df.sparkSession
+    qnames = quantile_names(quantiles)
     rows = profile_table(df, columns, hll_p=hll_p, mg_k=mg_k, kll_k=kll_k).collect()
     out = []
     for r in sorted(rows, key=lambda r: r.column):
@@ -278,8 +275,8 @@ def profile_summary(
                     {"item": str(item), "lo": int(c), "hi": int(c) + int(mg.e)}
                 )
         qvals = {}
-        for q in quantiles:
-            qvals[_q_label(q)] = (
+        for name, q in zip(qnames, quantiles):
+            qvals[name] = (
                 float(kll.quantile(np.array([q]))[0]) if kll is not None else None
             )
         non_null = r.n - r.nulls
@@ -304,7 +301,7 @@ def profile_summary(
                 ),
             }
         )
-    qddl = ", ".join(f"{_q_label(q)} double" for q in quantiles)
+    qddl = ", ".join(f"{name} double" for name in qnames)
     ddl = (
         "column string, dtype string, n bigint, nulls bigint, "
         "distinct_est bigint, distinct_rel_err double, "

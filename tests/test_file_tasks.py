@@ -85,3 +85,30 @@ def test_files_build_single_file(spark, transcripts_path):
     jvm_out = collect_sketches_multi(spark.read.parquet(transcripts_path), TARGETS)
     assert _blobs(files_out) == _blobs(jvm_out)
     assert files_out["hll_conv"][1] == pq.read_metadata(transcripts_path).num_rows
+
+
+def test_prehashed_specs_match_across_single_multi_and_file_builds(spark, tmp_path):
+    """A FUNNEL_PREHASHED column already is the 64-bit hash stream: the
+    multi and file builds must not murmur3 it (they once did, and the fold
+    raised ``column funnel 2 != sketch funnel 3``)."""
+    from guava_probably_spark.operators import collect_sketch
+    from guava_probably_spark.sketches.base import FUNNEL_PREHASHED
+
+    path = str(tmp_path / "prehashed")
+    spark.range(0, 50_000, numPartitions=4).select(
+        F.xxhash64(F.col("id") % 977).alias("h")
+    ).write.parquet(path)
+    df = spark.read.parquet(path)
+    targets = [
+        ("cms", "h", SketchSpec("cms", {"epsilon": 0.01, "delta": 0.01, "funnel": FUNNEL_PREHASHED})),
+        ("cs", "h", SketchSpec("countsketch", {"width": 2048, "depth": 5, "funnel": FUNNEL_PREHASHED})),
+    ]
+    multi = collect_sketches_multi(df, targets)
+    files = collect_sketches_files(spark, path, targets)
+    for name, col, spec in targets:
+        single, n, _ = collect_sketch(df, col, spec)
+        assert n == multi[name][1] == files[name][1] == 50_000
+        assert single.funnel == FUNNEL_PREHASHED
+        blob = single.to_bytes()
+        assert multi[name][0].to_bytes() == blob, name
+        assert files[name][0].to_bytes() == blob, name

@@ -124,3 +124,18 @@ def test_profile_empty_table(spark):
     df = spark.createDataFrame([], "id bigint, s string")
     assert profile_table(df).count() == 0
     assert profile_summary(df).count() == 0
+
+
+def test_profile_summary_quantile_names_stay_distinct(spark):
+    """0.9999999 and 1.0 once both named ``q100`` (and 1e-7 ``q1e-05``);
+    names now come from grouped_quantiles.quantile_names."""
+    df = spark.range(1, 2001).select(F.col("id").cast("double").alias("x"))
+    qs = (1e-7, 0.5, 0.9999999, 1.0)
+    (r,) = profile_summary(df, quantiles=qs).collect()
+    names = ["q0_00001", "q50", "q99_99999", "q100"]
+    assert [c for c in r.asDict() if c.startswith("q")] == names
+    vals = [r[c] for c in names]
+    assert all(v is not None for v in vals)
+    assert vals == sorted(vals)
+    assert abs(r.q50 - 1000) <= 3 * 1.7 / 200 * 2000 + 20  # kll k=200 rank band
+    assert r.q100 <= r.vmax == 2000.0

@@ -188,6 +188,30 @@ def test_sql_surface_sketch_contains_and_varopt_total(spark):
         "SELECT count(*) c FROM qv WHERE NOT sketch_contains(sketch, v)"
     ).collect()[0].c
     assert misses == 0  # zero FN through the SQL surface
+    # NULL blobs (g = 3 has no filter) and NULL values in one Arrow batch:
+    # both probe False, and every other row still probes True
+    mixed = (
+        spark.range(0, 4000)
+        .select(
+            (F.col("id") % 4).alias("g"),
+            F.when(F.col("id") % 7 == 0, None).otherwise(F.col("id") % 997).alias("v"),
+        )
+        .join(g, "g", "left")
+        .coalesce(1)
+    )
+    mixed.createOrReplaceTempView("qv_nulls")
+    got = spark.sql(
+        "SELECT sketch IS NULL AS no_blob, v IS NULL AS no_value, "
+        "sketch_contains(sketch, v) AS hit, count(*) AS c FROM qv_nulls "
+        "GROUP BY 1, 2, 3"
+    ).collect()
+    assert {(r.no_blob, r.no_value, r.hit) for r in got} == {
+        (False, False, True),
+        (False, True, False),
+        (True, False, False),
+        (True, True, False),
+    }
+    assert sum(r.c for r in got) == 4000
     # varopt_total == exact total weight through SQL
     wdf = spark.range(0, 5000).select(F.col("id").alias("k"), (F.col("id") % 13 + 1).alias("w"))
     sk, _, _ = collect_weighted_sketch(
