@@ -198,11 +198,13 @@ def _quantiles(kind: str, table: str, col: str, name: str):
 
 
 def _q_semijoin(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Sketch-pruned joins both ways: semi (bloom prune, FPs removed by the
-    real join) and anti (corpus delta via operators/semijoin.sketch_antijoin
-    — kind='sbf' so the dim filter builds ONE-PASS with no capacity, the
-    100-TB incremental-ingest shape; exact mode rescues FPs, so the count
-    equals the plain ANTI JOIN oracle)."""
+    """Sketch joins both ways: semi (sketch_semijoin) and anti (corpus delta
+    via operators/semijoin.sketch_antijoin, kind='sbf' so a dim past the
+    broadcast threshold builds its filter ONE-PASS with no capacity, the
+    100-TB incremental-ingest shape). Both are exact, so the counts equal
+    the plain JOIN / ANTI JOIN oracles. At the test scale factors the part
+    dim is within autoBroadcastJoinThreshold, so both take Spark's
+    broadcast join; tests/test_spark_pipeline.py runs the sketch regime."""
     from guava_probably_spark.operators import sketch_antijoin
 
     lineitem = _t(spark, sf_dir, "lineitem")

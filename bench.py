@@ -1331,8 +1331,8 @@ def run_pipeline_queries(spark, d_path: str, e_path: str) -> tuple[dict, dict]:
 
     def antijoin_delta():
         # corpus delta: which of 400k docs are NEW vs a 40k-doc "yesterday"
-        # corpus — broadcast-probe filter + left_anti rescue of the
-        # candidate slice only (exact)
+        # corpus (exact); keys within autoBroadcastJoinThreshold take one
+        # broadcast left_anti, larger ones the probe + candidate rescue
         from guava_probably_spark.operators import sketch_antijoin
 
         dim = big_docs.filter(F.col("doc_id") % 10 == 0).select(

@@ -18,6 +18,16 @@ a new ``sys.path`` entry with a freshly built importer, and an archive
 rewritten in place changes its stamp, so imports see the same files as
 before. The package ``__init__`` calls :func:`install_on_worker`, which
 does nothing outside a Spark Python worker.
+
+:func:`install` also stamps the zip importers already in
+``sys.path_importer_cache`` with their archives' current stamps, so a
+worker reads each archive once, in pyspark's refresh at the start of its
+first library task, and not once more in the next task. That trusts the
+refresh: the package is imported when that same task's functions are
+unpickled, after the refresh but before the task reads any input (a whole
+warm task takes 20-60 ms on a 4-core host), and an archive rewritten
+inside that window keeps its old directory until the archive changes
+again. Spark rewrites none of these archives while a worker lives.
 """
 
 from __future__ import annotations
@@ -31,14 +41,18 @@ import zipimport
 _STAMP = "_gps_archive_stamp"
 
 
+def _archive_stamp(archive: str):
+    try:
+        st = os.stat(archive)
+    except OSError:
+        return None
+    return (st.st_mtime_ns, st.st_size)
+
+
 def _stamped(refresh):
     @functools.wraps(refresh)
     def invalidate_caches(self):
-        try:
-            st = os.stat(self.archive)
-            stamp = (st.st_mtime_ns, st.st_size)
-        except OSError:
-            stamp = None
+        stamp = _archive_stamp(self.archive)
         # stat before the read: a rewrite during the read leaves a stamp
         # that differs from the next one, so it is re-read next time
         if stamp is None or getattr(self, _STAMP, None) != stamp:
@@ -49,15 +63,18 @@ def _stamped(refresh):
 
 
 def install() -> bool:
-    """Wrap ``zipimport.zipimporter.invalidate_caches`` (once per process).
-    Returns whether the method is wrapped; False when this Python has no
-    such method."""
+    """Wrap ``zipimport.zipimporter.invalidate_caches`` (once per process)
+    and stamp the zip importers already cached as fresh. Returns whether
+    the method is wrapped; False when this Python has no such method."""
     cls = zipimport.zipimporter
     refresh = getattr(cls, "invalidate_caches", None)
     if refresh is None:
         return False
     if not hasattr(refresh, "__wrapped__"):
         cls.invalidate_caches = _stamped(refresh)
+        for importer in list(sys.path_importer_cache.values()):
+            if isinstance(importer, cls):
+                setattr(importer, _STAMP, _archive_stamp(importer.archive))
     return True
 
 

@@ -1,24 +1,48 @@
-"""Sketch-accelerated semi-join pruning (SURVEY.md §2.3 "Joins").
+"""Sketch joins: semi-join pruning and the corpus-delta anti-join
+(SURVEY.md §2.3 "Joins").
 
-The distributed use of `mightContain` (SURVEY.md §2 row 5): build a filter on
-the dim side's join keys, broadcast the KB-sized blob, and pre-filter the
-fact side before the real join — Catalyst's own InjectRuntimeFilter does the
-same internally with BloomFilterAggregate; ours is the from-scratch,
-user-controllable version with selectable filter kind (bloom or cuckoo).
+Both joins pick their plan with Spark's own broadcast rule
+(``JoinSelection.canBroadcastBySize``): the join's build side is
+broadcastable when ``0 <= optimizedPlan.stats.sizeInBytes <=
+spark.sql.autoBroadcastJoinThreshold`` (:func:`_broadcastable`).
 
-At 100 TB scale this is the difference between shuffling the whole fact
-table into the join and shuffling only the ~selectivity fraction that can
-match. False positives only ever let extra rows through (the exact join
-then drops them); zero false negatives ⇒ never drops a matching row.
+- **Broadcastable:** the plain broadcast join. A ``BroadcastHashJoin``
+  never shuffles the fact side and is already an exact membership test in
+  the JVM, so a filter in front of it would only add work: a ``count()``
+  and a build over the dim, and a Python probe over every fact row.
+- **Not broadcastable:** the distributed use of ``mightContain`` (SURVEY.md
+  §2 row 5). Build a filter on the dim keys, broadcast the KB-sized blob
+  and probe the fact side ahead of the join, which keeps its broadcast
+  hint (the hint overrides the threshold). False positives only let extra
+  rows through (the exact join drops them); zero false negatives means no
+  matching row is dropped. Catalyst's InjectRuntimeFilter does the same
+  internally with BloomFilterAggregate; this is the user-controllable
+  version with a selectable filter kind (bloom, cuckoo or sbf). Whether
+  this regime should instead shuffle the pruned fact side, or be a plain
+  join, is open until a workload with a dim past the threshold measures
+  it (ROADMAP item 6).
+
+Either way the result equals the unpruned join.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.functions import broadcast
 
 from ..functions import might_contain_udf
 from ..sketches import SketchSpec
 from .build import collect_sketch
+
+
+def _broadcastable(build_side: DataFrame) -> bool:
+    """Spark's ``JoinSelection.canBroadcastBySize`` for ``build_side``:
+    its optimized plan's estimated size is known (non-negative) and at
+    most the session's ``autoBroadcastJoinThreshold`` (-1 disables)."""
+    jsession = build_side.sparkSession._jsparkSession
+    threshold = jsession.sessionState().conf().autoBroadcastJoinThreshold()
+    stats = build_side._jdf.queryExecution().optimizedPlan().stats()
+    return 0 <= int(str(stats.sizeInBytes())) <= threshold  # a Scala BigInt
 
 
 def sketch_prune(
@@ -66,7 +90,7 @@ def _dim_filter(dim: DataFrame, dim_key: str, kind: str, fpp: float, capacity: i
         sk, _, _ = collect_sketch(dim, dim_key, spec)
         return sk.compact()
     if capacity is None:
-        capacity = dim.count()  # dims are small by assumption; else pass it
+        capacity = dim.count()  # one extra action; pass capacity to skip it
     spec = SketchSpec(kind, {"capacity": max(capacity, 1), "fpp": fpp})
     sk, _, overflow = collect_sketch(dim, dim_key, spec)
     if overflow:
@@ -83,11 +107,15 @@ def sketch_semijoin(
     kind: str = "bloom",
     fpp: float = 0.01,
 ) -> DataFrame:
-    """Exact inner join, sketch-pruned: prune fact first, then join (the
-    join itself removes any false positives — result is exactly equal to the
-    unpruned join)."""
-    from pyspark.sql.functions import broadcast
+    """Exact inner join of `fact` and `dim` on fact_key == dim_key.
 
+    A broadcastable dim (:func:`_broadcastable`) gives the plain broadcast
+    hash join: no filter is built and nothing runs in Python. Otherwise the
+    fact side is pruned by a ``kind`` filter of the dim keys and then
+    joined to the broadcast dim; the join removes the false positives, so
+    the result equals the unpruned join."""
+    if _broadcastable(dim):
+        return fact.join(broadcast(dim), fact[fact_key] == dim[dim_key], "inner")
     pruned = sketch_prune(spark, fact, fact_key, dim, dim_key, kind, fpp)
     return pruned.join(broadcast(dim), pruned[fact_key] == dim[dim_key], "inner")
 
@@ -103,21 +131,27 @@ def sketch_antijoin(
     capacity: int | None = None,
     exact: bool = True,
 ) -> DataFrame:
-    """Corpus delta: the fact rows whose key is NOT in dim[dim_key].
+    """Corpus delta: the fact rows whose key is NOT in dim[dim_key]. Null
+    fact keys match nothing, so they are always in the delta, as in SQL's
+    anti-join.
 
     The incremental-ingest question at 100 TB — "which of today's 10^9
     documents are new relative to the existing corpus?" — without shuffling
-    either side in full.  The filter contract inverts cleanly:
+    either side in full.
+
+    ``exact=True`` (default) returns exactly the ``left_anti`` join. When
+    the distinct dim keys are broadcastable (:func:`_broadcastable`), that
+    is one broadcast ``left_anti`` join and no filter. Otherwise the filter
+    contract inverts cleanly:
 
     - probe == False  ⇒ the key is DEFINITELY absent (zero FN means a
       present key always probes True) — those rows pass with no join at all;
     - probe == True   ⇒ either a real match or a false positive (rate ≤
-      fpp).  With ``exact=True`` (default) only this candidate slice —
-      |matches| + fpp·|new| rows, not the whole fact side — goes through a
-      real ``left_anti`` join to rescue the false positives.  The result is
-      then EXACTLY the unfiltered anti-join.
+      fpp). Only this candidate slice — |matches| + fpp·|new| rows, not
+      the whole fact side — goes through a broadcast ``left_anti`` join
+      against the distinct dim keys, which rescues the false positives.
 
-    ``exact=False`` skips the rescue join entirely: the result is a pure
+    ``exact=False`` is the probe == False branch alone: a pure
     broadcast-probe filter (no shuffle of any side) that under-reports new
     rows by ≤ fpp — the conservative direction for dedup-style ingest
     (a duplicate is never re-admitted; a few new rows wait for a later
@@ -125,6 +159,11 @@ def sketch_antijoin(
 
     ``kind="sbf"`` builds the dim filter one-pass without a capacity.
     """
+    dim_keys = dim.select(dim[dim_key].alias("__dim_key")).distinct()
+    if exact and _broadcastable(dim_keys):
+        return fact.join(
+            broadcast(dim_keys), fact[fact_key] == dim_keys["__dim_key"], "left_anti"
+        )
     sk = _dim_filter(dim, dim_key, kind, fpp, capacity)
     probe = might_contain_udf(spark, sk.to_bytes())
     # null fact keys never match any dim key: SQL anti-join keeps them, so
@@ -133,14 +172,8 @@ def sketch_antijoin(
     definitely_new = fact.filter(~hit)
     if not exact:
         return definitely_new
-    from pyspark.sql.functions import broadcast
-
     candidates = fact.filter(hit)
-    # distinct shrinks the broadcast; the explicit hint keeps the rescue a
-    # BroadcastHashJoin even when autoBroadcastJoinThreshold is disabled
-    # (the documented plan shape — nothing here may shuffle the fact side)
-    dim_keys = broadcast(dim.select(dim[dim_key].alias("__dim_key")).distinct())
     rescued = candidates.join(
-        dim_keys, candidates[fact_key] == dim_keys["__dim_key"], "left_anti"
+        broadcast(dim_keys), candidates[fact_key] == dim_keys["__dim_key"], "left_anti"
     )
     return definitely_new.unionByName(rescued)

@@ -4,11 +4,16 @@
 The plan shapes ARE the scale argument (no raw-row shuffle, pruned scans,
 single exchange for windows, zero exchange for bucketed merges); this dumps
 them from a live session so the document can't drift from the code.
+
+    python scripts/dump_plans.py                     # the whole document
+    python scripts/dump_plans.py "Sketch anti-join"  # only the sections
+                                                     # whose titles begin with it
 """
 
 from __future__ import annotations
 
 import os
+import re
 import sys
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -91,31 +96,59 @@ def main() -> None:
         fmt(w),
     ))
 
-    sj = sketch_semijoin(
-        spark, lineitem, "l_partkey", part.filter(F.col("p_size") < 15), "p_partkey"
-    )
-    sections.append((
-        "Sketch semi-join pruning",
-        "The fact side is filtered by a broadcast bloom probe "
-        "(`ArrowEvalPython` under the join) BEFORE the join shuffle — "
-        "rows that cannot match never enter the exchange; the final join "
-        "is exact.",
-        fmt(sj),
-    ))
-
     from guava_probably_spark.operators import sketch_antijoin
 
-    aj = sketch_antijoin(
-        spark, lineitem, "l_partkey", part.filter(F.col("p_size") < 15), "p_partkey"
+    def both_regimes(join):
+        """The join's plan with a broadcastable dim, then with
+        autoBroadcastJoinThreshold=-1 (the regime of a dim past it)."""
+        small = fmt(join())
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+        try:
+            return small, fmt(join())
+        finally:
+            spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
+
+    dim = part.filter(F.col("p_size") < 15)
+    small, large = both_regimes(
+        lambda: sketch_semijoin(spark, lineitem, "l_partkey", dim, "p_partkey")
     )
     sections.append((
-        "Sketch anti-join (corpus delta)",
-        "Two branches under the union: probe==False rows pass with NO join "
-        "at all (a codegen filter over the broadcast blob probe); only the "
-        "candidate slice (matches + fpp·new) enters the "
-        "`BroadcastHashJoin LeftAnti` that rescues false positives. "
-        "Neither side of the anti-join ever shuffles the full fact table.",
-        fmt(aj),
+        "Sketch semi-join pruning — broadcastable dim",
+        "The dim is within `spark.sql.autoBroadcastJoinThreshold` (Spark's "
+        "own `canBroadcastBySize` rule), so the result is the plain "
+        "`BroadcastHashJoin`: it never shuffles the fact side and is "
+        "already an exact membership test, so no filter is built, the dim "
+        "is not counted and no row goes to Python.",
+        small,
+    ))
+    sections.append((
+        "Sketch semi-join pruning — dim past the broadcast threshold",
+        "Shown with `autoBroadcastJoinThreshold=-1`. The fact side is "
+        "filtered by the broadcast bloom probe (`ArrowEvalPython`) ahead "
+        "of the join, which keeps its broadcast hint, so the fact side "
+        "never shuffles; the `BroadcastHashJoin` drops the false "
+        "positives. Catalyst also infers the deterministic probe through "
+        "the join key onto the dim side, a second Python pass that drops "
+        "no dim row (ROADMAP item 6).",
+        large,
+    ))
+    small, large = both_regimes(
+        lambda: sketch_antijoin(spark, lineitem, "l_partkey", dim, "p_partkey")
+    )
+    sections.append((
+        "Sketch anti-join (corpus delta) — broadcastable dim keys",
+        "Exact mode with the distinct dim keys within the threshold: ONE "
+        "`BroadcastHashJoin LeftAnti` and no filter, no union, no Python.",
+        small,
+    ))
+    sections.append((
+        "Sketch anti-join (corpus delta) — dim keys past the threshold",
+        "Shown with `autoBroadcastJoinThreshold=-1`. Two branches under the "
+        "union: probe==False rows pass with NO join at all; only the "
+        "candidate slice (matches + fpp·new) enters the broadcast "
+        "`left_anti` join against the distinct dim keys that rescues "
+        "false positives. Neither fact branch shuffles.",
+        large,
     ))
 
     from guava_probably_spark.operators import freeze_filter, frozen_semijoin
@@ -401,23 +434,52 @@ def main() -> None:
             "user_id", "ts_epoch", SketchSpec("shll", {"p": 12})), 64)),
     ))
 
-    out = [
-        "# Physical plans of the core operators",
-        "",
-        "Generated by `python scripts/dump_plans.py` (sf0.001, local[4]) — ",
-        "regenerate after operator changes; plan-shape TESTS in `tests/` ",
-        "assert the properties called out below, this document shows them.",
-        "",
-    ]
-    for title, commentary, plan in sections:
-        out += [f"## {title}", "", commentary, "", "```", plan.rstrip(), "```", ""]
-    os.makedirs(os.path.join(REPO, "docs"), exist_ok=True)
-    with open(os.path.join(REPO, "docs", "PLANS.md"), "w") as f:
-        f.write("\n".join(out))
+    written = write_plans(sections, sys.argv[1:])
     for i in range(2):
         spark.sql(f"DROP TABLE IF EXISTS plans_half_{i}")
-    print(f"wrote docs/PLANS.md ({len(sections)} sections)")
+    print(f"wrote docs/PLANS.md ({written} sections)")
     spark.stop()
+
+
+def _block(title: str, commentary: str, plan: str) -> str:
+    return "\n".join([f"## {title}", "", commentary, "", "```", plan.rstrip(), "```", ""])
+
+
+def write_plans(sections: list[tuple[str, str, str]], only: list[str]) -> int:
+    """Write docs/PLANS.md; returns the number of sections written. With
+    title prefixes in ``only``, replace just the sections whose titles start
+    with one of them (at the place of the first such section, or at the end
+    of the file when none is there yet) and keep the rest as it is."""
+    path = os.path.join(REPO, "docs", "PLANS.md")
+    chosen = [s for s in sections if not only or s[0].startswith(tuple(only))]
+    if only and not chosen:
+        raise SystemExit(f"no section title begins with any of {only}")
+    blocks = [_block(*s) for s in chosen]
+    if only:
+        with open(path) as f:
+            head, *old = re.split(r"(?m)^(?=## )", f.read())
+        kept = []
+        for b in old:
+            if not b[3:].startswith(tuple(only)):
+                kept.append(b)
+            elif blocks:
+                kept += [x + "\n" for x in blocks]
+                blocks = []
+        body = head + "".join(kept)
+        if blocks:  # no such section in the file yet: append them
+            body = body.rstrip("\n") + "\n\n" + "\n".join(blocks)
+    else:
+        head = (
+            "# Physical plans of the core operators\n\n"
+            "Generated by `python scripts/dump_plans.py` (sf0.001, local[4]) — \n"
+            "regenerate after operator changes; plan-shape TESTS in `tests/` \n"
+            "assert the properties called out below, this document shows them.\n\n"
+        )
+        body = head + "\n".join(blocks)
+    os.makedirs(os.path.dirname(path), exist_ok=True)
+    with open(path, "w") as f:
+        f.write(body)
+    return len(chosen)
 
 
 if __name__ == "__main__":

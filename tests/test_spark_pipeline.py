@@ -209,7 +209,20 @@ def test_quantile_sketches_distributed(spark, lineitem):
             assert abs(rank - q) <= sk.rank_error_bound(), (kind, q)
 
 
-def test_semijoin_pruning_exact(spark, lineitem, sf_dir):
+@pytest.fixture(params=["default", "-1"], ids=["plain", "sketch"])
+def join_regime(request, spark):
+    """Both sketch-join regimes: Spark's default autoBroadcastJoinThreshold
+    (the small dims below are within it, so the plain broadcast join runs)
+    and -1 (no dim is within it, so the fact side is sketch-probed)."""
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    prev = spark.conf.get(key)
+    if request.param != "default":
+        spark.conf.set(key, request.param)
+    yield request.param
+    spark.conf.set(key, prev)
+
+
+def test_semijoin_pruning_exact(spark, lineitem, sf_dir, join_regime):
     part = spark.read.parquet(f"{sf_dir}/part.parquet")
     dim = part.filter(F.col("p_size") < 15)
     exact = lineitem.join(dim, lineitem.l_partkey == dim.p_partkey).count()
@@ -219,7 +232,7 @@ def test_semijoin_pruning_exact(spark, lineitem, sf_dir):
     assert sj.count() == exact  # join removes FPs → exactly equal
 
 
-def test_antijoin_corpus_delta_exact_and_conservative(spark):
+def test_antijoin_corpus_delta_exact_and_conservative(spark, join_regime):
     """sketch_antijoin: exact mode equals Spark's own left_anti (incl. null
     fact keys, which are 'new' by SQL anti-join semantics); approximate
     mode is a strict subset that misses only filter false positives; and

@@ -70,6 +70,31 @@ def test_unchanged_zip_is_not_reread_and_rewritten_zip_imports(tmp_path, monkeyp
         zipimport._zip_directory_cache.pop(zpath, None)
 
 
+@needs_zip_refresh
+def test_importer_cached_before_install_is_not_reread(tmp_path, monkeypatch):
+    """An importer already in ``sys.path_importer_cache`` when the package
+    installs was refreshed earlier in that task: install stamps it, so the
+    next ``invalidate_caches()`` keeps its directory."""
+    monkeypatch.setattr(
+        zipimport.zipimporter, "invalidate_caches", zipimport.zipimporter.invalidate_caches
+    )
+    zpath = str(tmp_path / "gps_worker_early.zip")
+    _write_zip(zpath, {"gps_worker_mod_c": "Z = 3\n"})
+    monkeypatch.syspath_prepend(zpath)
+    try:
+        assert importlib.import_module("gps_worker_mod_c").Z == 3
+        assert isinstance(sys.path_importer_cache[zpath], zipimport.zipimporter)
+        importlib.invalidate_caches()  # unwrapped: the refresh a task starts with
+        cached = zipimport._zip_directory_cache[zpath]
+        assert _worker.install()
+        importlib.invalidate_caches()
+        assert zipimport._zip_directory_cache[zpath] is cached
+    finally:
+        sys.modules.pop("gps_worker_mod_c", None)
+        sys.path_importer_cache.pop(zpath, None)
+        zipimport._zip_directory_cache.pop(zpath, None)
+
+
 def test_driver_import_machinery_is_untouched(spark):
     """Importing the package on the driver installs nothing: only a Spark
     Python worker has ``SparkFiles._is_running_on_worker`` set."""
@@ -95,19 +120,25 @@ def test_worker_task_does_not_reread_unchanged_zips(spark):
 
         for _ in batches:
             pass
-        # stamps importers this worker has not refreshed since the package loaded
-        importlib.invalidate_caches()
-        before = dict(zipimport._zip_directory_cache)
-        importlib.invalidate_caches()
-        replaced = sum(zipimport._zip_directory_cache.get(k) is not v for k, v in before.items())
-        yield pa.RecordBatch.from_pydict({"archives": [len(before)], "replaced": [replaced]})
+        replaced = []
+        for _ in range(2):
+            before = dict(zipimport._zip_directory_cache)
+            importlib.invalidate_caches()
+            replaced.append(
+                sum(zipimport._zip_directory_cache.get(k) is not v for k, v in before.items())
+            )
+        yield pa.RecordBatch.from_pydict(
+            {"archives": [len(before)], "first": [replaced[0]], "second": [replaced[1]]}
+        )
 
     rows = (
         spark.range(0, 8, numPartitions=4)
-        .mapInArrow(reread_probe, "archives long, replaced long")
+        .mapInArrow(reread_probe, "archives long, first long, second long")
         .collect()
     )
     assert len(rows) == 4
     # pyspark.zip and the spark-core jar sit on every worker's sys.path
     assert all(r.archives > 0 for r in rows)
-    assert [r.replaced for r in rows] == [0, 0, 0, 0]
+    # importers cached when the package installed were stamped then, so
+    # not even the first call after it re-reads an archive
+    assert [(r.first, r.second) for r in rows] == [(0, 0)] * 4
