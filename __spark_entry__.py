@@ -1337,9 +1337,10 @@ def _q_membership_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _xormap_lookup_row(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Frozen XOR static map (sketches/xormap.py) through the JOIN-path
-    lookup (operators/freeze.py frozen_lookup_join — shard-route + blob
-    join, no driver blob state): every frozen part key must return its
+    """Frozen XOR static map (sketches/xormap.py) through
+    operators/freeze.py frozen_lookup_join (at driver scale the blob table
+    is within the broadcast threshold, so the broadcast-UDF plan; the
+    shard join past it): every frozen part key must return its
     exact value (false_negatives counts misses AND wrong values — both
     must be 0; the map is exact for members), strangers resolve NULL
     except the 2^-f fingerprint tail."""

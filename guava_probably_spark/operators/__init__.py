@@ -19,7 +19,6 @@ from .freeze import (  # noqa: F401
     frozen_lookup_udf,
     frozen_probe_join,
     frozen_probe_udf,
-    frozen_semijoin,
 )
 from .semijoin import sketch_antijoin, sketch_prune, sketch_semijoin  # noqa: F401
 from .checkpoint import (  # noqa: F401

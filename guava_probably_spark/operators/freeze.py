@@ -7,23 +7,24 @@ probe-faster but global — it cannot merge — so at 100-TB scale the freeze
 is sharded: keys route to ``shards`` buckets by their 64-bit hash, each
 shard's filter is solved executor-side from its hash set, and the result
 is a small DataFrame of ``(shard, sketch, n)`` blobs.  No key list ever
-reaches the driver; driver-visible state is shards × ~1.23·f·n/shards
-bits.  Pick ``shards`` so a shard's distinct keys fit executor memory
-(~10 M keys/shard is comfortable; 4096 shards covers 4·10^10 keys).
+reaches the driver.  Pick ``shards`` so a shard's distinct keys fit
+executor memory (~10 M keys/shard is comfortable; 4096 shards covers
+4·10^10 keys).
 
-Probes come in two shapes, matched to the blob-table size:
+``frozen_probe_join`` / ``frozen_lookup_join`` pick the probe plan with
+Spark's broadcast rule (``semijoin._broadcastable``, i.e.
+``canBroadcastBySize`` on the blob table):
 
-- **broadcast** (``frozen_probe_udf`` / ``frozen_lookup_udf``): collect
-  the blob table, broadcast, route each probe hash to its shard — one
-  gather+XOR per probe, FPP exactly 2^-f.  Right up to a few hundred MB
-  of blobs.
-- **join** (``frozen_probe_join`` / ``frozen_lookup_join``): at the
-  4·10^10-key regime the blob table is ~50 GB — beyond broadcast.  Probe
-  hashes route to their shard JVM-side and JOIN the blob table on
-  ``shard``; each task probes its shard's rows against that one blob
-  executor-side.  No driver collect of blobs anywhere on this path.
+- **Broadcastable:** collect the blob table once per call, broadcast it
+  (``frozen_probe_udf`` / ``frozen_lookup_udf``) and apply the UDF to
+  ``xxhash64(key)`` alone: each probe hash routes to its shard in Python
+  (one gather+XOR per probe, FPP exactly 2^-f).  No fact shuffle, no join
+  and 8 B per row to Python.
+- **Not broadcastable** (the 4·10^10-key regime: a ~50 GB blob table):
+  probe hashes route to their shard JVM-side and JOIN the blob table on
+  ``shard``, and each task probes its rows against the joined blob.  No
+  driver collect of blobs on this path.
 
-``frozen_semijoin`` auto-selects between them on the measured blob bytes.
 Keys are hashed JVM-side with ``xxhash64`` (the FUNNEL_PREHASHED domain):
 the value bytes never cross the JVM→Python boundary in either build or
 probe, the same fast path the grouped prehash builds use.
@@ -31,19 +32,17 @@ probe, the same fast path the grouped prehash builds use.
 
 from __future__ import annotations
 
-from typing import Iterator
-
 import numpy as np
 import pandas as pd
-import pyarrow as pa
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import BooleanType, LongType
 
+from ..functions import _blob_groups, _cached_sketch
 from ..sketches.base import FUNNEL_PREHASHED
 from ..sketches.xorf import XorFilter
+from .semijoin import _broadcastable
 
 FROZEN_SCHEMA = "shard bigint, sketch binary, n bigint"
 
@@ -54,10 +53,57 @@ FROZEN_SCHEMA = "shard bigint, sketch binary, n bigint"
 # EVERY null row probes True.  The hash column must NOT be nulled to fix
 # this: a pandas_udf receiving a long column WITH nulls gets float64
 # (64-bit hashes lose low bits for the whole batch — measured: members
-# probe like strangers).  Instead the wrappers keep the hash column
-# non-null and make NULL keys deterministic OUTSIDE the hash: the join
-# path nulls the SHARD (no blob joins -> probe False / lookup NULL), the
-# broadcast path short-circuits the predicate before the UDF.
+# probe like strangers).  Instead the joins keep the hash column non-null
+# and make NULL keys deterministic OUTSIDE the hash: the broadcast plan
+# short-circuits the key before the UDF, the shard join nulls the SHARD
+# (no blob joins -> probe False / lookup NULL).
+
+
+def _blob_rows(hashes: pd.Series, blobs: pd.Series | list):
+    """One Arrow batch of prehashes split by the blob that answers them:
+    ``(uint64 hashes, [(blob, row mask), ...])``.  ``blobs`` is either the
+    broadcast shard table (a row's blob is ``blobs[pmod(h, len(blobs))]``)
+    or the joined blob column (``_blob_groups``).  Rows with a NULL hash,
+    a NULL joined blob or an empty shard are in no group: they probe False
+    and look up NULL."""
+    h = hashes.to_numpy(dtype=np.int64, na_value=0)
+    valid = hashes.notna().to_numpy()
+    if isinstance(blobs, list):
+        shard = np.mod(h, len(blobs))
+        groups = ((blobs[s], shard == s) for s in np.unique(shard) if blobs[s] is not None)
+    else:
+        groups = _blob_groups(blobs)
+    return h.view(np.uint64), [(blob, m & valid) for blob, m in groups]
+
+
+def _probe(hashes: pd.Series, blobs: pd.Series | list) -> pd.Series:
+    """Membership of each prehash in its blob (:func:`_blob_rows`); each
+    distinct blob decodes once per worker through ``_cached_sketch``."""
+    h, groups = _blob_rows(hashes, blobs)
+    out = np.zeros(len(h), dtype=bool)
+    for blob, m in groups:
+        out[m] = _cached_sketch(blob).contains_hashes(h[m], h[m])
+    return pd.Series(out)
+
+
+def _lookup(hashes: pd.Series, blobs: pd.Series | list) -> pd.Series:
+    """The value each prehash's blob stores for it, NULL on a fingerprint
+    miss (:func:`_blob_rows`)."""
+    h, groups = _blob_rows(hashes, blobs)
+    vals = np.zeros(len(h), dtype=np.int64)
+    found = np.zeros(len(h), dtype=bool)
+    for blob, m in groups:
+        found[m], vals[m] = _cached_sketch(blob).lookup_hashes(h[m])
+    return pd.Series(pd.arrays.IntegerArray(vals, ~found))
+
+
+def _broadcast_blobs(spark: SparkSession, frozen: DataFrame, shards: int):
+    """Collect the blob table into a shard-indexed list (None for a shard
+    no key routed to) and broadcast it."""
+    blobs: list[bytes | None] = [None] * shards
+    for r in frozen.collect():
+        blobs[int(r.shard)] = bytes(r.sketch)
+    return spark.sparkContext.broadcast(blobs)
 
 
 def freeze_filter(
@@ -89,39 +135,18 @@ def freeze_filter(
 def frozen_probe_udf(spark: SparkSession, frozen: DataFrame, shards: int):
     """Membership predicate over a frozen filter table.
 
-    Collects the (small) blob table, broadcasts it, and returns a callable
-    to apply to the PRE-HASHED column — probe with
-    ``probe(F.xxhash64(F.col("k")))`` so build and probe share the exact
-    JVM hash domain.  Missing shards (no keys routed there) probe False.
-    """
-    rows = frozen.collect()
-    blobs: list[bytes | None] = [None] * shards
-    for r in rows:
-        blobs[int(r.shard)] = bytes(r.sketch)
-    bc = spark.sparkContext.broadcast(blobs)
+    Collects the blob table, broadcasts it, and returns a callable to
+    apply to the PRE-HASHED column — ``probe(F.xxhash64(F.col("k")))`` —
+    so build and probe share the exact JVM hash domain.  Missing shards
+    probe False.  ``xxhash64(NULL)`` is the constant 42, not NULL, so a
+    direct caller must guard NULL keys outside the UDF
+    (``F.col("k").isNotNull() & probe(...)``, as ``frozen_probe_join``
+    does)."""
+    bc = _broadcast_blobs(spark, frozen, shards)
 
     @pandas_udf(BooleanType())
     def probe(hashes: pd.Series) -> pd.Series:
-        # decode through the module-level byte-keyed cache (shared across
-        # tasks within a python worker) — a closure-captured dict would be
-        # re-pickled with the UDF and re-decoded once per TASK
-        from ..functions import _cached_sketch
-
-        table = bc.value
-        h = hashes.to_numpy(dtype=np.int64, na_value=0)
-        isnull = hashes.isna().to_numpy()
-        shard = np.mod(h, shards)
-        out = np.zeros(len(h), dtype=bool)
-        for s in np.unique(shard):
-            blob = table[int(s)]
-            if blob is None:
-                continue
-            sk = _cached_sketch(blob)
-            m = shard == s
-            hu = h[m].view(np.uint64)
-            out[m] = sk.contains_hashes(hu, hu)
-        out[isnull] = False
-        return pd.Series(out)
+        return _probe(hashes, bc.value)
 
     return probe
 
@@ -167,69 +192,30 @@ def frozen_lookup_udf(spark: SparkSession, frozen: DataFrame, shards: int):
     """Value-lookup column over a frozen map table: apply to the
     PRE-HASHED key (``lookup(F.xxhash64(F.col("k")))``); returns the
     stored value, or NULL when the fingerprint misses (strangers at
-    2^-f; frozen keys never miss)."""
-    rows = frozen.collect()
-    blobs: list[bytes | None] = [None] * shards
-    for r in rows:
-        blobs[int(r.shard)] = bytes(r.sketch)
-    bc = spark.sparkContext.broadcast(blobs)
+    2^-f; frozen keys never miss).  ``xxhash64(NULL)`` is the constant
+    42, so a direct caller must guard NULL keys outside the UDF
+    (``F.when(F.col("k").isNotNull(), lookup(...))``, as
+    ``frozen_lookup_join`` does)."""
+    bc = _broadcast_blobs(spark, frozen, shards)
 
     @pandas_udf(LongType())
     def lookup(hashes: pd.Series) -> pd.Series:
-        from ..functions import _cached_sketch  # per-worker blob cache
-
-        table = bc.value
-        h = hashes.to_numpy(dtype=np.int64, na_value=0)
-        isnull = hashes.isna().to_numpy()
-        shard = np.mod(h, shards)
-        out = np.zeros(len(h), dtype=np.float64)
-        out[:] = np.nan
-        for s in np.unique(shard):
-            blob = table[int(s)]
-            if blob is None:
-                continue
-            sk = _cached_sketch(blob)
-            m = shard == s
-            found, vals = sk.lookup_hashes(h[m].view(np.uint64))
-            res = np.where(found, vals.astype(np.float64), np.nan)
-            out[m] = res
-        out[isnull] = np.nan
-        return pd.Series(out).astype("Int64")
+        return _lookup(hashes, bc.value)
 
     return lookup
 
 
 @pandas_udf(BooleanType())
 def _blob_probe(blobs: pd.Series, hashes: pd.Series) -> pd.Series:
-    """(blob, prehash) → membership; rows group by distinct blob so the
-    decode cost per Arrow batch is the number of distinct blobs (≈ shards
-    present in the partition), via the module-level byte-keyed cache."""
-    from ..functions import _blob_groups, _cached_sketch
-
-    h = hashes.to_numpy(dtype=np.int64, na_value=0)
-    isnull = hashes.isna().to_numpy()
-    out = np.zeros(len(h), dtype=bool)
-    for blob, m in _blob_groups(blobs):
-        m &= ~isnull
-        hu = h[m].view(np.uint64)
-        out[m] = _cached_sketch(blob).contains_hashes(hu, hu)
-    return pd.Series(out)
+    """(joined blob, prehash) → membership: the shard join's probe."""
+    return _probe(hashes, blobs)
 
 
 @pandas_udf(LongType())
 def _blob_lookup(blobs: pd.Series, hashes: pd.Series) -> pd.Series:
-    """(blob, prehash) → stored value or NULL — the join-path twin of
-    ``frozen_lookup_udf``."""
-    from ..functions import _blob_groups, _cached_sketch
-
-    h = hashes.to_numpy(dtype=np.int64, na_value=0)
-    isnull = hashes.isna().to_numpy()
-    out = np.full(len(h), np.nan, dtype=np.float64)
-    for blob, m in _blob_groups(blobs):
-        m &= ~isnull
-        found, vals = _cached_sketch(blob).lookup_hashes(h[m].view(np.uint64))
-        out[m] = np.where(found, vals.astype(np.float64), np.nan)
-    return pd.Series(out).astype("Int64")
+    """(joined blob, prehash) → stored value or NULL: the shard join's
+    lookup."""
+    return _lookup(hashes, blobs)
 
 
 def _join_blobs(
@@ -273,11 +259,20 @@ def _join_blobs(
 def frozen_probe_join(
     fact: DataFrame, fact_col: str, frozen: DataFrame, shards: int, fanout: int = 1
 ) -> DataFrame:
-    """Prune ``fact`` against a frozen filter WITHOUT driver-side blob
-    state: shard-route + join + executor-side probe (module doc).  Missing
-    shards join NULL blobs and probe False, matching the broadcast path.
-    Raise ``fanout`` when the probe side is huge relative to ``shards``
-    (see _join_blobs)."""
+    """Prune ``fact`` to the rows whose key probes the frozen filter — the
+    serving-side analogue of ``sketch_semijoin`` (FPs at 2^-f survive;
+    follow with an exact join where exactness matters).  NULL keys never
+    survive.
+
+    A broadcastable blob table (module doc) is probed by the broadcast UDF
+    with no fact shuffle; otherwise shard-route + join + executor-side
+    probe, with no driver blob state.  ``fanout`` applies to the join only:
+    raise it when the probe side is huge relative to ``shards`` (see
+    _join_blobs)."""
+    key = F.col(fact_col)
+    if _broadcastable(frozen):
+        probe = frozen_probe_udf(fact.sparkSession, frozen, shards)
+        return fact.filter(key.isNotNull() & probe(F.xxhash64(key)))
     joined, keys = _join_blobs(fact, fact_col, frozen, shards, fanout)
     return (
         joined.filter(_blob_probe(F.col("__gp_blob"), F.col("__gp_h")))
@@ -293,45 +288,16 @@ def frozen_lookup_join(
     out_col: str = "frozen_value",
     fanout: int = 1,
 ) -> DataFrame:
-    """``fact`` + a value column looked up from a frozen map, via the
-    join path (no driver blob state); NULL where the fingerprint misses."""
+    """``fact`` + a value column looked up from a frozen map; NULL where
+    the key is NULL or its fingerprint misses.  The plan follows the same
+    broadcast rule as ``frozen_probe_join``, and both plans give the same
+    columns."""
+    key = F.col(fact_col)
+    if _broadcastable(frozen):
+        lookup = frozen_lookup_udf(fact.sparkSession, frozen, shards)
+        return fact.withColumn(out_col, F.when(key.isNotNull(), lookup(F.xxhash64(key))))
     joined, keys = _join_blobs(fact, fact_col, frozen, shards, fanout)
     return (
         joined.withColumn(out_col, _blob_lookup(F.col("__gp_blob"), F.col("__gp_h")))
         .drop("__gp_h", "__gp_blob", *keys)
     )
-
-
-# Blob tables beyond this many bytes take the join path: a broadcast at
-# ~50 GB (4·10^10 keys) is undeliverable, and even below Spark's hard cap
-# a multi-GB broadcast per probe query is driver/network-hostile.
-BROADCAST_MAX_BYTES = 256 * 1024 * 1024
-
-
-def frozen_semijoin(
-    spark: SparkSession,
-    fact: DataFrame,
-    fact_col: str,
-    frozen: DataFrame,
-    shards: int,
-    broadcast_max_bytes: int = BROADCAST_MAX_BYTES,
-) -> DataFrame:
-    """Prune ``fact`` to rows whose key probes the frozen filter — the
-    serving-side analogue of ``sketch_semijoin`` (FPs at 2^-f survive;
-    follow with an exact join where exactness matters).
-
-    Auto-selects the probe shape on measured blob bytes: broadcast-UDF
-    under ``broadcast_max_bytes``, shard-join above (module doc) — the
-    one-row aggregate that sizes the table is KB-scale driver traffic
-    either way."""
-    total = frozen.agg(F.sum(F.length("sketch"))).collect()[0][0] or 0
-    if total <= broadcast_max_bytes:
-        probe = frozen_probe_udf(spark, frozen, shards)
-        # null-guard OUTSIDE the UDF (module note: nulling the hash column
-        # itself would float64 the whole batch in pandas and corrupt every
-        # 64-bit hash in it)
-        return fact.filter(
-            F.col(fact_col).isNotNull()
-            & probe(F.xxhash64(F.col(fact_col)))
-        )
-    return frozen_probe_join(fact, fact_col, frozen, shards)

@@ -151,7 +151,7 @@ def main() -> None:
         large,
     ))
 
-    from guava_probably_spark.operators import freeze_filter, frozen_semijoin
+    from guava_probably_spark.operators import freeze_filter, frozen_probe_join
 
     frozen = freeze_filter(events, "event_id", fbits=8, shards=8)
     sections.append((
@@ -163,29 +163,28 @@ def main() -> None:
         "ever reaches the driver.",
         fmt(frozen),
     ))
+    small, large = both_regimes(lambda: frozen_probe_join(events, "event_id", frozen, 8))
     sections.append((
-        "Frozen-filter probe (sharded serving path)",
-        "The fact scan is filtered by an `ArrowEvalPython` probe over the "
-        "broadcast blob table, keyed by `xxhash64` computed in codegen — "
-        "no join, no shuffle; FPs are exactly 2^-f and a downstream exact "
-        "join can rescue them where needed.",
-        fmt(frozen_semijoin(spark, events, "event_id", frozen, 8)),
+        "Frozen-filter probe — broadcastable blob table",
+        "The blob table is within `spark.sql.autoBroadcastJoinThreshold` "
+        "(the rule the sketch joins use), so `frozen_probe_join` collects "
+        "and broadcasts it once and the fact scan is filtered by an "
+        "`ArrowEvalPython` probe whose only input is `xxhash64` computed "
+        "in codegen — no join, no shuffle, 8 B per row to Python. FPs "
+        "are exactly 2^-f and a downstream exact join can rescue them "
+        "where needed.",
+        small,
     ))
-
-    from guava_probably_spark.operators import frozen_probe_join
-
     sections.append((
-        "Frozen-filter probe (join path, beyond-broadcast blob tables)",
-        "The serving path for blob tables past broadcast size (~50 GB at "
-        "4·10^10 keys): the probe hash routes to its shard in codegen "
-        "(`pmod(xxhash64(k), shards)`), a `ShuffledHashJoin` lands every "
-        "probe row beside exactly its shard's blob (the blob side is "
-        "shards rows — hinted shuffle-hash, never broadcast on this "
-        "path), and the probe itself runs in `ArrowEvalPython` against "
-        "the joined blob column with a per-worker decode cache. NO "
-        "driver collect of blobs anywhere; `frozen_semijoin` picks this "
-        "plan automatically above the byte threshold.",
-        fmt(frozen_probe_join(events, "event_id", frozen, 8)),
+        "Frozen-filter probe — blob table past the broadcast threshold",
+        "Shown with `autoBroadcastJoinThreshold=-1`; the regime of a blob "
+        "table past broadcast size (~50 GB at 4·10^10 keys). The probe "
+        "hash routes to its shard in codegen (`pmod(xxhash64(k), "
+        "shards)`), a `ShuffledHashJoin` lands every probe row beside "
+        "exactly its shard's blob (hinted shuffle-hash), and the probe "
+        "runs in `ArrowEvalPython` against the joined blob column with a "
+        "per-worker decode cache. No driver collect of blobs.",
+        large,
     ))
 
     for i in range(2):

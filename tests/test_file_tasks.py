@@ -89,9 +89,10 @@ def test_files_build_single_file(spark, transcripts_path):
 
 def test_prehashed_specs_match_across_single_multi_and_file_builds(spark, tmp_path):
     """A FUNNEL_PREHASHED column already is the 64-bit hash stream: the
-    multi and file builds must not murmur3 it (they once did, and the fold
-    raised ``column funnel 2 != sketch funnel 3``)."""
-    from guava_probably_spark.operators import collect_sketch
+    multi, file and checkpointed builds must not murmur3 it (the multi and
+    file builds once did, and the fold raised ``column funnel 2 != sketch
+    funnel 3``)."""
+    from guava_probably_spark.operators import build_with_checkpoint, collect_sketch
     from guava_probably_spark.sketches.base import FUNNEL_PREHASHED
 
     path = str(tmp_path / "prehashed")
@@ -112,3 +113,6 @@ def test_prehashed_specs_match_across_single_multi_and_file_builds(spark, tmp_pa
         blob = single.to_bytes()
         assert multi[name][0].to_bytes() == blob, name
         assert files[name][0].to_bytes() == blob, name
+        ckpt, stats = build_with_checkpoint(spark, path, col, spec, str(tmp_path / f"ck_{name}"))
+        assert stats.rows == 50_000
+        assert ckpt.to_bytes() == blob, name

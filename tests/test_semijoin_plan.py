@@ -4,7 +4,6 @@ broadcast join with no filter build and no Python, and a dim past it keeps
 the sketch path: a fact-side probe ahead of a broadcast-hinted join that
 never shuffles the fact side."""
 
-import contextlib
 import itertools
 
 import pytest
@@ -12,47 +11,10 @@ from pyspark.sql import functions as F
 
 from guava_probably_spark.operators import sketch_antijoin, sketch_semijoin
 from guava_probably_spark.operators.semijoin import _broadcastable
+from plan_tree import broadcast_threshold, count, find, plan_tree
 
 PYTHON_NODES = ("ArrowEvalPython", "BatchEvalPython", "MapInArrow", "MapInPandas")
 _GROUPS = itertools.count()
-
-
-@contextlib.contextmanager
-def _threshold(spark, value):
-    key = "spark.sql.autoBroadcastJoinThreshold"
-    prev = spark.conf.get(key)
-    spark.conf.set(key, value)
-    try:
-        yield
-    finally:
-        spark.conf.set(key, prev)
-
-
-def _plan_tree(df):
-    """The physical plan before execution as (simpleString, children)
-    pairs; AQE's wrapper is replaced by its initial plan."""
-
-    def walk(p):
-        if p.nodeName() == "AdaptiveSparkPlan":
-            p = p.initialPlan()
-        kids = p.children()
-        return p.simpleString(25), [walk(kids.apply(i)) for i in range(kids.size())]
-
-    return walk(df._jdf.queryExecution().executedPlan())
-
-
-def _subtrees(tree):
-    yield tree
-    for kid in tree[1]:
-        yield from _subtrees(kid)
-
-
-def _find(tree, word):
-    return [t for t in _subtrees(tree) if t[0].startswith(word)]
-
-
-def _count(tree, word):
-    return len(_find(tree, word))
 
 
 def _jobs_run_by(spark, build):
@@ -81,31 +43,31 @@ def test_broadcastable_dim_semijoin_is_the_plain_broadcast_join(spark, tables):
         spark, lambda: sketch_semijoin(spark, lineitem, "l_partkey", dim, "p_partkey")
     )
     assert jobs == []  # no dim count, no filter build
-    tree = _plan_tree(sj)
-    assert _count(tree, "BroadcastHashJoin") == 1, tree
-    assert not any(_count(tree, p) for p in PYTHON_NODES), tree
+    tree = plan_tree(sj)
+    assert count(tree, "BroadcastHashJoin") == 1, tree
+    assert not any(count(tree, p) for p in PYTHON_NODES), tree
     assert sj.count() == lineitem.join(dim, lineitem.l_partkey == dim.p_partkey).count()
 
 
 def test_past_threshold_semijoin_prunes_the_fact_side_under_a_broadcast(spark, tables):
     lineitem, dim = tables
-    with _threshold(spark, "-1"):
+    with broadcast_threshold(spark, "-1"):
         assert not _broadcastable(dim)
         sj, jobs = _jobs_run_by(
             spark, lambda: sketch_semijoin(spark, lineitem, "l_partkey", dim, "p_partkey")
         )
         assert jobs  # the dim's filter was built
-        tree = _plan_tree(sj)
-        (join,) = _find(tree, "BroadcastHashJoin")
+        tree = plan_tree(sj)
+        (join,) = find(tree, "BroadcastHashJoin")
         fact_side = join[1][0]
-        assert _count(fact_side, "ArrowEvalPython") >= 1, tree
-        assert _count(fact_side, "Exchange") == 0, tree
+        assert count(fact_side, "ArrowEvalPython") >= 1, tree
+        assert count(fact_side, "Exchange") == 0, tree
         assert sj.count() == lineitem.join(dim, lineitem.l_partkey == dim.p_partkey).count()
         # the probe is deterministic, so a fact predicate on the join's
         # result still reaches the fact scan
         narrowed = sj.filter(F.col("l_quantity") < 10)
         (scan,) = [
-            t for t in _find(_plan_tree(narrowed), "FileScan")
+            t for t in find(plan_tree(narrowed), "FileScan")
             if "l_quantity" in t[0]
         ]
         assert "LessThan(l_quantity" in scan[0], scan[0]
@@ -117,25 +79,25 @@ def test_exact_antijoin_with_broadcastable_dim_is_one_broadcast_left_anti(spark,
         spark, lambda: sketch_antijoin(spark, lineitem, "l_partkey", dim, "p_partkey")
     )
     assert jobs == []
-    tree = _plan_tree(aj)
-    joins = _find(tree, "BroadcastHashJoin")
+    tree = plan_tree(aj)
+    joins = find(tree, "BroadcastHashJoin")
     assert len(joins) == 1 and "LeftAnti" in joins[0][0], tree
-    assert _count(tree, "Union") == 0, tree
-    assert not any(_count(tree, p) for p in PYTHON_NODES), tree
+    assert count(tree, "Union") == 0, tree
+    assert not any(count(tree, p) for p in PYTHON_NODES), tree
     truth = lineitem.join(dim, lineitem.l_partkey == dim.p_partkey, "left_anti").count()
     assert aj.count() == truth
 
 
 def test_past_threshold_antijoin_rescues_candidates_under_a_broadcast(spark, tables):
     lineitem, dim = tables
-    with _threshold(spark, "-1"):
+    with broadcast_threshold(spark, "-1"):
         aj = sketch_antijoin(spark, lineitem, "l_partkey", dim, "p_partkey")
-        tree = _plan_tree(aj)
-        assert _count(tree, "Union") == 1, tree
-        (rescue,) = _find(tree, "BroadcastHashJoin")
+        tree = plan_tree(aj)
+        assert count(tree, "Union") == 1, tree
+        (rescue,) = find(tree, "BroadcastHashJoin")
         assert "LeftAnti" in rescue[0], tree
-        assert _count(rescue[1][0], "ArrowEvalPython") >= 1, tree  # candidates
+        assert count(rescue[1][0], "ArrowEvalPython") >= 1, tree  # candidates
         # the fact side never shuffles: every Exchange is on the dim keys' side
-        assert _count(tree, "Exchange") == _count(rescue[1][1], "Exchange"), tree
+        assert count(tree, "Exchange") == count(rescue[1][1], "Exchange"), tree
         truth = lineitem.join(dim, lineitem.l_partkey == dim.p_partkey, "left_anti").count()
         assert aj.count() == truth

@@ -1,11 +1,14 @@
 """XOR filter (sketches/xorf.py, Graf & Lemire 2020) and the sharded
 freeze operator (operators/freeze.py)."""
 
+import re
+
 import numpy as np
 import pytest
 
 from guava_probably_spark.sketches import Sketch, XorFilter
 from guava_probably_spark.sketches.base import FUNNEL_LONG, FUNNEL_PREHASHED
+from plan_tree import broadcast_threshold, count, find, plan_tree
 
 
 def _hashes(n=20000, seed=5):
@@ -82,8 +85,8 @@ def test_freeze_filter_sharded(spark):
 
     from guava_probably_spark.operators import (
         freeze_filter,
+        frozen_probe_join,
         frozen_probe_udf,
-        frozen_semijoin,
     )
 
     shards = 16
@@ -105,7 +108,7 @@ def test_freeze_filter_sharded(spark):
     sigma = (2**-8 * (1 - 2**-8) / 40000) ** 0.5
     assert fp <= 2**-8 + 4 * sigma
 
-    pruned = frozen_semijoin(spark, df, "k", frozen, shards)
+    pruned = frozen_probe_join(df, "k", frozen, shards)
     assert pruned.count() == df.count()  # members all survive
 
 
@@ -237,10 +240,20 @@ def test_freeze_map_deterministic_and_conflict_raises(spark):
         freeze_map(conflicted, "k", "v", shards=4).collect()
 
 
-def test_frozen_join_path_matches_broadcast_and_skips_driver_blobs(spark):
-    """The shard-join probe (serving path for blob tables beyond broadcast)
-    returns exactly the broadcast-UDF answer, and its plan carries the
-    probe as a JOIN against the blob table — no driver collect of blobs."""
+@pytest.fixture(params=["10MB", "-1"], ids=["broadcast", "join"])
+def frozen_regime(request, spark):
+    """Both plans of the frozen joins: Spark's default
+    autoBroadcastJoinThreshold (the blob tables below are within it, so
+    the broadcast UDF probes) and -1 (no table is within it, so the fact
+    side joins the blob table by shard)."""
+    with broadcast_threshold(spark, request.param):
+        yield request.param
+
+
+def test_frozen_join_path_matches_broadcast_and_skips_driver_blobs(spark, frozen_regime):
+    """Either plan of the frozen probe returns exactly the broadcast-UDF
+    answer; past the threshold the probe rides a JOIN against the blob
+    table (no driver collect of blobs), within it there is no join."""
     import pyspark.sql.functions as F
 
     from guava_probably_spark.operators import (
@@ -248,8 +261,8 @@ def test_frozen_join_path_matches_broadcast_and_skips_driver_blobs(spark):
         freeze_map,
         frozen_lookup_join,
         frozen_lookup_udf,
+        frozen_probe_join,
         frozen_probe_udf,
-        frozen_semijoin,
     )
 
     shards = 8
@@ -257,10 +270,9 @@ def test_frozen_join_path_matches_broadcast_and_skips_driver_blobs(spark):
     frozen = freeze_filter(dim, "k", fbits=8, shards=shards)
     fact = spark.range(0, 70000).select(F.col("id").alias("k"))
 
-    # forcing the threshold to 0 bytes routes through the join path
-    joined = frozen_semijoin(spark, fact, "k", frozen, shards, broadcast_max_bytes=0)
+    joined = frozen_probe_join(fact, "k", frozen, shards)
     plan = joined._jdf.queryExecution().executedPlan().toString()
-    assert "Join" in plan  # probe rides a join, not a broadcast closure
+    assert ("Join" in plan) == (frozen_regime == "-1"), plan
     got = sorted(r.k for r in joined.collect())
 
     probe = frozen_probe_udf(spark, frozen, shards)
@@ -286,10 +298,10 @@ def test_frozen_join_path_matches_broadcast_and_skips_driver_blobs(spark):
     assert got_v == want_v
 
 
-def test_frozen_join_fanout_salted_equality(spark):
+def test_frozen_join_fanout_salted_equality(spark, frozen_regime):
     """fanout > 1 (salted blob replication for join parallelism beyond
     `shards`) returns exactly the fanout=1 answer for both probe and
-    lookup."""
+    lookup; the broadcast plan ignores it."""
     import pyspark.sql.functions as F
 
     from guava_probably_spark.operators import (
@@ -319,14 +331,14 @@ def test_frozen_join_fanout_salted_equality(spark):
     assert a == b
 
 
-def test_frozen_join_path_null_keys_deterministic(spark):
+def test_frozen_join_path_null_keys_deterministic(spark, frozen_regime):
     """Spark's xxhash64(NULL) is the CONSTANT 42 — a naive probe would
     send every null key to one shard with one fixed hash (all-or-nothing
-    at 2^-f). The built-in wrappers keep the hash column NON-null (a
-    nullable long batch arrives in pandas as float64, corrupting every
-    64-bit hash in it) and instead null the SHARD on the join path /
-    short-circuit the predicate on the broadcast path: probe False /
-    lookup NULL for every null key, deterministically."""
+    at 2^-f). The joins keep the hash column NON-null (a nullable long
+    batch arrives in pandas as float64, corrupting every 64-bit hash in
+    it) and instead short-circuit the key ahead of the broadcast UDF / null
+    the SHARD on the join plan: probe False / lookup NULL for every null
+    key, deterministically."""
     import pyspark.sql.functions as F
 
     from guava_probably_spark.operators import (
@@ -334,7 +346,6 @@ def test_frozen_join_path_null_keys_deterministic(spark):
         freeze_map,
         frozen_lookup_join,
         frozen_probe_join,
-        frozen_semijoin,
     )
 
     dim = spark.range(0, 5000).select(F.col("id").alias("k"))
@@ -345,11 +356,65 @@ def test_frozen_join_path_null_keys_deterministic(spark):
     out = frozen_probe_join(fact, "k", frozen, 4)
     assert out.filter(F.col("k").isNull()).count() == 0
     assert out.count() == fact.filter(F.col("k").isNotNull()).count()
-    # broadcast-mode semijoin wrapper: same null handling
-    out_b = frozen_semijoin(spark, fact, "k", frozen, 4)
-    assert out_b.filter(F.col("k").isNull()).count() == 0
 
     fm = freeze_map(dim.withColumn("v", F.col("k") % 13), "k", "v", vbits=4, shards=4)
     lk = frozen_lookup_join(fact, "k", fm, 4, out_col="v")
     assert lk.filter(F.col("k").isNull() & F.col("v").isNotNull()).count() == 0
     assert lk.filter(F.col("k").isNotNull() & F.col("v").isNull()).count() == 0
+
+
+@pytest.fixture(scope="module")
+def frozen_tables(spark):
+    import pyspark.sql.functions as F
+
+    from guava_probably_spark.operators import freeze_filter, freeze_map
+
+    dim = spark.range(0, 5000).select(F.col("id").alias("k"), (F.col("id") % 13).alias("v"))
+    fact = spark.range(0, 20000).select(F.col("id").alias("k"), (F.col("id") * 2).alias("x"))
+    return fact, freeze_filter(dim, "k", shards=8), freeze_map(dim, "k", "v", vbits=4, shards=8)
+
+
+def test_broadcastable_frozen_joins_probe_the_fact_side_in_place(spark, frozen_tables):
+    """Within the threshold neither frozen join shuffles the fact side or
+    joins it to anything: one ArrowEvalPython takes the key's xxhash64
+    alone, so no blob rides in any row."""
+    from guava_probably_spark.operators import frozen_lookup_join, frozen_probe_join
+    from guava_probably_spark.operators.semijoin import _broadcastable
+
+    fact, ff, fm = frozen_tables
+    assert _broadcastable(ff) and _broadcastable(fm)
+    for df in (frozen_probe_join(fact, "k", ff, 8), frozen_lookup_join(fact, "k", fm, 8)):
+        tree = plan_tree(df)
+        assert count(tree, "Exchange") == 0, tree
+        assert not [t for t in find(tree, "") if "Join" in t[0].split(" ")[0]], tree
+        (py,) = find(tree, "ArrowEvalPython")
+        # e.g. ArrowEvalPython [probe(xxhash64(id#1L, 42))#9], [pythonUDF0#12], 200
+        assert re.match(r"ArrowEvalPython \[\w+\(xxhash64\(\w+#\d+L, 42\)\)#\d+L?\]", py[0]), py[0]
+
+
+def test_past_threshold_frozen_joins_take_the_shard_join(spark, frozen_tables):
+    """With the blob table past the threshold, both joins keep the shuffled
+    hash join on ``__gp_shard`` and probe the joined blob."""
+    from guava_probably_spark.operators import frozen_lookup_join, frozen_probe_join
+    from guava_probably_spark.operators.semijoin import _broadcastable
+
+    fact, ff, fm = frozen_tables
+    with broadcast_threshold(spark, "-1"):
+        assert not (_broadcastable(ff) or _broadcastable(fm))
+        for df in (frozen_probe_join(fact, "k", ff, 8), frozen_lookup_join(fact, "k", fm, 8)):
+            tree = plan_tree(df)
+            (join,) = find(tree, "ShuffledHashJoin")
+            assert "__gp_shard" in join[0], join[0]
+            (py,) = find(tree, "ArrowEvalPython")
+            assert "__gp_blob" in py[0], py[0]
+
+
+def test_frozen_lookup_join_schema_is_the_same_in_both_plans(spark, frozen_tables):
+    from guava_probably_spark.operators import frozen_lookup_join
+
+    fact, _, fm = frozen_tables
+    within = frozen_lookup_join(fact, "k", fm, 8, out_col="v").schema
+    with broadcast_threshold(spark, "-1"):
+        past = frozen_lookup_join(fact, "k", fm, 8, out_col="v").schema
+    assert within == past
+    assert within.names == ["k", "x", "v"]
