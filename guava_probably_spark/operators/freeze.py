@@ -11,19 +11,31 @@ reaches the driver.  Pick ``shards`` so a shard's distinct keys fit
 executor memory (~10 M keys/shard is comfortable; 4096 shards covers
 4·10^10 keys).
 
-``frozen_probe_join`` / ``frozen_lookup_join`` pick the probe plan with
-Spark's broadcast rule (``semijoin._broadcastable``, i.e.
-``canBroadcastBySize`` on the blob table):
+A freeze is eager: it persists its output and runs one action,
+``sum(length(sketch))``, which fills the cache and gives the table's
+exact blob bytes.  The returned DataFrame records its shard count and
+those bytes (``persist()`` / ``cache()`` return the same object, so the
+record survives them); release the cached blobs with ``unpersist()``.
 
-- **Broadcastable:** collect the blob table once per call, broadcast it
-  (``frozen_probe_udf`` / ``frozen_lookup_udf``) and apply the UDF to
-  ``xxhash64(key)`` alone: each probe hash routes to its shard in Python
-  (one gather+XOR per probe, FPP exactly 2^-f).  No fact shuffle, no join
-  and 8 B per row to Python.
+``frozen_probe_join`` / ``frozen_lookup_join`` pick the probe plan with
+Spark's broadcast rule (``semijoin._broadcastable``) applied to the exact
+blob bytes of a frozen table, or to Spark's estimate for a blob table no
+freeze returned (one read back from parquet, say):
+
+- **Broadcastable:** broadcast the blob table (``frozen_probe_udf`` /
+  ``frozen_lookup_udf``) and apply the UDF to ``xxhash64(key)`` alone:
+  each probe hash routes to its shard in Python (one gather+XOR per
+  probe, FPP exactly 2^-f).  No fact shuffle, no join and 8 B per row to
+  Python.  A frozen table is collected and broadcast on its first probe
+  only; every later probe or lookup reuses that broadcast and its UDF,
+  which live as long as the DataFrame.
 - **Not broadcastable** (the 4·10^10-key regime: a ~50 GB blob table):
   probe hashes route to their shard JVM-side and JOIN the blob table on
-  ``shard``, and each task probes its rows against the joined blob.  No
-  driver collect of blobs on this path.
+  ``shard``, and each task probes its rows against the joined blob.  The
+  blob table is never collected to the driver on this path.
+
+``shards`` defaults to the frozen table's recorded count; a different
+count raises ``ValueError`` (it would route members to the wrong shard).
 
 Keys are hashed JVM-side with ``xxhash64`` (the FUNNEL_PREHASHED domain):
 the value bytes never cross the JVM→Python boundary in either build or
@@ -31,6 +43,8 @@ probe, the same fast path the grouped prehash builds use.
 """
 
 from __future__ import annotations
+
+import threading
 
 import numpy as np
 import pandas as pd
@@ -97,6 +111,75 @@ def _lookup(hashes: pd.Series, blobs: pd.Series | list) -> pd.Series:
     return pd.Series(pd.arrays.IntegerArray(vals, ~found))
 
 
+class _Frozen:
+    """What a freeze records on its output table: the shard count, the
+    exact blob bytes and, from the first probe or lookup on, the one
+    broadcast of the blobs and the UDFs over it."""
+
+    def __init__(self, shards: int, nbytes: int):
+        self.shards = shards
+        self.nbytes = nbytes
+        self.bc = None
+        self.udfs: dict = {}
+
+
+def _record(frozen: DataFrame) -> _Frozen | None:
+    # vars(): DataFrame.__getattr__ would resolve a missing name as a column
+    return vars(frozen).get("_gp_frozen")
+
+
+_CACHE_CONF = "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning"
+# concurrent freezes must not restore each other's setting
+_CACHE_CONF_LOCK = threading.Lock()
+
+
+def _freeze(sharded: DataFrame, build, shards: int) -> DataFrame:
+    """Solve each shard with ``build``, persist the blob table and size it
+    in one action that also fills the cache; record the facts on it.
+
+    Spark caches a plan with AQE's partition coalescing off unless
+    ``canChangeCachedPlanOutputPartitioning`` is set, which would leave
+    the blob table in ``spark.sql.shuffle.partitions`` mostly empty
+    partitions (200 tasks per scan at the default).  Nothing joins on the
+    blob table's partitioning, so the freeze caches with it set."""
+    frozen = sharded.groupBy("shard").applyInPandas(build, schema=FROZEN_SCHEMA)
+    conf = frozen.sparkSession.conf
+    with _CACHE_CONF_LOCK:
+        prev = conf.get(_CACHE_CONF)
+        conf.set(_CACHE_CONF, "true")
+        try:
+            frozen.persist()
+        finally:
+            conf.set(_CACHE_CONF, prev)
+    try:
+        nbytes = frozen.agg(F.sum(F.length("sketch"))).first()[0]
+    except BaseException:
+        frozen.unpersist()
+        raise
+    frozen._gp_frozen = _Frozen(shards, int(nbytes or 0))
+    return frozen
+
+
+def _shards(frozen: DataFrame, shards: int | None) -> int:
+    """The shard count to probe ``frozen`` with: the recorded one, which
+    ``shards`` may repeat but not contradict."""
+    rec = _record(frozen)
+    if rec is None:
+        if shards is None:
+            raise ValueError("shards is required for a blob table that no freeze returned")
+        return shards
+    if shards is not None and shards != rec.shards:
+        raise ValueError(f"the table was frozen into {rec.shards} shards, not {shards}")
+    return rec.shards
+
+
+def _fits(frozen: DataFrame) -> bool:
+    """Spark's broadcast rule on a frozen table's exact blob bytes, or on
+    Spark's estimate for a blob table with no record."""
+    rec = _record(frozen)
+    return _broadcastable(frozen, None if rec is None else rec.nbytes)
+
+
 def _broadcast_blobs(spark: SparkSession, frozen: DataFrame, shards: int):
     """Collect the blob table into a shard-indexed list (None for a shard
     no key routed to) and broadcast it."""
@@ -104,6 +187,32 @@ def _broadcast_blobs(spark: SparkSession, frozen: DataFrame, shards: int):
     for r in frozen.collect():
         blobs[int(r.shard)] = bytes(r.sketch)
     return spark.sparkContext.broadcast(blobs)
+
+
+def _broadcast_udf(bc, kernel, return_type):
+    """A pandas UDF applying ``kernel`` to prehashes against the broadcast
+    blob list ``bc``."""
+
+    def apply(hashes: pd.Series) -> pd.Series:
+        return kernel(hashes, bc.value)
+
+    apply.__name__ = kernel.__name__.lstrip("_")  # probe / lookup in plans
+    return pandas_udf(apply, return_type)
+
+
+def _frozen_udf(spark, frozen, shards, kernel, return_type):
+    """``kernel``'s broadcast UDF over ``frozen``.  A frozen table
+    broadcasts once and keeps each UDF on its record; a blob table with no
+    record is collected on every call."""
+    shards = _shards(frozen, shards)
+    rec = _record(frozen)
+    if rec is None:
+        return _broadcast_udf(_broadcast_blobs(spark, frozen, shards), kernel, return_type)
+    if kernel not in rec.udfs:
+        if rec.bc is None:
+            rec.bc = _broadcast_blobs(spark, frozen, shards)
+        rec.udfs[kernel] = _broadcast_udf(rec.bc, kernel, return_type)
+    return rec.udfs[kernel]
 
 
 def freeze_filter(
@@ -116,7 +225,9 @@ def freeze_filter(
 
     One shuffle (hash → shard); the per-shard solve is executor-side and
     deterministic (blob = pure function of the shard's distinct hash set),
-    so the output is identical across partitionings and reruns.
+    so the output is identical across partitionings and reruns.  Runs one
+    action and returns the persisted blob table (module doc):
+    ``unpersist()`` it when done.
     """
     hashed = df.select(F.xxhash64(F.col(col)).alias("h")).where(F.col(col).isNotNull())
     sharded = hashed.withColumn("shard", F.pmod(F.col("h"), F.lit(shards)))
@@ -129,26 +240,22 @@ def freeze_filter(
             {"shard": [shard], "sketch": [sk.to_bytes()], "n": [sk.n]}
         )
 
-    return sharded.groupBy("shard").applyInPandas(build, schema=FROZEN_SCHEMA)
+    return _freeze(sharded, build, shards)
 
 
-def frozen_probe_udf(spark: SparkSession, frozen: DataFrame, shards: int):
+def frozen_probe_udf(spark: SparkSession, frozen: DataFrame, shards: int | None = None):
     """Membership predicate over a frozen filter table.
 
-    Collects the blob table, broadcasts it, and returns a callable to
-    apply to the PRE-HASHED column — ``probe(F.xxhash64(F.col("k")))`` —
-    so build and probe share the exact JVM hash domain.  Missing shards
-    probe False.  ``xxhash64(NULL)`` is the constant 42, not NULL, so a
+    Broadcasts the blob table and returns a callable to apply to the
+    PRE-HASHED column — ``probe(F.xxhash64(F.col("k")))`` — so build and
+    probe share the exact JVM hash domain.  Missing shards probe False.
+    On a table a freeze returned, the first call collects and broadcasts
+    it and later calls return the same UDF; the broadcast lives as long as
+    the DataFrame.  ``xxhash64(NULL)`` is the constant 42, not NULL, so a
     direct caller must guard NULL keys outside the UDF
     (``F.col("k").isNotNull() & probe(...)``, as ``frozen_probe_join``
     does)."""
-    bc = _broadcast_blobs(spark, frozen, shards)
-
-    @pandas_udf(BooleanType())
-    def probe(hashes: pd.Series) -> pd.Series:
-        return _probe(hashes, bc.value)
-
-    return probe
+    return _frozen_udf(spark, frozen, shards, _probe, BooleanType())
 
 
 def freeze_map(
@@ -165,7 +272,8 @@ def freeze_map(
     ``vbits``-bit value for every frozen key at ~1.23·(f+v) bits/key with
     no key bytes stored.  Values must be non-negative ints < 2^vbits;
     duplicate keys must agree on the value (the per-shard solve raises
-    otherwise — a silent pick would mislabel)."""
+    otherwise — a silent pick would mislabel).  Like ``freeze_filter``,
+    runs one action and returns the persisted blob table."""
     from ..sketches.xormap import XorStaticMap
 
     hashed = df.select(
@@ -185,24 +293,19 @@ def freeze_map(
             {"shard": [shard], "sketch": [sk.to_bytes()], "n": [sk.n]}
         )
 
-    return sharded.groupBy("shard").applyInPandas(build, schema=FROZEN_SCHEMA)
+    return _freeze(sharded, build, shards)
 
 
-def frozen_lookup_udf(spark: SparkSession, frozen: DataFrame, shards: int):
+def frozen_lookup_udf(spark: SparkSession, frozen: DataFrame, shards: int | None = None):
     """Value-lookup column over a frozen map table: apply to the
     PRE-HASHED key (``lookup(F.xxhash64(F.col("k")))``); returns the
     stored value, or NULL when the fingerprint misses (strangers at
-    2^-f; frozen keys never miss).  ``xxhash64(NULL)`` is the constant
-    42, so a direct caller must guard NULL keys outside the UDF
-    (``F.when(F.col("k").isNotNull(), lookup(...))``, as
-    ``frozen_lookup_join`` does)."""
-    bc = _broadcast_blobs(spark, frozen, shards)
-
-    @pandas_udf(LongType())
-    def lookup(hashes: pd.Series) -> pd.Series:
-        return _lookup(hashes, bc.value)
-
-    return lookup
+    2^-f; frozen keys never miss).  Broadcasts like ``frozen_probe_udf``:
+    once per frozen table, reused by every later call.
+    ``xxhash64(NULL)`` is the constant 42, so a direct caller must guard
+    NULL keys outside the UDF (``F.when(F.col("k").isNotNull(),
+    lookup(...))``, as ``frozen_lookup_join`` does)."""
+    return _frozen_udf(spark, frozen, shards, _lookup, LongType())
 
 
 @pandas_udf(BooleanType())
@@ -257,7 +360,11 @@ def _join_blobs(
 
 
 def frozen_probe_join(
-    fact: DataFrame, fact_col: str, frozen: DataFrame, shards: int, fanout: int = 1
+    fact: DataFrame,
+    fact_col: str,
+    frozen: DataFrame,
+    shards: int | None = None,
+    fanout: int = 1,
 ) -> DataFrame:
     """Prune ``fact`` to the rows whose key probes the frozen filter — the
     serving-side analogue of ``sketch_semijoin`` (FPs at 2^-f survive;
@@ -265,12 +372,14 @@ def frozen_probe_join(
     survive.
 
     A broadcastable blob table (module doc) is probed by the broadcast UDF
-    with no fact shuffle; otherwise shard-route + join + executor-side
-    probe, with no driver blob state.  ``fanout`` applies to the join only:
-    raise it when the probe side is huge relative to ``shards`` (see
-    _join_blobs)."""
+    with no fact shuffle, reusing a frozen table's one broadcast;
+    otherwise shard-route + join + executor-side probe, with no driver
+    blob state.  ``shards`` defaults to the frozen table's count.
+    ``fanout`` applies to the join only: raise it when the probe side is
+    huge relative to ``shards`` (see _join_blobs)."""
     key = F.col(fact_col)
-    if _broadcastable(frozen):
+    shards = _shards(frozen, shards)
+    if _fits(frozen):
         probe = frozen_probe_udf(fact.sparkSession, frozen, shards)
         return fact.filter(key.isNotNull() & probe(F.xxhash64(key)))
     joined, keys = _join_blobs(fact, fact_col, frozen, shards, fanout)
@@ -284,7 +393,7 @@ def frozen_lookup_join(
     fact: DataFrame,
     fact_col: str,
     frozen: DataFrame,
-    shards: int,
+    shards: int | None = None,
     out_col: str = "frozen_value",
     fanout: int = 1,
 ) -> DataFrame:
@@ -293,7 +402,8 @@ def frozen_lookup_join(
     broadcast rule as ``frozen_probe_join``, and both plans give the same
     columns."""
     key = F.col(fact_col)
-    if _broadcastable(frozen):
+    shards = _shards(frozen, shards)
+    if _fits(frozen):
         lookup = frozen_lookup_udf(fact.sparkSession, frozen, shards)
         return fact.withColumn(out_col, F.when(key.isNotNull(), lookup(F.xxhash64(key))))
     joined, keys = _join_blobs(fact, fact_col, frozen, shards, fanout)

@@ -35,14 +35,18 @@ from ..sketches import SketchSpec
 from .build import collect_sketch
 
 
-def _broadcastable(build_side: DataFrame) -> bool:
+def _broadcastable(build_side: DataFrame, size: int | None = None) -> bool:
     """Spark's ``JoinSelection.canBroadcastBySize`` for ``build_side``:
-    its optimized plan's estimated size is known (non-negative) and at
-    most the session's ``autoBroadcastJoinThreshold`` (-1 disables)."""
+    its size is known (non-negative) and at most the session's
+    ``autoBroadcastJoinThreshold`` (-1 disables).  The size is ``size``
+    where the caller knows it exactly, else the optimized plan's
+    estimate."""
     jsession = build_side.sparkSession._jsparkSession
     threshold = jsession.sessionState().conf().autoBroadcastJoinThreshold()
-    stats = build_side._jdf.queryExecution().optimizedPlan().stats()
-    return 0 <= int(str(stats.sizeInBytes())) <= threshold  # a Scala BigInt
+    if size is None:
+        stats = build_side._jdf.queryExecution().optimizedPlan().stats()
+        size = int(str(stats.sizeInBytes()))  # a Scala BigInt
+    return 0 <= size <= threshold
 
 
 def sketch_prune(

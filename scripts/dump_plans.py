@@ -160,15 +160,19 @@ def main() -> None:
         "cross the Python boundary), ONE Exchange routes hashes to shards, "
         "and each shard's filter solves inside `FlatMapGroupsInPandas`; "
         "the output is the KB-scale (shard, blob) table — no key list "
-        "ever reaches the driver.",
+        "ever reaches the driver. The freeze persists that table and sizes "
+        "it in one action, so its plan reads the cache "
+        "(`InMemoryTableScan`) over the solve.",
         fmt(frozen),
     ))
-    small, large = both_regimes(lambda: frozen_probe_join(events, "event_id", frozen, 8))
+    small, large = both_regimes(lambda: frozen_probe_join(events, "event_id", frozen))
     sections.append((
         "Frozen-filter probe — broadcastable blob table",
         "The blob table is within `spark.sql.autoBroadcastJoinThreshold` "
-        "(the rule the sketch joins use), so `frozen_probe_join` collects "
-        "and broadcasts it once and the fact scan is filtered by an "
+        "(the rule the sketch joins use, on the blob bytes the freeze "
+        "measured), so the first `frozen_probe_join` collects and "
+        "broadcasts it, every later probe reuses that broadcast, and the "
+        "fact scan is filtered by an "
         "`ArrowEvalPython` probe whose only input is `xxhash64` computed "
         "in codegen — no join, no shuffle, 8 B per row to Python. FPs "
         "are exactly 2^-f and a downstream exact join can rescue them "
@@ -183,7 +187,8 @@ def main() -> None:
         "shards)`), a `ShuffledHashJoin` lands every probe row beside "
         "exactly its shard's blob (hinted shuffle-hash), and the probe "
         "runs in `ArrowEvalPython` against the joined blob column with a "
-        "per-worker decode cache. No driver collect of blobs.",
+        "per-worker decode cache. The blob side reads the cached table; "
+        "no driver collect of blobs.",
         large,
     ))
 

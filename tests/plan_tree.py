@@ -1,7 +1,11 @@
 """Physical-plan helpers for the plan tests: walk a DataFrame's plan
-before execution and set the broadcast threshold for a block."""
+before execution, set the broadcast threshold for a block and count the
+Spark jobs a call runs."""
 
 import contextlib
+import itertools
+
+_GROUPS = itertools.count()
 
 
 @contextlib.contextmanager
@@ -13,6 +17,19 @@ def broadcast_threshold(spark, value):
         yield
     finally:
         spark.conf.set(key, prev)
+
+
+def jobs_run_by(spark, build):
+    """(result of build(), ids of the Spark jobs it ran)."""
+    sc = spark.sparkContext
+    group = f"gps-plan-test-{next(_GROUPS)}"
+    sc.setJobGroup(group, "plan test")
+    try:
+        out = build()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()  # the tracker reads listener events
+    return out, list(sc.statusTracker().getJobIdsForGroup(group))
 
 
 def plan_tree(df):

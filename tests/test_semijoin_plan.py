@@ -4,29 +4,14 @@ broadcast join with no filter build and no Python, and a dim past it keeps
 the sketch path: a fact-side probe ahead of a broadcast-hinted join that
 never shuffles the fact side."""
 
-import itertools
-
 import pytest
 from pyspark.sql import functions as F
 
 from guava_probably_spark.operators import sketch_antijoin, sketch_semijoin
 from guava_probably_spark.operators.semijoin import _broadcastable
-from plan_tree import broadcast_threshold, count, find, plan_tree
+from plan_tree import broadcast_threshold, count, find, jobs_run_by, plan_tree
 
 PYTHON_NODES = ("ArrowEvalPython", "BatchEvalPython", "MapInArrow", "MapInPandas")
-_GROUPS = itertools.count()
-
-
-def _jobs_run_by(spark, build):
-    """(result of build(), ids of the Spark jobs it ran)."""
-    sc = spark.sparkContext
-    group = f"gps-semijoin-plan-test-{next(_GROUPS)}"
-    sc.setJobGroup(group, "sketch join construction")
-    try:
-        out = build()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    return out, list(sc.statusTracker().getJobIdsForGroup(group))
 
 
 @pytest.fixture(scope="module")
@@ -39,7 +24,7 @@ def tables(spark, sf_dir):
 def test_broadcastable_dim_semijoin_is_the_plain_broadcast_join(spark, tables):
     lineitem, dim = tables
     assert _broadcastable(dim)
-    sj, jobs = _jobs_run_by(
+    sj, jobs = jobs_run_by(
         spark, lambda: sketch_semijoin(spark, lineitem, "l_partkey", dim, "p_partkey")
     )
     assert jobs == []  # no dim count, no filter build
@@ -53,7 +38,7 @@ def test_past_threshold_semijoin_prunes_the_fact_side_under_a_broadcast(spark, t
     lineitem, dim = tables
     with broadcast_threshold(spark, "-1"):
         assert not _broadcastable(dim)
-        sj, jobs = _jobs_run_by(
+        sj, jobs = jobs_run_by(
             spark, lambda: sketch_semijoin(spark, lineitem, "l_partkey", dim, "p_partkey")
         )
         assert jobs  # the dim's filter was built
@@ -75,7 +60,7 @@ def test_past_threshold_semijoin_prunes_the_fact_side_under_a_broadcast(spark, t
 
 def test_exact_antijoin_with_broadcastable_dim_is_one_broadcast_left_anti(spark, tables):
     lineitem, dim = tables
-    aj, jobs = _jobs_run_by(
+    aj, jobs = jobs_run_by(
         spark, lambda: sketch_antijoin(spark, lineitem, "l_partkey", dim, "p_partkey")
     )
     assert jobs == []

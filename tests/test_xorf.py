@@ -8,7 +8,7 @@ import pytest
 
 from guava_probably_spark.sketches import Sketch, XorFilter
 from guava_probably_spark.sketches.base import FUNNEL_LONG, FUNNEL_PREHASHED
-from plan_tree import broadcast_threshold, count, find, plan_tree
+from plan_tree import broadcast_threshold, count, find, jobs_run_by, plan_tree
 
 
 def _hashes(n=20000, seed=5):
@@ -240,6 +240,10 @@ def test_freeze_map_deterministic_and_conflict_raises(spark):
         freeze_map(conflicted, "k", "v", shards=4).collect()
 
 
+def _joins(tree):
+    return [t for t in find(tree, "") if "Join" in t[0].split(" ")[0]]
+
+
 @pytest.fixture(params=["10MB", "-1"], ids=["broadcast", "join"])
 def frozen_regime(request, spark):
     """Both plans of the frozen joins: Spark's default
@@ -386,7 +390,7 @@ def test_broadcastable_frozen_joins_probe_the_fact_side_in_place(spark, frozen_t
     for df in (frozen_probe_join(fact, "k", ff, 8), frozen_lookup_join(fact, "k", fm, 8)):
         tree = plan_tree(df)
         assert count(tree, "Exchange") == 0, tree
-        assert not [t for t in find(tree, "") if "Join" in t[0].split(" ")[0]], tree
+        assert not _joins(tree), tree
         (py,) = find(tree, "ArrowEvalPython")
         # e.g. ArrowEvalPython [probe(xxhash64(id#1L, 42))#9], [pythonUDF0#12], 200
         assert re.match(r"ArrowEvalPython \[\w+\(xxhash64\(\w+#\d+L, 42\)\)#\d+L?\]", py[0]), py[0]
@@ -418,3 +422,134 @@ def test_frozen_lookup_join_schema_is_the_same_in_both_plans(spark, frozen_table
         past = frozen_lookup_join(fact, "k", fm, 8, out_col="v").schema
     assert within == past
     assert within.names == ["k", "x", "v"]
+
+
+@pytest.fixture(scope="module")
+def frozen64(spark):
+    """10 k keys with a value each, frozen into 64 shards as a filter and
+    as a map."""
+    import pyspark.sql.functions as F
+
+    from guava_probably_spark.operators import freeze_filter, freeze_map
+
+    keys = spark.range(0, 10000).select((F.col("id") * 7).alias("k"), (F.col("id") % 13).alias("v"))
+    return keys, freeze_filter(keys, "k", shards=64), freeze_map(keys, "k", "v", vbits=4, shards=64)
+
+
+def test_frozen_shard_count_defaults_to_the_freeze_and_a_mismatch_raises(
+    spark, frozen64, frozen_regime
+):
+    """Probing with another shard count than the freeze's routes members
+    to the wrong shard (128 finds about half of them, 32 overruns the
+    broadcast table). Both plans default to the recorded count and every
+    entry point refuses a different one; a blob table no freeze returned
+    needs the count."""
+    import pyspark.sql.functions as F
+
+    from guava_probably_spark.operators import (
+        frozen_lookup_join,
+        frozen_lookup_udf,
+        frozen_probe_join,
+        frozen_probe_udf,
+    )
+
+    keys, ff, fm = frozen64
+    assert frozen_probe_join(keys, "k", ff).count() == 10000
+    assert frozen_probe_join(keys, "k", ff, 64).count() == 10000
+    looked = frozen_lookup_join(keys, "k", fm, out_col="got")
+    assert looked.where(F.col("got").isNull() | (F.col("got") != F.col("v"))).count() == 0
+    for bad in (128, 32):
+        for call in (
+            lambda: frozen_probe_join(keys, "k", ff, bad),
+            lambda: frozen_lookup_join(keys, "k", fm, bad),
+            lambda: frozen_probe_udf(spark, ff, bad),
+            lambda: frozen_lookup_udf(spark, fm, bad),
+        ):
+            with pytest.raises(ValueError, match="64 shards"):
+                call()
+
+    unrecorded = ff.select("*")
+    with pytest.raises(ValueError, match="shards is required"):
+        frozen_probe_join(keys, "k", unrecorded)
+    assert frozen_probe_join(keys, "k", unrecorded, 64).count() == 10000
+
+
+def test_frozen_joins_broadcast_once_and_run_a_bloom_probes_jobs(spark, frozen_tables):
+    """Within the threshold the first frozen join on a table collects and
+    broadcasts it; a second one reuses that broadcast and its UDF, so
+    building it runs no Spark job, and executing it runs the jobs of a
+    plain broadcast bloom probe of the same fact. Past the threshold the
+    blob table is never collected."""
+    import pyspark.sql.functions as F
+
+    from guava_probably_spark.functions import might_contain_udf
+    from guava_probably_spark.operators import (
+        frozen_lookup_join,
+        frozen_probe_join,
+        frozen_probe_udf,
+    )
+    from guava_probably_spark.sketches import BloomSketch
+    from guava_probably_spark.sketches.base import FUNNEL_LONG
+
+    fact, ff, fm = frozen_tables
+    bloom = BloomSketch(5000, 0.01, funnel=FUNNEL_LONG)
+    bloom.update(range(5000))
+    probe = might_contain_udf(spark, bloom.to_bytes())
+    bloom_count, bloom_jobs = jobs_run_by(spark, lambda: fact.filter(probe(F.col("k"))).count())
+    assert bloom_count >= 5000 and bloom_jobs
+
+    for build, run in (
+        (lambda: frozen_probe_join(fact, "k", ff), lambda df: df.count()),
+        (
+            lambda: frozen_lookup_join(fact, "k", fm),
+            lambda df: df.agg(F.count("frozen_value")).collect(),
+        ),
+    ):
+        build()
+        df, jobs = jobs_run_by(spark, build)
+        assert jobs == []
+        _, jobs = jobs_run_by(spark, lambda: run(df))
+        assert len(jobs) == len(bloom_jobs)
+    assert frozen_probe_udf(spark, ff) is frozen_probe_udf(spark, ff)
+
+    with broadcast_threshold(spark, "-1"):
+        for build in (lambda: frozen_probe_join(fact, "k", ff), lambda: frozen_lookup_join(fact, "k", fm)):
+            _, jobs = jobs_run_by(spark, build)
+            assert jobs == []
+
+
+def test_freeze_is_sized_by_its_exact_blob_bytes(spark):
+    """Spark estimates a freeze's output from its input, about ten times
+    the blob bytes here. The freeze measures its blobs, so with the
+    threshold between the two the table the caller never persisted takes
+    the broadcast plan."""
+    import pyspark.sql.functions as F
+
+    from guava_probably_spark.operators import freeze_filter, frozen_probe_join
+
+    keys = spark.range(0, 20000).select((F.col("id") * 3).alias("k"))
+    frozen = freeze_filter(keys, "k", shards=8)
+    exact = sum(len(r.sketch) for r in frozen.collect())
+    estimate = int(str(frozen._jdf.queryExecution().analyzed().stats().sizeInBytes()))
+    assert 2 * exact < estimate
+    with broadcast_threshold(spark, str(2 * exact)):
+        df = frozen_probe_join(keys, "k", frozen)
+        tree = plan_tree(df)
+        assert not _joins(tree), tree
+        assert count(tree, "ArrowEvalPython") == 1, tree
+        assert df.count() == 20000
+
+
+def test_freeze_caches_its_blob_table_coalesced(spark):
+    """Spark caches a plan with AQE's partition coalescing off, which left
+    the blob table in ``spark.sql.shuffle.partitions`` mostly empty
+    partitions. The freeze turns coalescing on for its own ``persist()``
+    only and restores the session setting."""
+    from guava_probably_spark.operators import freeze_filter
+
+    key = "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning"
+    before = spark.conf.get(key)
+    frozen = freeze_filter(spark.range(0, 5000), "id", shards=64)
+    assert spark.conf.get(key) == before
+    assert frozen.is_cached
+    assert frozen.rdd.getNumPartitions() < int(spark.conf.get("spark.sql.shuffle.partitions"))
