@@ -1,11 +1,8 @@
 from .build import (  # noqa: F401
-    MULTI_SCHEMA,
     PARTIAL_SCHEMA,
     build_grouped,
-    build_partials,
     build_partials_files_multi,
     build_partials_multi,
-    build_weighted_partials,
     collect_sketch,
     collect_sketches_files,
     collect_sketches_multi,

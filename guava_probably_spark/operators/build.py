@@ -4,14 +4,34 @@ THE load-bearing design decision (SURVEY.md §3.4): PySpark pandas GROUPED_AGG
 UDAFs perform NO partial aggregation — a naive pandas UDAF would shuffle all
 raw rows (10^12 turns at design scale). Instead:
 
-  scan → select(col) → mapInArrow(build partial per partition)   [no shuffle]
+  scan → select(cols) → mapInArrow(build partials per partition) [no shuffle]
   → repartition(P/fanin) → mapInArrow(merge)  … repeated         [shuffles
     only sketch blobs, KB-sized]
   → driver merges the ≤fanin survivors
 
 Raw data is scanned exactly once and never shuffled.  Column pruning pushes
-through mapInArrow because we select the hashed column first (verified by
+through mapInArrow because we select the sketched columns first (verified by
 plans.assert_no_raw_shuffle / tests).
+
+Every global build is a list of targets ``(name, column, spec)`` or
+``(name, column, spec, weight_column)`` run through one kernel, one partial
+schema and one merge: ``collect_sketch`` and ``collect_weighted_sketch`` are
+one-target calls of ``collect_sketches_multi``, ``collect_sketches_files``
+reads the files in the workers, and ``operators.checkpoint`` builds one
+partial per file.
+
+- ``_ingest`` puts one batch of one column into one sketch and returns the
+  ``n`` and overflow it adds. ``build_grouped`` calls it once per key
+  segment.
+- ``_Partial`` holds one task's sketches and emits them as
+  ``PARTIAL_SCHEMA`` rows ``(name, sketch, n, overflow)``.
+- ``tree_merge`` folds a task's rows per name (``fold_sketch_rows``) until at
+  most ``fanin`` partitions remain, and ``_collect`` folds the survivors on
+  the driver. A target with no rows gets ``(spec.create(), 0, 0)``.
+
+``n`` counts what the sketch ingests: the non-null values, and for value
+sketches (``FUNNEL_NONE``: KLL, t-digest, DD, REQ, MG) the non-NaN ones, since
+a float NaN is a missing value there. Hash sketches hash a NaN like any value.
 
 Grouped (per-key) sketches of any kind (``build_grouped``) run the shared
 grouped plan: one key exchange, a JVM sort of each reduce partition by key,
@@ -21,12 +41,12 @@ and one Python stage that streams the sorted rows into one sketch per key.
 from __future__ import annotations
 
 import math
-import time
 import warnings
 from collections.abc import Iterator
 
 import numpy as np
 import pyarrow as pa
+import pyarrow.compute as pc
 
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.types import BinaryType, LongType, StructField, StructType
@@ -36,14 +56,13 @@ from ..sketches.base import FUNNEL_NONE, FUNNEL_PREHASHED, hash_column
 from ._arrow_common import repartition_by_key
 from .filetasks import list_input_files, plan_file_tasks
 
-PARTIAL_SCHEMA = "sketch binary, n bigint, overflow bigint, part_id bigint, secs double"
+PARTIAL_SCHEMA = "name string, sketch binary, n bigint, overflow bigint"
 _PARTIAL_ARROW = pa.schema(
     [
+        ("name", pa.string()),
         ("sketch", pa.binary()),
         ("n", pa.int64()),
         ("overflow", pa.int64()),
-        ("part_id", pa.int64()),
-        ("secs", pa.float64()),
     ]
 )
 
@@ -116,22 +135,6 @@ def fold_sketch_rows(rows, dedup: bool = True) -> tuple[Sketch | None, int, int]
     return acc, n, overflow
 
 
-def _ingest_overflow(sk: Sketch, column) -> int:
-    """One column batch into ``sk`` via the distributed-build path: hash
-    once + set-semantics ingest for hash sketches (funnel bound), raw
-    update for value sketches. Returns the capacity-overflow count — a
-    cuckoo insert can FAIL at capacity, and dropping that count on the
-    build path would be a silent false negative, so it flows into the
-    partial's overflow column (bloom bits can't overflow; estimators
-    never fail)."""
-    ingest = _hash_ingest(sk)
-    if ingest is None:
-        sk.update(column)
-        return 0
-    _, h1, h2 = hash_column(column, sk.funnel)
-    return int(ingest(h1, h2) or 0)
-
-
 def _hash_ingest(sk: Sketch):
     """``sk.ingest_hashes`` when a build should murmur3 the column once and
     ingest ``(h1, h2)``; None when the column must go through ``update()``:
@@ -145,46 +148,60 @@ def _hash_ingest(sk: Sketch):
     return getattr(sk, "ingest_hashes", None)
 
 
-def build_partials(df: DataFrame, col: str, spec: SketchSpec) -> DataFrame:
-    """One partial sketch row per input partition; raw rows never shuffle."""
+def _nan_to_null(values: pa.Array) -> pa.Array:
+    """A float NaN is a missing value, as the siblings (and pandas) treat
+    it: not ingested and not counted in ``n``."""
+    if pa.types.is_floating(values.type) and pc.any(pc.is_nan(values)).as_py():
+        return pc.if_else(pc.is_nan(values), pa.nulls(len(values), values.type), values)
+    return values
 
-    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        from pyspark import TaskContext
 
-        t0 = time.monotonic()
-        sk = spec.create()
-        n = 0
-        overflow = 0
-        first = True
-        for batch in batches:
-            column = batch.column(0)
-            if first:
-                _bind_funnel(sk, column)
-                first = False
-            overflow += _ingest_overflow(sk, column)
-            n += len(column) - column.null_count
-        if n == 0:
-            return
-        ctx = TaskContext.get()
-        pid = ctx.partitionId() if ctx else -1
-        yield pa.RecordBatch.from_pydict(
-            {
-                "sketch": [sk.to_bytes()],
-                "n": [n],
-                "overflow": [overflow],
-                "part_id": [pid],
-                "secs": [time.monotonic() - t0],
-            },
-            schema=_PARTIAL_ARROW,
-        )
+def _ingest(
+    sk: Sketch,
+    column: pa.Array,
+    weights: pa.Array | None = None,
+    hashed: dict | None = None,
+) -> tuple[int, int]:
+    """THE ingest kernel: one batch of one column into ``sk``; returns the
+    ``(n, overflow)`` it adds.
 
-    return df.select(col).mapInArrow(fn, PARTIAL_SCHEMA)
+    - A value sketch (FUNNEL_NONE) treats a float NaN as NULL.
+    - With ``weights``, rows whose value or weight is NULL are dropped
+      first, so the weights stay aligned with the hashed keys, and the
+      batch goes through ``update(column, weights=...)``.
+    - Otherwise a hash sketch murmur3-hashes the column once and ingests
+      ``(h1, h2)``; ``hashed`` ({funnel: (h1, h2)} for this column) shares
+      that pass between the sketches of one column. Other kinds take
+      ``update(column)``.
+
+    ``n`` counts the values left after that rule. Overflow is the number of
+    cuckoo inserts that FAILED at capacity: dropping it would be a silent
+    false negative, so it flows into the partial's overflow column (bloom
+    bits can't overflow; estimators never fail)."""
+    if sk.funnel == FUNNEL_NONE:
+        column = _nan_to_null(column)
+    if weights is not None:
+        if column.null_count or weights.null_count:
+            keep = pc.and_(column.is_valid(), weights.is_valid())
+            column, weights = column.filter(keep), weights.filter(keep)
+        sk.update(column, weights=weights.to_numpy(zero_copy_only=False))
+        return len(column), 0
+    overflow = 0
+    ingest = _hash_ingest(sk)
+    if ingest is None:
+        sk.update(column)
+    else:
+        hashed = {} if hashed is None else hashed
+        if sk.funnel not in hashed:
+            hashed[sk.funnel] = hash_column(column, sk.funnel)[1:]
+        overflow = int(ingest(*hashed[sk.funnel]) or 0)
+    return len(column) - column.null_count, overflow
 
 
 def _bind_funnel(sk: Sketch, column: pa.Array) -> None:
     """Auto-bind a hashed sketch's funnel to the column's arrow type on first
     batch (string → UTF8 funnel, int → LONG funnel)."""
-    from ..sketches.base import FUNNEL_LONG, FUNNEL_NONE, FUNNEL_PREHASHED, FUNNEL_UTF8
+    from ..sketches.base import FUNNEL_LONG, FUNNEL_UTF8
 
     if sk.funnel in (FUNNEL_NONE, FUNNEL_PREHASHED):
         # value sketch: nothing to bind; prehashed: the int column is the
@@ -199,52 +216,143 @@ def _bind_funnel(sk: Sketch, column: pa.Array) -> None:
         sk.funnel = FUNNEL_UTF8
 
 
-def _merge_stage(dedup: bool = True):
-    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        t0 = time.monotonic()
-        acc, n, overflow = fold_sketch_rows(
-            (
-                (blob, cnt, ov)
-                for batch in batches
-                for blob, cnt, ov in zip(
-                    batch.column(0).to_pylist(),
-                    batch.column(1).to_pylist(),
-                    batch.column(2).to_pylist(),
-                )
-            ),
-            dedup=dedup,
-        )
-        if acc is None:
-            return
-        from pyspark import TaskContext
+def _targets(targets) -> list[tuple[str, str, SketchSpec, str | None]]:
+    """Targets as ``(name, column, spec, weight column or None)``; a
+    3-tuple is an unweighted target."""
+    return [(t[0], t[1], t[2], t[3] if len(t) > 3 else None) for t in targets]
 
-        ctx = TaskContext.get()
-        pid = ctx.partitionId() if ctx else -1
-        yield pa.RecordBatch.from_pydict(
-            {
-                "sketch": [acc.to_bytes()],
-                "n": [n],
-                "overflow": [overflow],
-                "part_id": [pid],
-                "secs": [time.monotonic() - t0],
-            },
-            schema=_PARTIAL_ARROW,
-        )
+
+def _columns(targets) -> list[str]:
+    """The distinct columns the targets read, value and weight columns."""
+    return list(
+        dict.fromkeys(c for _, col, _, w in _targets(targets) for c in (col, w) if c)
+    )
+
+
+def _partial_batch(parts: dict[str, tuple[Sketch, int, int]]) -> pa.RecordBatch:
+    """{name: (sketch, n, overflow)} as one ``PARTIAL_SCHEMA`` batch."""
+    return pa.RecordBatch.from_pydict(
+        {
+            "name": list(parts),
+            "sketch": [sk.to_bytes() for sk, _, _ in parts.values()],
+            "n": [n for _, n, _ in parts.values()],
+            "overflow": [ov for _, _, ov in parts.values()],
+        },
+        schema=_PARTIAL_ARROW,
+    )
+
+
+class _Partial:
+    """One task's partial of a build: per target a sketch, the rows it
+    ingested and its overflow count."""
+
+    def __init__(self, targets):
+        self.targets = _targets(targets)
+        self.parts = {name: [spec.create(), 0, 0] for name, _, spec, _ in self.targets}
+        self.first = True
+
+    def add(self, column_of) -> None:
+        """One batch into every target; ``column_of(c)`` is column ``c``'s
+        Arrow array. Hash-ingesting sketches on one column share one hash
+        pass — 3 sketches over conv_id = 1 hash."""
+        hashed: dict[str, dict] = {}
+        for name, c, _, w in self.targets:
+            column = column_of(c)
+            part = self.parts[name]
+            if self.first:
+                _bind_funnel(part[0], column)
+            n, overflow = _ingest(
+                part[0],
+                column,
+                None if w is None else column_of(w),
+                hashed.setdefault(c, {}),
+            )
+            part[1] += n
+            part[2] += overflow
+        self.first = False
+
+    def batches(self) -> Iterator[pa.RecordBatch]:
+        """The partial as one ``PARTIAL_SCHEMA`` batch; nothing when the
+        task ingested no value."""
+        if any(n for _, n, _ in self.parts.values()):
+            yield _partial_batch(self.parts)
+
+
+def build_partials_multi(df: DataFrame, targets) -> DataFrame:
+    """targets: [(name, column, spec[, weight column])] → one
+    ``PARTIAL_SCHEMA`` row per target and input partition; raw rows never
+    shuffle."""
+    cols = _columns(targets)
+    col_idx = {c: i for i, c in enumerate(cols)}
+
+    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        part = _Partial(targets)
+        for batch in batches:
+            part.add(lambda c: batch.column(col_idx[c]))
+        yield from part.batches()
+
+    return df.select(*cols).mapInArrow(fn, PARTIAL_SCHEMA)
+
+
+def _merge_stage(dedups: dict[str, bool]):
+    """``dedups``: per-name cuckoo merge semantics (_spec_dedup)."""
+
+    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        rows: dict[str, list] = {}
+        for batch in batches:
+            for name, blob, cnt, ov in zip(*(c.to_pylist() for c in batch.columns)):
+                rows.setdefault(name, []).append((blob, cnt, ov))
+        if rows:
+            yield _partial_batch(
+                {
+                    name: fold_sketch_rows(named, dedup=dedups.get(name, True))
+                    for name, named in rows.items()
+                }
+            )
 
     return fn
 
 
-def tree_merge(partials: DataFrame, fanin: int = 64, dedup: bool = True) -> DataFrame:
-    """treeAggregate-style reduction: log_fanin(P) stages, each shuffling only
-    sketch rows (≤1 per partition). ``dedup`` follows the build's cuckoo
-    semantics (_spec_dedup)."""
-    df = partials
-    p = df.rdd.getNumPartitions()
-    stage = _merge_stage(dedup)
+def tree_merge(
+    partials: DataFrame, fanin: int = 64, dedups: dict[str, bool] | None = None
+) -> DataFrame:
+    """treeAggregate-style reduction of ``PARTIAL_SCHEMA`` rows:
+    log_fanin(P) stages, each a round-robin ``repartition`` of sketch rows
+    (≤ one per target and partition) and a merge per name. ``dedups`` gives
+    a name's cuckoo semantics (_spec_dedup; True when absent)."""
+    p = partials.rdd.getNumPartitions()
+    stage = _merge_stage(dedups or {})
     while p > fanin:
         p = max(1, math.ceil(p / fanin))
-        df = df.repartition(p).mapInArrow(stage, PARTIAL_SCHEMA)
-    return df
+        partials = partials.repartition(p).mapInArrow(stage, PARTIAL_SCHEMA)
+    return partials
+
+
+def _collect(
+    partials: DataFrame, fanin: int, targets
+) -> dict[str, tuple[Sketch, int, int]]:
+    """Tree-merge ``PARTIAL_SCHEMA`` rows and fold the collected ones per
+    name on the driver: {name: (sketch, rows, overflow)} for every target."""
+    targets = _targets(targets)
+    dedups = {name: _spec_dedup(spec) for name, _, spec, _ in targets}
+    rows: dict[str, list] = {name: [] for name in dedups}
+    for r in tree_merge(partials, fanin, dedups).collect():
+        rows[r.name].append((r.sketch, r.n, r.overflow))
+    out = {}
+    for name, _, spec, _ in targets:
+        acc, n, overflow = fold_sketch_rows(rows[name], dedup=dedups[name])
+        out[name] = (spec.create(), 0, 0) if acc is None else (acc, n, overflow)
+    return out
+
+
+def collect_sketches_multi(
+    df: DataFrame, targets, fanin: int = 64
+) -> dict[str, tuple[Sketch, int, int]]:
+    """One scan → {name: (sketch, rows, overflow)} for every target
+    ``(name, column, spec[, weight column])``. At 100 TB the scan dominates;
+    building HLL+bloom+CMS over the same column (or several columns) in one
+    pass costs one read instead of k."""
+    return _collect(build_partials_multi(df, targets), fanin, targets)
 
 
 def collect_sketch(
@@ -254,244 +362,24 @@ def collect_sketch(
 
     Returns (sketch, rows_consumed, merge_overflow_count).
     """
-    dedup = _spec_dedup(spec)
-    partials = tree_merge(build_partials(df, col, spec), fanin, dedup=dedup)
-    rows = partials.collect()
-    if not rows:
-        return spec.create(), 0, 0
-    acc, n, overflow = fold_sketch_rows(
-        ((r.sketch, r.n, r.overflow) for r in rows), dedup=dedup
-    )
-    return acc, n, overflow
-
-
-def build_weighted_partials(
-    df: DataFrame, key_col: str, value_col: str, spec: SketchSpec
-) -> DataFrame:
-    """One weighted partial per partition for sketches whose ``update``
-    takes (keys, weights) — tuple sketch per-key sums, CMS/CountSketch/MG
-    weighted frequencies. Null keys are filtered JVM-side so the weight
-    column stays aligned with the hashed keys (the sketches raise on a
-    length mismatch rather than misalign silently)."""
-
-    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        from pyspark import TaskContext
-
-        t0 = time.monotonic()
-        sk = spec.create()
-        n = 0
-        first = True
-        for batch in batches:
-            keys = batch.column(0)
-            if first:
-                _bind_funnel(sk, keys)
-                first = False
-            if len(keys) == 0:
-                continue
-            w = batch.column(1).to_numpy(zero_copy_only=False)
-            sk.update(keys, weights=w)
-            n += len(keys)
-        if n == 0:
-            return
-        ctx = TaskContext.get()
-        pid = ctx.partitionId() if ctx else -1
-        yield pa.RecordBatch.from_pydict(
-            {
-                "sketch": [sk.to_bytes()],
-                "n": [n],
-                "overflow": [0],
-                "part_id": [pid],
-                "secs": [time.monotonic() - t0],
-            },
-            schema=_PARTIAL_ARROW,
-        )
-
-    pruned = df.select(
-        F.col(key_col).alias("k"), F.col(value_col).cast("long").alias("w")
-    ).filter(F.col("k").isNotNull() & F.col("w").isNotNull())
-    return pruned.mapInArrow(fn, PARTIAL_SCHEMA)
+    return collect_sketches_multi(df, [(col, col, spec)], fanin)[col]
 
 
 def collect_weighted_sketch(
     df: DataFrame, key_col: str, value_col: str, spec: SketchSpec, fanin: int = 64
 ) -> tuple[Sketch, int, int]:
-    """collect_sketch for (key, weight) sketches: same scan-once partials +
-    KB-blob tree merge, two columns in. The tuple-sketch entry point —
+    """collect_sketch for (key, weight) sketches whose ``update`` takes
+    (keys, weights) — tuple sketch per-key sums, CMS/CountSketch/MG weighted
+    frequencies, SHLL timestamps: same scan-once partials + KB-blob tree
+    merge, two columns in. The tuple-sketch entry point —
     ``collect_weighted_sketch(turns, "conv_id", "n_tokens",
     SketchSpec("tuple", {"k": 4096}))`` answers "estimated total tokens
-    across distinct conversations" from one blob."""
-    partials = tree_merge(
-        build_weighted_partials(df, key_col, value_col, spec), fanin
-    )
-    rows = partials.collect()
-    if not rows:
-        return spec.create(), 0, 0
-    return fold_sketch_rows((r.sketch, r.n, r.overflow) for r in rows)
-
-
-# ---------------------------------------------------------------------------
-# Multi-sketch single-pass build: one scan, many sketches.
-# At 100 TB the scan dominates; building HLL+bloom+CMS over the same column
-# (or several columns) in one mapInArrow pass costs one read instead of k.
-# ---------------------------------------------------------------------------
-
-MULTI_SCHEMA = "name string, sketch binary, n bigint, overflow bigint"
-_MULTI_ARROW = pa.schema(
-    [
-        ("name", pa.string()),
-        ("sketch", pa.binary()),
-        ("n", pa.int64()),
-        ("overflow", pa.int64()),
-    ]
-)
-
-
-class _MultiPartial:
-    """One task's partial of a multi-target build: per target a sketch, the
-    rows it consumed and its overflow count."""
-
-    def __init__(self, targets: list[tuple[str, str, SketchSpec]]):
-        self.targets = targets
-        self.sks = {name: spec.create() for name, _, spec in targets}
-        self.ns = dict.fromkeys(self.sks, 0)
-        self.ovs = dict.fromkeys(self.sks, 0)
-        self.first = True
-
-    def add(self, column_of) -> None:
-        """One batch into every target; ``column_of(c)`` is column ``c``'s
-        Arrow array. Hash-ingesting sketches on one column share one hash
-        pass — 3 sketches over conv_id = 1 hash."""
-        hashed: dict[tuple, tuple] = {}
-        for name, c, _ in self.targets:
-            column = column_of(c)
-            sk = self.sks[name]
-            if self.first:
-                _bind_funnel(sk, column)
-            ingest = _hash_ingest(sk)
-            if ingest is None:
-                sk.update(column)
-            else:
-                key = (c, sk.funnel)
-                if key not in hashed:
-                    hashed[key] = hash_column(column, sk.funnel)[1:]
-                self.ovs[name] += int(ingest(*hashed[key]) or 0)
-            self.ns[name] += len(column) - column.null_count
-        self.first = False
-
-    def batches(self) -> Iterator[pa.RecordBatch]:
-        """The partial as one (name, sketch, n, overflow) batch; nothing
-        when the task saw no non-null value."""
-        if all(v == 0 for v in self.ns.values()):
-            return
-        names = [name for name, _, _ in self.targets]
-        yield pa.RecordBatch.from_pydict(
-            {
-                "name": names,
-                "sketch": [self.sks[name].to_bytes() for name in names],
-                "n": [self.ns[name] for name in names],
-                "overflow": [self.ovs[name] for name in names],
-            },
-            schema=_MULTI_ARROW,
-        )
-
-
-def build_partials_multi(
-    df: DataFrame, targets: list[tuple[str, str, SketchSpec]]
-) -> DataFrame:
-    """targets: [(name, column, spec)] → partial rows (name, sketch, n)."""
-    cols = list(dict.fromkeys(c for _, c, _ in targets))
-    col_idx = {c: i for i, c in enumerate(cols)}
-
-    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        part = _MultiPartial(targets)
-        for batch in batches:
-            part.add(lambda c: batch.column(col_idx[c]))
-        yield from part.batches()
-
-    return df.select(*cols).mapInArrow(fn, MULTI_SCHEMA)
-
-
-def _merge_stage_multi(dedups: dict[str, bool]):
-    """``dedups``: per-target cuckoo merge semantics (_spec_dedup)."""
-
-    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        # repartition(p, "name") routes ALL of a name's rows to one task,
-        # so at large executor counts this task merges every partial of
-        # its name — decode through the same gated thread pool as
-        # fold_sketch_rows (zlib releases the GIL) so a 1000-blob merge
-        # isn't serial-decode bound
-        rows: list[tuple[str, bytes, int, int]] = []
-        for batch in batches:
-            rows.extend(
-                zip(
-                    batch.column(0).to_pylist(),
-                    batch.column(1).to_pylist(),
-                    batch.column(2).to_pylist(),
-                    batch.column(3).to_pylist(),
-                )
-            )
-        if not rows:
-            return
-        if (
-            len(rows) >= _FOLD_DECODE_MIN_ROWS
-            and sum(len(r[1]) for r in rows) >= 4_000_000
-        ):
-            from concurrent.futures import ThreadPoolExecutor
-
-            with ThreadPoolExecutor(max_workers=_FOLD_DECODE_THREADS) as pool:
-                decoded = list(pool.map(lambda r: Sketch.from_bytes(r[1]), rows))
-        else:
-            decoded = [Sketch.from_bytes(r[1]) for r in rows]
-        accs: dict[str, Sketch] = {}
-        ns: dict[str, int] = {}
-        ovs: dict[str, int] = {}
-        for (name, _blob, cnt, ov), sk in zip(rows, decoded):
-            if name in accs:
-                ovs[name] = ovs.get(name, 0) + _merge_into(
-                    accs[name], sk, dedup=dedups.get(name, True)
-                )
-            else:
-                accs[name] = sk
-            ns[name] = ns.get(name, 0) + cnt
-            ovs[name] = ovs.get(name, 0) + ov
-        keys = sorted(accs)
-        yield pa.RecordBatch.from_pydict(
-            {
-                "name": keys,
-                "sketch": [accs[k].to_bytes() for k in keys],
-                "n": [ns[k] for k in keys],
-                "overflow": [ovs[k] for k in keys],
-            },
-            schema=_MULTI_ARROW,
-        )
-
-    return fn
-
-
-def _collect_multi(
-    dfm: DataFrame, fanin: int, targets: list[tuple[str, str, SketchSpec]]
-) -> dict[str, tuple[Sketch, int, int]]:
-    """Tree-merge named partials and fold the collected rows per name."""
-    dedups = {name: _spec_dedup(spec) for name, _, spec in targets}
-    stage = _merge_stage_multi(dedups)
-    p = dfm.rdd.getNumPartitions()
-    while p > fanin:
-        p = max(1, math.ceil(p / fanin))
-        dfm = dfm.repartition(p, "name").mapInArrow(stage, MULTI_SCHEMA)
-    grouped: dict[str, list] = {}
-    for row in dfm.collect():
-        grouped.setdefault(row.name, []).append((row.sketch, row.n, row.overflow))
-    return {
-        name: fold_sketch_rows(rows, dedup=dedups.get(name, True))
-        for name, rows in grouped.items()
-    }
-
-
-def collect_sketches_multi(
-    df: DataFrame, targets: list[tuple[str, str, SketchSpec]], fanin: int = 64
-) -> dict[str, tuple[Sketch, int, int]]:
-    """One scan → {name: (sketch, rows, overflow)} for every target."""
-    return _collect_multi(build_partials_multi(df, targets), fanin, targets)
+    across distinct conversations" from one blob. Rows with a null key or
+    weight are filtered JVM-side; the weight is cast to long."""
+    pruned = df.select(
+        F.col(key_col).alias("k"), F.col(value_col).cast("long").alias("w")
+    ).filter(F.col("k").isNotNull() & F.col("w").isNotNull())
+    return collect_sketches_multi(pruned, [(key_col, "k", spec, "w")], fanin)[key_col]
 
 
 # ---------------------------------------------------------------------------
@@ -504,44 +392,47 @@ def collect_sketches_multi(
 # (locality/retry/speculation all apply).
 # ---------------------------------------------------------------------------
 
-def build_partials_files_multi(
-    spark, files: list[str], targets: list[tuple[str, str, SketchSpec]]
-) -> DataFrame:
-    cols = list(dict.fromkeys(c for _, c, _ in targets))
+
+def _ingest_file(part: "_Partial", file_path: str, columns: list[str]) -> pa.Table:
+    """Read one input file's ``columns`` with pyarrow in the worker, ingest
+    them into ``part`` and return the table."""
+    import pyarrow.parquet as pq
+
+    # use_threads=False: 32 parallel workers must not each spin up an
+    # internal arrow thread pool (oversubscription)
+    table = pq.read_table(file_path.removeprefix("file:"), columns=columns, use_threads=False)
+    # 16k-row chunks keep hash temporaries cache-resident: measured 2-3x
+    # kernel speedup and much better multi-core scaling vs whole-file
+    # batches (DRAM-bandwidth bound)
+    for rb in table.to_batches(max_chunksize=16384):
+        part.add(lambda c: rb.column(rb.schema.get_field_index(c)))
+    return table
+
+
+def build_partials_files_multi(spark, files: list[str], targets) -> DataFrame:
+    """``build_partials_multi`` over parquet files read in the workers: one
+    partial set per planned task (files round-robin over one wave, see
+    operators.filetasks)."""
+    cols = _columns(targets)
 
     def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        import pyarrow.parquet as pq
-
-        part = _MultiPartial(targets)
+        part = _Partial(targets)
         for batch in batches:
             for file_path in batch.column(0).flatten().to_pylist():
-                # use_threads=False: 32 parallel workers must not each spin
-                # up an internal arrow thread pool (oversubscription)
-                table = pq.read_table(
-                    file_path.removeprefix("file:"), columns=cols, use_threads=False
-                )
-                # 16k-row chunks keep hash temporaries cache-resident:
-                # measured 2-3x kernel speedup and much better multi-core
-                # scaling vs whole-file batches (DRAM-bandwidth bound)
-                for rb in table.to_batches(max_chunksize=16384):
-                    part.add(lambda c: rb.column(rb.schema.get_field_index(c)))
+                _ingest_file(part, file_path, cols)
         yield from part.batches()
 
-    return plan_file_tasks(spark, files).mapInArrow(fn, MULTI_SCHEMA)
+    return plan_file_tasks(spark, files).mapInArrow(fn, PARTIAL_SCHEMA)
 
 
 def collect_sketches_files(
-    spark,
-    input_path: str,
-    targets: list[tuple[str, str, SketchSpec]],
-    fanin: int = 64,
+    spark, input_path: str, targets, fanin: int = 64
 ) -> dict[str, tuple[Sketch, int, int]]:
     """File-granular multi-sketch build: list files → one partial set per
-    planned task (files round-robin over one wave, see operators.filetasks)
-    read with pyarrow in the workers → driver fold, or a tree merge when
-    there are more tasks than ``fanin``."""
+    planned task read with pyarrow in the workers → driver fold, or a tree
+    merge when there are more tasks than ``fanin``."""
     files = list_input_files(spark, input_path)
-    return _collect_multi(build_partials_files_multi(spark, files, targets), fanin, targets)
+    return _collect(build_partials_files_multi(spark, files, targets), fanin, targets)
 
 
 # ---------------------------------------------------------------------------
@@ -554,23 +445,11 @@ def collect_sketches_files(
 _GP_V, _GP_W = "__gp_v", "__gp_w"
 
 
-def _nan_to_null(values: pa.Array) -> pa.Array:
-    """A float NaN is a missing value, as the siblings (and pandas) treat
-    it: not ingested and not counted in ``n``."""
-    import pyarrow.compute as pc
-
-    if pa.types.is_floating(values.type) and pc.any(pc.is_nan(values)).as_py():
-        return pc.if_else(pc.is_nan(values), pa.nulls(len(values), values.type), values)
-    return values
-
-
 def _key_starts(key_cols: list[pa.Array], prev: list[pa.Array] | None) -> np.ndarray:
     """Per row of a key-sorted batch: does a new key start there? Row 0 is
     compared with ``prev`` (the previous batch's last keys, one element per
     column) and starts a key when there is none. NULL is a key of its own
     and NaN keys are one key, as in Spark's sort and GROUP BY."""
-    import pyarrow.compute as pc
-
     n = len(key_cols[0])
     starts = np.zeros(n, dtype=bool)
     if prev is None:
@@ -626,8 +505,10 @@ def _grouped_build_stage(spec: SketchSpec, n_keys: int, weighted: bool, names):
             key_cols = batch.columns[:n_keys]
             starts = _key_starts(key_cols, prev)
             prev = [c.slice(batch.num_rows - 1) for c in key_cols]
+            # grouped builds treat a NaN as NULL for every kind, hash
+            # sketches included
             values = _nan_to_null(batch.column(n_keys))
-            w = batch.column(n_keys + 1).to_numpy(zero_copy_only=False) if weighted else None
+            w = batch.column(n_keys + 1) if weighted else None
             cuts = np.append(np.union1d(np.flatnonzero(starts), [0]), batch.num_rows)
             for lo, hi in zip(cuts[:-1], cuts[1:]):
                 if starts[lo]:
@@ -637,14 +518,14 @@ def _grouped_build_stage(spec: SketchSpec, n_keys: int, weighted: bool, names):
                         ns.append(n)
                     key, sk, n = [c.slice(lo, 1) for c in key_cols], spec.create(), 0
                     _bind_funnel(sk, values)
-                seg = values.slice(lo, hi - lo)
-                if w is None:
-                    overflow = _ingest_overflow(sk, seg)
-                    if overflow:
-                        raise _overflow_error(key, overflow)
-                else:
-                    sk.update(seg, weights=w[lo:hi])
-                n += len(seg) - seg.null_count
+                seg_n, overflow = _ingest(
+                    sk,
+                    values.slice(lo, hi - lo),
+                    None if w is None else w.slice(lo, hi - lo),
+                )
+                if overflow:
+                    raise _overflow_error(key, overflow)
+                n += seg_n
             if blobs:
                 yield _grouped_batch(keys, blobs, ns, names)
                 keys, blobs, ns = [], [], []

@@ -7,7 +7,8 @@ lineage + metrics".  Design (SURVEY.md §4.4):
   ~1 GB parquet files → ~100k independent tasks);
 - each task reads its planned group of files (operators.filetasks) with
   pyarrow inside the Python worker (column pruning intact: pyarrow reads
-  only that column's pages), builds one partial sketch per file, and emits
+  only that column's pages), runs the build kernel (operators.build
+  ``_Partial``, the one every global build shares) once per file, and emits
   one checkpoint row per file:
       (file, lineage, sketch, n, overflow, secs, bytes)
   where lineage = sha256(sketch spec + column + format version) — a restart
@@ -15,7 +16,8 @@ lineage + metrics".  Design (SURVEY.md §4.4):
 - waves: files are processed in bounded waves, each wave APPENDED to the
   checkpoint parquet — a killed job loses at most one wave;
 - resume: list the checkpoint's (lineage-matching) files, recompute only the
-  missing ones, then tree-merge all partials to the final sketch.
+  missing ones, then tree-merge all partials to the final sketch with the
+  build's own merge (operators.build ``_collect``).
 
 The non-checkpointed path (operators.build) stays on the JVM parquet scan;
 this path trades scan-level pushdown for exact per-partition lineage.
@@ -34,7 +36,7 @@ import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..sketches import Sketch, SketchSpec
-from .build import _bind_funnel, _ingest_overflow, fold_sketch_rows
+from .build import _collect, _ingest_file, _Partial, _spec_dedup, fold_sketch_rows
 from .filetasks import list_input_files, plan_file_tasks
 
 CHECKPOINT_SCHEMA = (
@@ -45,7 +47,8 @@ CHECKPOINT_SCHEMA = (
 
 def job_lineage(spec: SketchSpec, col: str) -> str:
     payload = json.dumps(
-        {"kind": spec.kind, "params": spec.params, "col": col, "v": 1},
+        # v2: a value sketch's n no longer counts NaN
+        {"kind": spec.kind, "params": spec.params, "col": col, "v": 2},
         sort_keys=True,
         default=str,
     )
@@ -54,27 +57,17 @@ def job_lineage(spec: SketchSpec, col: str) -> str:
 
 def _build_file_fn(col: str, spec: SketchSpec, lineage: str):
     def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        import pyarrow.parquet as pq
-
         for batch in batches:
             for file_path in batch.column(0).flatten().to_pylist():
                 t0 = time.monotonic()
-                local = file_path.removeprefix("file:")
-                table = pq.read_table(local, columns=[col], use_threads=False)
-                sk = spec.create()
-                n = 0
-                overflow = 0
-                for rb in table.to_batches(max_chunksize=16384):
-                    column = rb.column(0)
-                    _bind_funnel(sk, column)
-                    overflow += _ingest_overflow(sk, column)
-                    n += len(column) - column.null_count
-                blob = sk.to_bytes()
+                part = _Partial([(col, col, spec)])
+                table = _ingest_file(part, file_path, [col])
+                sk, n, overflow = part.parts[col]
                 yield pa.RecordBatch.from_pydict(
                     {
                         "file": [file_path],
                         "lineage": [lineage],
-                        "sketch": [blob],
+                        "sketch": [sk.to_bytes()],
                         "n": [n],
                         "overflow": [overflow],
                         "secs": [time.monotonic() - t0],
@@ -163,8 +156,6 @@ def build_with_checkpoint(
     files_limit exists for tests to simulate a mid-job kill.
     """
     lineage = job_lineage(spec, col)
-    from .build import _spec_dedup
-
     dedup = _spec_dedup(spec)
     files = list_input_files(spark, input_path)
     if files_limit is not None:
@@ -237,25 +228,12 @@ def build_with_checkpoint(
             partials = partials.unionByName(
                 healed.filter(F.col("ok")).select("sketch", "n", "overflow")
             )
-        from .build import tree_merge
-
-        shaped = partials.select(
-            "sketch",
-            "n",
-            "overflow",
-            F.lit(-1).alias("part_id"),
-            F.lit(0.0).alias("secs"),
-        )
-        acc, n, overflow = fold_sketch_rows(
-            ((r.sketch, r.n, r.overflow) for r in tree_merge(shaped, dedup=dedup).collect()),
-            dedup=dedup,
-        )
+        named = partials.select(F.lit(col).alias("name"), "sketch", "n", "overflow")
+        acc, n, overflow = _collect(named, 64, [(col, col, spec)])[col]
     finally:
         reduced.unpersist()
         if healed is not None:
             healed.unpersist()
-    if acc is None:
-        acc = spec.create()
     return acc, ResumeStats(
         total_files=len(files),
         reused=len(files) - len(todo),

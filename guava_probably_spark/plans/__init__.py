@@ -23,7 +23,7 @@ def assert_no_exchange_before_python(df: DataFrame) -> None:
     stage — i.e. raw rows flow scan → project → MapInArrow without
     shuffling. Broadcast/Reused exchanges are NOT raw-row shuffles and are
     allowed. Text-anchored on the LAST Python node, so this guard assumes a
-    single-branch build plan (every build_partials plan is one); a
+    single-branch build plan (every build_partials_multi plan is one); a
     multi-branch join plan needs per-branch assertion."""
     plan = physical_plan(df)
     lines = plan.splitlines()

@@ -152,7 +152,7 @@ class SlidingHllSketch(Sketch):
 
     def update(self, values, weights=None) -> None:
         """``weights`` carries the int64 timestamps (epoch seconds) — the
-        two-column build convention (build_weighted_partials)."""
+        two-column build convention (collect_weighted_sketch)."""
         if weights is None:
             raise ValueError("SlidingHllSketch.update requires weights=timestamps")
         _, h1, _ = hash_column(values, self.funnel)

@@ -33,7 +33,7 @@ def main() -> None:
 
     from guava_probably_spark.operators import (
         build_grouped,
-        build_partials,
+        build_partials_multi,
         grouped_hll,
         merge_sketch_tables,
         running_distinct,
@@ -58,7 +58,9 @@ def main() -> None:
 
     sections: list[tuple[str, str, str]] = []
 
-    partials = build_partials(events, "user_id", SketchSpec("hll", {"p": 12}))
+    partials = build_partials_multi(
+        events, [("user_id", "user_id", SketchSpec("hll", {"p": 12}))]
+    )
     sections.append((
         "Global sketch build — partials",
         "One `MapInArrow` per scan partition; **column pruning reaches the "
@@ -410,7 +412,6 @@ def main() -> None:
 
     from guava_probably_spark.pipeline.dedup import pairs_from_band_rows
     from guava_probably_spark.pipeline.wmh import wmh_band_keys
-    from guava_probably_spark.operators.build import build_weighted_partials, tree_merge as _tm
 
     docs = spark.read.parquet(os.path.join(SF_DIR, "documents.parquet"))
     sections.append((
@@ -426,16 +427,17 @@ def main() -> None:
     ))
     sections.append((
         "Sliding-HLL weighted build (scan-once partials, KB-blob fold)",
-        "Timestamps ride the weight column through the generic weighted "
-        "partial builder: one `MapInArrow` per partition emits one "
-        "frontier blob; the tree merge folds blobs, so shuffle volume is "
-        "O(partitions × blob), independent of row count — the same shape "
-        "every sketch build in this library compiles to.",
-        fmt(_tm(build_weighted_partials(
+        "Timestamps ride the weight column of a weighted target "
+        "`(name, key, spec, weight)` through the one partial builder: one "
+        "`MapInArrow` per partition emits one frontier blob; the tree merge "
+        "folds blobs, so shuffle volume is O(partitions × blob), "
+        "independent of row count — the same shape every sketch build in "
+        "this library compiles to.",
+        fmt(tree_merge(build_partials_multi(
             events.selectExpr(
                 "user_id", "CAST(CAST(ts AS TIMESTAMP) AS LONG) AS ts_epoch"
             ),
-            "user_id", "ts_epoch", SketchSpec("shll", {"p": 12})), 64)),
+            [("user_id", "user_id", SketchSpec("shll", {"p": 12}), "ts_epoch")]), 64)),
     ))
 
     written = write_plans(sections, sys.argv[1:])

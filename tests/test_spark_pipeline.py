@@ -17,7 +17,7 @@ from guava_probably_spark.functions import (
 )
 from guava_probably_spark.operators import (
     build_grouped,
-    build_partials,
+    build_partials_multi,
     collect_sketch,
     sketch_prune,
     sketch_semijoin,
@@ -44,12 +44,12 @@ def lineitem(spark, sf_dir):
 def test_plan_no_raw_row_shuffle(events):
     """The §3.4 invariant: build partials = scan → project → MapInArrow,
     zero Exchange below the Python stage."""
-    partials = build_partials(events, "user_id", SketchSpec("hll", {"p": 12}))
+    partials = build_partials_multi(events, [("user_id", "user_id", SketchSpec("hll", {"p": 12}))])
     assert_no_exchange_before_python(partials)
 
 
 def test_plan_column_pruning_reaches_scan(events):
-    partials = build_partials(events, "user_id", SketchSpec("hll", {"p": 12}))
+    partials = build_partials_multi(events, [("user_id", "user_id", SketchSpec("hll", {"p": 12}))])
     rs = scan_read_schema(partials)
     assert "user_id" in rs
     for other_col in ("event_type", "props", "value"):
@@ -159,7 +159,7 @@ def test_tree_merge_multi_stage(spark, events):
     """Force several merge stages (fanin=2 over 16 partitions) and check the
     result is still byte-identical to the single-stage build."""
     spec = SketchSpec("hll", {"p": 12})
-    p = build_partials(events.repartition(16), "user_id", spec)
+    p = build_partials_multi(events.repartition(16), [("user_id", "user_id", spec)])
     merged = tree_merge(p, fanin=2)
     rows = merged.collect()
     acc = None
