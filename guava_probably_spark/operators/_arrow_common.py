@@ -1,15 +1,19 @@
 """The grouped-build driver and the Arrow-batch kernels it shares.
 
-:func:`grouped_build` is the one plan of the vectorized grouped operators
-(HLL / CMS / theta / KLL family / mode / quantiles): JVM projection, the
-hot-key policy (the sampled :func:`_skew_probe` and the kind's map-side
-combine), one key exchange, one ``mapInArrow``. Each module brings only a
-:class:`GroupedKind`: its kernels, its probe threshold, its output schema.
+:func:`grouped_build` is the one plan of every grouped build: JVM
+projection, the hot-key policy (the sampled :func:`_skew_probe` and the
+kind's map-side combine), one key exchange, one ``mapInArrow``. Each
+operator brings only a :class:`GroupedKind`: its kernels, its probe
+threshold, its output schema, and whether its stage reads each reduce
+partition sorted by key. The vectorized kinds (HLL / CMS / theta / mode /
+quantiles) build every key of a partition at once; the sorted kinds
+(``build_grouped`` and the KLL family) stream the sorted rows through
+``build._grouped_build_stage``, one sketch per key.
 
-Inside the stage every build starts the same way: drop null values (a null
-hashes to nothing), murmur3-hash the value column, gather the partition
-into one contiguous buffer, and dictionary-encode the keys into dense
-codes. Several then collapse duplicate (key, hash) rows with the same
+Inside a vectorized stage every build starts the same way: drop null values
+(a null hashes to nothing), murmur3-hash the value column, gather the
+partition into one contiguous buffer, and dictionary-encode the keys into
+dense codes. Several then collapse duplicate (key, hash) rows with the same
 lexsort → run-boundary pass. Those blocks used to be copy-pasted per
 operator and diverged once (the theta packer's compression flag); this
 module is the single home.
@@ -46,15 +50,14 @@ def funnel_for_arrow_type(t: pa.DataType) -> int:
     return FUNNEL_LONG if pa.types.is_integer(t) else FUNNEL_UTF8
 
 
-def repartition_by_key(df, partitions: int | None, keys=("k",)):
+def repartition_by_key(df, partitions: int | None, keys):
     """The one reduce-partition rule of the grouped builds: co-locate each
-    key (the ``keys`` columns, ``k`` by default) in ``partitions``
-    partitions when the caller asks for a count, else in
-    ``defaultParallelism`` partitions — one wave of Python tasks. Neither
-    ``spark.sql.shuffle.partitions`` nor AQE decides it: Spark's default
-    of 200 partitions runs 200 Python tasks per build (about 10× slower on
-    25 k rows and 4 cores), and AQE coalescing by bytes can leave fewer
-    tasks than cores (1.2–1.5× slower there)."""
+    key (the ``keys`` columns) in ``partitions`` partitions when the caller
+    asks for a count, else in ``defaultParallelism`` partitions — one wave
+    of Python tasks. Neither ``spark.sql.shuffle.partitions`` nor AQE
+    decides it: Spark's default of 200 partitions runs 200 Python tasks per
+    build (about 10× slower on 25 k rows and 4 cores), and AQE coalescing
+    by bytes can leave fewer tasks than cores (1.2–1.5× slower there)."""
     n = partitions or df.sparkSession.sparkContext.defaultParallelism
     return df.repartition(n, *keys)
 
@@ -158,15 +161,15 @@ def gather_keyed_values(
     """Null-filter → one contiguous ``(keys, values, counts)`` for a
     partition whose batches are (key, value[, count]) columns.
 
-    The single home for the gather that grouped_kll / grouped_mode /
-    grouped_quantiles each used to hand-roll (this module's docstring
-    explains why copies diverge). ``as_float=True`` converts values to a
-    float64 numpy array and additionally drops NaNs (pandas-origin frames
-    surface missing floats as NaN, not null — a NaN would poison quantile
-    and sketch kernels); otherwise values stay an Arrow array (e.g. for
-    dictionary encoding). ``counts`` is an int64 numpy array when any batch
-    carried a third column (pre-reduced input), else None. Returns None if
-    no rows survive.
+    The single home for the gather of grouped_mode, grouped_quantiles, the
+    count combine (:func:`run_combine`) and the KLL family's map-side
+    combine (this module's docstring explains why copies diverge).
+    ``as_float=True`` converts values to a float64 numpy array and
+    additionally drops NaNs (pandas-origin frames surface missing floats as
+    NaN, not null — a NaN would poison quantile and sketch kernels);
+    otherwise values stay an Arrow array (e.g. for dictionary encoding).
+    ``counts`` is an int64 numpy array when any batch carried a third
+    column (pre-reduced input), else None. Returns None if no rows survive.
     """
     keys_parts, v_parts, c_parts = [], [], []
     counted = False
@@ -307,7 +310,8 @@ def _skew_probe(narrow, threshold: int) -> bool:
     The verdict is memoized per (input plan semanticHash, threshold) for
     the session: re-running the same query reuses the answer instead of
     re-scanning the sample. Data appended under an identical plan within
-    one session won't re-trigger the probe."""
+    one session won't re-trigger the probe. The key is column 0 of
+    ``narrow``, as in every kernel."""
     from pyspark.sql import functions as F
 
     try:
@@ -320,7 +324,7 @@ def _skew_probe(narrow, threshold: int) -> bool:
     cutoff = max(2, int(threshold * n_parts * _SKEW_PROBE_FRACTION))
     hot = (
         narrow.sample(fraction=_SKEW_PROBE_FRACTION, seed=42)
-        .groupBy("k")
+        .groupBy(narrow.columns[0])
         .count()
         .where(F.col("count") >= cutoff)
         .limit(1)
@@ -337,35 +341,49 @@ def _skew_probe(narrow, threshold: int) -> bool:
 class GroupedKind:
     """What one kind brings to :func:`grouped_build`: its kernels, its
     hot-key threshold and its output schema. Every kernel is a
-    ``mapInArrow`` function whose input batches carry the key as column 0."""
+    ``mapInArrow`` function whose input batches carry the key columns
+    first."""
 
-    schema: str  # output columns after ``key <type>``
-    build: Callable  # build over (k, v) batches: the one-stage plan
+    schema: str  # output columns after the key columns
+    build: Callable  # build over (keys, v[, w]) batches: the one-stage plan
     probe_rows: int | None = None  # hot rows per input partition; None: never probe
     combine: Callable | None = None  # map-side combine over (k, v) batches
-    combined: str = ""  # the combine's output columns after ``k <type>``
+    combined: str = ""  # the combine's output columns after the key
     merge: Callable | None = None  # build over combined batches; default ``build``
     hashed: Callable | None = None  # build over (k, xxhash64(v)) batches: ``prehash``
     cast: str | None = None  # Spark type the value column is cast to
+    sorted: bool = False  # the stage reads each reduce partition sorted by key
+
+
+_V, _W = "__gp_v", "__gp_w"
 
 
 def grouped_build(
     df,
-    key: str,
+    key: str | list[str],
     col: str,
     kind: GroupedKind,
     *,
+    weight_col: str | None = None,
     partitions: int | None = None,
     assume_colocated: bool = False,
     prehash: bool = False,
     rename: bool = True,
 ):
-    """The one driver of the vectorized grouped builds (grouped_hll,
-    grouped_cms, grouped_theta, grouped_kll and its siblings, grouped_mode,
-    grouped_quantiles): project ``(k, v)`` in the JVM, run the hot-key
-    policy, co-locate each key with one exchange, and build every key of a
-    partition in ONE ``mapInArrow``. Output: ``(key, *kind.schema)``, the
-    key column renamed back to ``key`` unless ``rename=False``.
+    """The one plan of every grouped build (grouped_hll, grouped_cms,
+    grouped_theta, grouped_kll and its siblings, grouped_mode,
+    grouped_quantiles, build_grouped): project ``(*keys, v[, w])`` in the
+    JVM, run the hot-key policy, co-locate each key with one exchange, and
+    build every key of a partition in ONE ``mapInArrow``. Output:
+    ``(*keys, *kind.schema)`` under the caller's key names, or one column
+    ``key`` when ``rename=False``. Internal names are ``__gp_``-prefixed,
+    so they cannot collide with a caller's column.
+
+    ``weight_col`` is cast to ``long``, and rows whose value or weight is
+    NULL are dropped in the JVM, so the weights stay aligned with the
+    values. A ``sorted`` kind reads each reduce partition sorted by key
+    (``sortWithinPartitions`` after the exchange; it spills, so a
+    partition of any size fits) and streams it, one key at a time.
 
     Hot keys: when the kind has a ``probe_rows`` threshold, the memoized
     sampled :func:`_skew_probe` decides whether any key ships that many
@@ -378,27 +396,38 @@ def grouped_build(
     values instead (``xxhash64(NULL)`` is the constant 42, which would
     count nulls as one value) and builds with ``kind.hashed``: no Python
     runs before the exchange. ``assume_colocated=True`` skips the exchange
-    for input already partitioned by ``key``. Neither runs the probe."""
+    for input already partitioned by ``key`` (a sorted kind still sorts
+    each partition). Neither runs the probe."""
     from pyspark.sql import functions as F
 
-    key_type = df.schema[key].dataType.simpleString()
+    keys = [key] if isinstance(key, str) else list(key)
+    aliases = [f"__gp_k{i}" for i in range(len(keys))]
+    key_schema = ", ".join(
+        f"{a} {df.schema[k].dataType.simpleString()}" for k, a in zip(keys, aliases)
+    )
     if prehash:
-        rows = df.where(F.col(col).isNotNull()).select(
-            F.col(key).alias("k"), F.xxhash64(col).alias("h")
-        )
-        stage = kind.hashed
+        df = df.where(F.col(col).isNotNull())
+        v, stage = F.xxhash64(col), kind.hashed
     else:
         v = F.col(col) if kind.cast is None else F.col(col).cast(kind.cast)
-        rows = df.select(F.col(key).alias("k"), v.alias("v"))
         stage = kind.build
-        if (
-            kind.probe_rows is not None
-            and not assume_colocated
-            and _skew_probe(rows, kind.probe_rows)
-        ):
-            rows = rows.mapInArrow(kind.combine, f"k {key_type}, {kind.combined}")
-            stage = kind.merge or kind.build
+    projected = [F.col(k).alias(a) for k, a in zip(keys, aliases)] + [v.alias(_V)]
+    if weight_col is not None:
+        projected.append(F.col(weight_col).cast("long").alias(_W))
+    rows = df.select(*projected)
+    if weight_col is not None:
+        rows = rows.where(F.col(_V).isNotNull() & F.col(_W).isNotNull())
+    if (
+        not prehash
+        and kind.probe_rows is not None
+        and not assume_colocated
+        and _skew_probe(rows, kind.probe_rows)
+    ):
+        rows = rows.mapInArrow(kind.combine, f"{key_schema}, {kind.combined}")
+        stage = kind.merge or kind.build
     if not assume_colocated:
-        rows = repartition_by_key(rows, partitions)
-    out = rows.mapInArrow(stage, f"key {key_type}, {kind.schema}")
-    return out.withColumnRenamed("key", key) if rename else out
+        rows = repartition_by_key(rows, partitions, aliases)
+    if kind.sorted:
+        rows = rows.sortWithinPartitions(*aliases)
+    out = rows.mapInArrow(stage, f"{key_schema}, {kind.schema}")
+    return out.withColumnsRenamed(dict(zip(aliases, keys if rename else ["key"])))

@@ -21,8 +21,8 @@ reads the files in the workers, and ``operators.checkpoint`` builds one
 partial per file.
 
 - ``_ingest`` puts one batch of one column into one sketch and returns the
-  ``n`` and overflow it adds. ``build_grouped`` calls it once per key
-  segment.
+  ``n`` and overflow it adds. The grouped stream (``_grouped_build_stage``)
+  calls it once per key segment.
 - ``_Partial`` holds one task's sketches and emits them as
   ``PARTIAL_SCHEMA`` rows ``(name, sketch, n, overflow)``.
 - ``tree_merge`` folds a task's rows per name (``fold_sketch_rows``) until at
@@ -33,9 +33,11 @@ partial per file.
 sketches (``FUNNEL_NONE``: KLL, t-digest, DD, REQ, MG) the non-NaN ones, since
 a float NaN is a missing value there. Hash sketches hash a NaN like any value.
 
-Grouped (per-key) sketches of any kind (``build_grouped``) run the shared
-grouped plan: one key exchange, a JVM sort of each reduce partition by key,
-and one Python stage that streams the sorted rows into one sketch per key.
+Grouped (per-key) sketches of any kind (``build_grouped``) and the KLL
+family (``grouped_kll``) run ``_arrow_common.grouped_build`` as a sorted
+kind: one key exchange, a JVM sort of each reduce partition by key, and one
+Python stage (``_grouped_build_stage``) that streams the sorted rows into
+one sketch per key.
 """
 
 from __future__ import annotations
@@ -49,11 +51,16 @@ import pyarrow as pa
 import pyarrow.compute as pc
 
 from pyspark.sql import DataFrame, functions as F
-from pyspark.sql.types import BinaryType, LongType, StructField, StructType
 
 from ..sketches import Sketch, SketchSpec
-from ..sketches.base import FUNNEL_NONE, FUNNEL_PREHASHED, hash_column
-from ._arrow_common import repartition_by_key
+from ..sketches.base import (
+    FUNNEL_LONG,
+    FUNNEL_NONE,
+    FUNNEL_PREHASHED,
+    FUNNEL_UTF8,
+    hash_column,
+)
+from ._arrow_common import GroupedKind, grouped_build
 from .filetasks import list_input_files, plan_file_tasks
 
 PARTIAL_SCHEMA = "name string, sketch binary, n bigint, overflow bigint"
@@ -163,9 +170,11 @@ def _ingest(
     hashed: dict | None = None,
 ) -> tuple[int, int]:
     """THE ingest kernel: one batch of one column into ``sk``; returns the
-    ``(n, overflow)`` it adds.
+    ``(n, overflow)`` it adds. Callers have already turned a float NaN into
+    NULL where it is a missing value (``_nan_to_null``).
 
-    - A value sketch (FUNNEL_NONE) treats a float NaN as NULL.
+    - A float64 numpy ``column`` holds a value sketch's values with the
+      missing ones dropped (the grouped stream converts each batch once).
     - With ``weights``, rows whose value or weight is NULL are dropped
       first, so the weights stay aligned with the hashed keys, and the
       batch goes through ``update(column, weights=...)``.
@@ -178,8 +187,9 @@ def _ingest(
     cuckoo inserts that FAILED at capacity: dropping it would be a silent
     false negative, so it flows into the partial's overflow column (bloom
     bits can't overflow; estimators never fail)."""
-    if sk.funnel == FUNNEL_NONE:
-        column = _nan_to_null(column)
+    if isinstance(column, np.ndarray):
+        sk.update(column)
+        return len(column), 0
     if weights is not None:
         if column.null_count or weights.null_count:
             keep = pc.and_(column.is_valid(), weights.is_valid())
@@ -201,8 +211,6 @@ def _ingest(
 def _bind_funnel(sk: Sketch, column: pa.Array) -> None:
     """Auto-bind a hashed sketch's funnel to the column's arrow type on first
     batch (string → UTF8 funnel, int → LONG funnel)."""
-    from ..sketches.base import FUNNEL_LONG, FUNNEL_UTF8
-
     if sk.funnel in (FUNNEL_NONE, FUNNEL_PREHASHED):
         # value sketch: nothing to bind; prehashed: the int column is the
         # hash stream, NOT a FUNNEL_LONG key column — rebinding would
@@ -261,6 +269,8 @@ class _Partial:
             part = self.parts[name]
             if self.first:
                 _bind_funnel(part[0], column)
+            if part[0].funnel == FUNNEL_NONE:
+                column = _nan_to_null(column)
             n, overflow = _ingest(
                 part[0],
                 column,
@@ -436,13 +446,16 @@ def collect_sketches_files(
 
 
 # ---------------------------------------------------------------------------
-# Grouped (per-key) sketches of any kind — the shared grouped plan
-# (operators/grouped_kll): JVM projection, one key exchange, a JVM sort of
-# each reduce partition by key, and ONE Python stage that streams the sorted
+# Grouped (per-key) sketches: the sorted stream. ``build_grouped`` (any kind)
+# and the KLL family (operators/grouped_kll) are sorted kinds of
+# ``_arrow_common.grouped_build``: one key exchange, a JVM sort of each
+# reduce partition by key, and ONE Python stage that streams the sorted
 # batches and builds one sketch per key run.
 # ---------------------------------------------------------------------------
 
-_GP_V, _GP_W = "__gp_v", "__gp_w"
+# value sketches whose ``update`` takes float64 values: the stream converts
+# each batch once, not each key segment
+_FLOAT_KINDS = frozenset({"kll", "tdigest", "dd", "req"})
 
 
 def _key_starts(key_cols: list[pa.Array], prev: list[pa.Array] | None) -> np.ndarray:
@@ -469,6 +482,22 @@ def _key_starts(key_cols: list[pa.Array], prev: list[pa.Array] | None) -> np.nda
     return starts
 
 
+def _stream_values(column: pa.Array, floats: bool):
+    """A batch's value column with the NaN rule run once for the batch:
+    ``(values, at)``. For a float value sketch, ``values`` is one float64
+    array of the non-missing values and rows ``lo:hi`` hold
+    ``values[at[lo]:at[hi]]``; otherwise ``values`` is the Arrow column with
+    NaN as NULL (grouped builds treat a NaN as NULL for every kind, hash
+    sketches included) and ``at`` is None."""
+    if not floats:
+        return _nan_to_null(column), None
+    x = column.cast(pa.float64()).to_numpy(zero_copy_only=False)  # NULL → NaN
+    keep = ~np.isnan(x)
+    at = np.zeros(len(x) + 1, dtype=np.int64)
+    np.cumsum(keep, out=at[1:])
+    return x[keep], at
+
+
 def _overflow_error(key: list[pa.Array], overflow: int) -> OverflowError:
     # the grouped output schema has no overflow column, so a group exceeding
     # a cuckoo's capacity must fail LOUDLY — dropping the count would be
@@ -481,56 +510,82 @@ def _overflow_error(key: list[pa.Array], overflow: int) -> OverflowError:
     )
 
 
-def _grouped_batch(keys: list[list[pa.Array]], blobs, ns, names) -> pa.RecordBatch:
+def _grouped_batch(key: list[pa.Array], blobs, ns, names) -> pa.RecordBatch:
     return pa.RecordBatch.from_arrays(
-        [pa.concat_arrays([k[i] for k in keys]) for i in range(len(keys[0]))]
-        + [pa.array(blobs, type=pa.binary()), pa.array(ns, type=pa.int64())],
+        key + [pa.array(blobs, type=pa.binary()), pa.array(ns, type=pa.int64())],
         names=names,
     )
 
 
 def _grouped_build_stage(spec: SketchSpec, n_keys: int, weighted: bool, names):
-    """The one Python stage. Each reduce partition arrives sorted by key, so
-    the stage streams it: the open key's sketch is carried across batch
-    boundaries and emitted when the next key starts. It holds one batch and
-    one sketch at a time, never the whole partition."""
+    """The one per-key loop over sketch objects. Each reduce partition
+    arrives sorted by key, so the stage streams it: the open key's sketch is
+    carried across batch boundaries and emitted when the next key starts. It
+    holds one batch and one sketch at a time, never the whole partition.
+
+    Batches are ``(*keys, value[, weight])``, or ``(key, value, s, c)``
+    after the KLL family's map-side combine. There a row with a partial
+    blob ``s`` has a NULL value, which the ingest skips: the stage folds the
+    blob into the key's sketch and adds its count ``c`` to ``n``. A key's
+    first partial, with nothing ingested before it, becomes the key's
+    sketch unchanged, so a key that lived in one input partition keeps the
+    blob a local build gives."""
+    floats = spec.kind in _FLOAT_KINDS and not weighted
 
     def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         prev = None  # the keys of the last row seen
-        key, sk, n = None, None, 0  # the open key: its keys, sketch, count
-        keys, blobs, ns = [], [], []  # finished keys not yet emitted
+        key, sk, n = None, None, 0  # the open key: its keys (one row), sketch, count
         for batch in batches:
             if not batch.num_rows:
                 continue
             key_cols = batch.columns[:n_keys]
             starts = _key_starts(key_cols, prev)
             prev = [c.slice(batch.num_rows - 1) for c in key_cols]
-            # grouped builds treat a NaN as NULL for every kind, hash
-            # sketches included
-            values = _nan_to_null(batch.column(n_keys))
+            values, at = _stream_values(batch.column(n_keys), floats)
             w = batch.column(n_keys + 1) if weighted else None
-            cuts = np.append(np.union1d(np.flatnonzero(starts), [0]), batch.num_rows)
-            for lo, hi in zip(cuts[:-1], cuts[1:]):
+            partials = []  # rows that carry a partial blob (combined input)
+            if batch.num_columns > n_keys + 1 + weighted:
+                blob_col, count_col = batch.column(n_keys + 1), batch.column(n_keys + 2)
+                valid = blob_col.is_valid().to_numpy(zero_copy_only=False)
+                partials = np.flatnonzero(valid).tolist()
+            heads = np.flatnonzero(starts)
+            cuts = np.append(np.union1d(heads, [0]), batch.num_rows)
+            offs = (cuts if at is None else at[cuts]).tolist()  # value offsets
+            cuts = cuts.tolist()
+            p = 0  # the next partial row
+            blobs, ns = [], []  # the keys this batch closes
+            for lo, hi, a, b in zip(cuts, cuts[1:], offs, offs[1:]):
                 if starts[lo]:
                     if sk is not None:
-                        keys.append(key)
                         blobs.append(sk.to_bytes())
                         ns.append(n)
-                    key, sk, n = [c.slice(lo, 1) for c in key_cols], spec.create(), 0
-                    _bind_funnel(sk, values)
-                seg_n, overflow = _ingest(
-                    sk,
-                    values.slice(lo, hi - lo),
-                    None if w is None else w.slice(lo, hi - lo),
-                )
+                    sk, n = spec.create(), 0
+                    _bind_funnel(sk, batch.column(n_keys))
+                seg_n, overflow = _ingest(sk, values[a:b], None if w is None else w[a:b])
                 if overflow:
-                    raise _overflow_error(key, overflow)
+                    raise _overflow_error(
+                        [c.slice(lo, 1) for c in key_cols] if starts[lo] else key, overflow
+                    )
                 n += seg_n
-            if blobs:
-                yield _grouped_batch(keys, blobs, ns, names)
-                keys, blobs, ns = [], [], []
+                while p < len(partials) and partials[p] < hi:
+                    part = Sketch.from_bytes(blob_col[partials[p]].as_py())
+                    if n:
+                        sk.merge(part)
+                    else:
+                        sk = part
+                    n += count_col[partials[p]].as_py()
+                    p += 1
+            if len(heads):
+                # the closed keys: the one open before this batch, then every
+                # key that starts and ends in it
+                closed = [c.take(heads[:-1]) for c in key_cols]
+                if key is not None:
+                    closed = [pa.concat_arrays([k, c]) for k, c in zip(key, closed)]
+                key = [c.slice(heads[-1], 1) for c in key_cols]
+                if blobs:
+                    yield _grouped_batch(closed, blobs, ns, names)
         if sk is not None:
-            yield _grouped_batch([key], [sk.to_bytes()], [n], names)
+            yield _grouped_batch(key, [sk.to_bytes()], [n], names)
 
     return fn
 
@@ -547,13 +602,14 @@ def build_grouped(
     ``n`` counts the key's non-null values (a key whose values are all null
     gets an empty sketch and ``n`` = 0; NULL is a key of its own).
 
-    The shared grouped plan (``grouped_kll``, ``grouped_cms``,
-    ``grouped_theta``): project ``(*keys, col[, weight])`` in the JVM, one
-    key exchange into ``defaultParallelism`` partitions, a JVM sort of each
-    partition by key (it spills to disk, so a partition of any size fits),
-    then ONE ``mapInArrow`` that streams the sorted batches and builds one
-    sketch per key run. Per-key sketches of the order-insensitive kinds are
-    byte-identical to a local build over the key's rows.
+    A sorted kind of ``_arrow_common.grouped_build``: project ``(*keys,
+    col[, weight])`` in the JVM, one key exchange into
+    ``defaultParallelism`` partitions, a JVM sort of each partition by key
+    (it spills to disk, so a partition of any size fits), then ONE
+    ``mapInArrow`` that streams the sorted batches and builds one sketch per
+    key run (``_grouped_build_stage``). Per-key sketches of the
+    order-insensitive kinds are byte-identical to a local build over the
+    key's rows.
 
     Skew: the policy of ``grouped_hll``'s default — no probe and no map-side
     combine. A hot key's rows stream through one sketch in one reduce task,
@@ -577,24 +633,7 @@ def build_grouped(
             stacklevel=2,
         )
     keys = [key] if isinstance(key, str) else list(key)
-    # internal names cannot collide with a caller's column (e.g. a key "k")
-    aliases = [f"__gp_k{i}" for i in range(len(keys))]
-    projected = [F.col(k).alias(a) for k, a in zip(keys, aliases)] + [F.col(col).alias(_GP_V)]
     weighted = weight_col is not None
-    if weighted:
-        projected.append(F.col(weight_col).cast("long").alias(_GP_W))
-    narrow = df.select(*projected)
-    if weighted:
-        narrow = narrow.filter(F.col(_GP_V).isNotNull() & F.col(_GP_W).isNotNull())
-    out_schema = StructType(
-        [StructField(k, df.schema[k].dataType) for k in keys]
-        + [StructField("sketch", BinaryType()), StructField("n", LongType())]
-    )
-    return (
-        repartition_by_key(narrow, None, aliases)
-        .sortWithinPartitions(*aliases)
-        .mapInArrow(
-            _grouped_build_stage(spec, len(keys), weighted, keys + ["sketch", "n"]),
-            out_schema,
-        )
-    )
+    stage = _grouped_build_stage(spec, len(keys), weighted, keys + ["sketch", "n"])
+    kind = GroupedKind("sketch binary, n bigint", stage, sorted=True)
+    return grouped_build(df, keys, col, kind, weight_col=weight_col)

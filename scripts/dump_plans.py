@@ -82,7 +82,9 @@ def main() -> None:
     g = build_grouped(events, "event_type", "user_id", SketchSpec("hll", {"p": 12}))
     sections.append((
         "Grouped build (one key exchange, one Python stage)",
-        "The JVM projects (key, value); ONE Exchange co-locates each key in "
+        "`build_grouped` is a sorted kind of the one grouped plan "
+        "(`_arrow_common.grouped_build`): the JVM projects (keys, value) "
+        "under `__gp_` aliases; ONE Exchange co-locates each key in "
         "`defaultParallelism` partitions, a Sort orders each partition by "
         "key, and ONE `MapInArrow` streams the sorted batches into one "
         "sketch per key.",
@@ -280,15 +282,26 @@ def main() -> None:
         F.lit("hot").alias("event_type"), (F.col("id") % 97).cast("double").alias("value")
     )
     sections.append((
+        "Grouped KLL — one Python stage (default)",
+        "The KLL family is a sorted kind of the one grouped plan, as "
+        "`build_grouped` is. With no hot key: the JVM drops NULL and NaN "
+        "values and projects (key, double value), ONE Exchange co-locates "
+        "each key, a Sort above it orders each partition by key, and ONE "
+        "`MapInArrow` streams the sorted batches into one sketch per key "
+        "(`build._grouped_build_stage`).",
+        fmt(grouped_kll(events, "event_type", "value", k=64)),
+    ))
+    sections.append((
         "Grouped KLL — two-phase skew armor (planted hot key)",
         "Built from a planted hot key (40,000 rows of one key over 4 input "
         "partitions), so the shared driver's sampled skew probe fires. "
         "Phase 1 (`MapInArrow` directly over the input) pre-builds partial "
         "sketch blobs for per-partition-hot keys and forwards cold rows "
         "raw; the ONE Exchange above it carries the mixed narrow stream "
-        "(8-byte values + KB blobs), never a hot key's raw row set; phase "
-        "2 merges per key. Unskewed inputs keep the single-phase shape "
-        "(no first MapInArrow).",
+        "(8-byte values + KB blobs), never a hot key's raw row set. Above "
+        "it a Sort orders each partition by key, and the one stream stage "
+        "ingests a key's raw rows and merges its partial blobs. Unskewed "
+        "inputs keep the single-phase shape (no first MapInArrow).",
         fmt(grouped_kll(hot, "event_type", "value", k=64)),
     ))
     sections.append((

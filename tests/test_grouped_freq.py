@@ -117,6 +117,74 @@ def test_grouped_kll_null_values_dropped(spark):
     assert row.n == 5
 
 
+@pytest.mark.parametrize("name", ["kll", "tdigest", "dd", "req"])
+def test_grouped_value_sketch_omits_keys_with_no_value(spark, name):
+    """The KLL family drops NULL and NaN values, and a key with nothing
+    left is omitted (``build_grouped`` instead gives it an empty sketch and
+    ``n`` = 0)."""
+    from guava_probably_spark.operators import grouped_dd, grouped_req, grouped_tdigest
+
+    build = {
+        "kll": grouped_kll, "tdigest": grouped_tdigest, "dd": grouped_dd, "req": grouped_req
+    }[name]
+    nan = float("nan")
+    rows = [("a", 1.0), ("a", 2.0), ("nul", None), ("nul", None), ("nan", nan)]
+    rows += [("mix", None), ("mix", nan), ("mix", 3.0)]
+    df = spark.createDataFrame(rows, "g string, x double")
+    got = {r.key: r.n for r in build(df, "g", "x").collect()}
+    assert got == {"a": 2, "mix": 1}
+
+
+def test_grouped_partials_fold_across_batch_boundaries(spark, monkeypatch):
+    """With the combine taken and 500-row Arrow batches, the hot key's raw
+    rows and partial blobs reach its reduce task spread over many batches;
+    the stream carries the key's sketch over every cut and folds each
+    partial in: ``n`` is exact, DD blobs equal the one-stage build's, KLL
+    ranks stay within the bound."""
+    from guava_probably_spark.operators import grouped_dd
+
+    # 8 input partitions of 5,000 rows: "hot" fills the even ones (over
+    # both thresholds, so they ship partials) and 1,000 rows of the odd
+    # ones (raw rows), whose other 4,000 rows are 400 cold keys
+    i = F.col("id") % 5_000
+    hot = ((F.col("id") / 5_000).cast("int") % 2 == 0) | (i < 1_000)
+    df = spark.range(0, 40_000, 1, 8).select(
+        F.when(hot, "hot").otherwise(F.concat(F.lit("c"), (i % 400).cast("string"))).alias("g"),
+        (F.col("id") * 7_919 % 10_007).cast("double").alias("x"),
+    )
+    xs = np.array([i * 7_919 % 10_007 for i in range(40_000)], dtype=float)
+    ids = np.arange(40_000)
+    hot_xs = xs[((ids // 5_000) % 2 == 0) | (ids % 5_000 < 1_000)]
+    assert len(hot_xs) == 24_000
+    prev = spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch")
+    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "500")
+    try:
+        out = {}
+        for flag in (True, False):
+            _probe_says(monkeypatch, flag)
+            for name, build in (("kll", grouped_kll), ("dd", grouped_dd)):
+                frame = build(df, "g", "x")
+                plan = frame._jdf.queryExecution().executedPlan().toString()
+                assert plan.count("MapInArrow") == (2 if flag else 1), plan
+                out[name, flag] = {r.key: (bytes(r.sketch), r.n) for r in frame.collect()}
+    finally:
+        spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", prev)
+    for name in ("kll", "dd"):
+        combined, one_stage = out[name, True], out[name, False]
+        assert len(combined) == 401 and combined["hot"][1] == 24_000
+        assert {k: n for k, (_, n) in combined.items()} == {
+            k: n for k, (_, n) in one_stage.items()
+        }
+    assert out["dd", True] == out["dd", False]
+    for blob, _ in (out["kll", True]["hot"], out["kll", False]["hot"]):
+        sk = Sketch.from_bytes(blob)
+        srt = np.sort(hot_xs)
+        for q in (0.1, 0.5, 0.9):
+            v = float(sk.quantile(q))
+            lo, hi = np.mean(srt < v), np.mean(srt <= v)
+            assert max(0.0, lo - q, q - hi) <= sk.rank_error_bound(), q
+
+
 def test_grouped_tdigest_estimates(spark):
     """grouped_tdigest shares the segment-loop architecture: per-key
     centroids from the library's own TDigestSketch, quantiles within the

@@ -59,7 +59,7 @@ def _plan(df) -> str:
 
 
 def _key_exchange_partitions(plan: str) -> list[int]:
-    return [int(n) for n in re.findall(r"Exchange hashpartitioning\(k#\d+, (\d+)\)", plan)]
+    return [int(n) for n in re.findall(r"Exchange hashpartitioning\(__gp_k0#\d+, (\d+)\)", plan)]
 
 
 @pytest.mark.parametrize("name,build,_match", OPS, ids=IDS)
